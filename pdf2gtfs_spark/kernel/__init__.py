@@ -1,13 +1,13 @@
 """Pure (Spark-free) vectorized extraction kernel.
 
-Runs per turn-batch inside Arrow-batched ``mapInPandas``; every function
-here operates on pandas/numpy frames, never per-row Python over Spark
-rows. Semantics mirror the reference's legacy extraction path, which is
-the columnar blueprint (reference: src/pdf2gtfs/reader.py:349-383,
-datastructures/pdftable/*).
+Runs per turn-batch inside Arrow-batched ``mapInPandas``; a turn stays
+columnar from payload decode to emitted records: parallel numpy arrays
+per turn (chars, then word fields, then per-table cells), never
+per-row Python over Spark rows. DataFrames appear only in the
+``TableResult`` accessors. Semantics mirror the reference's legacy
+extraction path, which is the columnar blueprint (reference:
+src/pdf2gtfs/reader.py:349-383, datastructures/pdftable/*).
 """
 
 from pdf2gtfs_spark.kernel.extract import extract_turn, TurnResult  # noqa: F401
-from pdf2gtfs_spark.kernel.payload import (  # noqa: F401
-    decode_payload, encode_chars, encode_grid,
-)
+from pdf2gtfs_spark.kernel.payload import encode_chars, encode_grid  # noqa: F401

@@ -17,7 +17,6 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pdf2gtfs_spark.kernel.timefmt import (
@@ -91,18 +90,10 @@ def is_legend_text(text: str) -> bool:
     return bool(_LEGEND_RE.match(text))
 
 
-def repeat_value_mask(texts: pd.Series) -> np.ndarray:
-    m = np.zeros(len(texts), dtype=bool)
-    for rx in _REPEAT_VALUE_RES:
-        m |= texts.str.match(rx).to_numpy()
-    return m
-
-
 class TypeMatchers:
     """Vectorized absolute indicators for one config."""
 
     def __init__(self, cfg: ExtractConfig = DEFAULT_CONFIG) -> None:
-        self.cfg = cfg
         # per-text memo for guess_list: the guess row is a pure
         # function of (config, text) and real timetables repeat texts
         # heavily (day headers, annotations, times recur across
@@ -192,8 +183,16 @@ class TypeMatchers:
                 self._guess_memo[t] = hit
         return hit
 
-    def guess(self, texts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-        return self.guess_list(list(texts))
+
+def matcher_key(cfg: ExtractConfig) -> str:
+    """Cache key over the config VALUES a text matcher reads.  Keyed by
+    value, not id(): every Spark task unpickles its own config copy, so
+    an id() key would rebuild the matcher (and its per-text memo) per
+    task and grow the cache without bound in a reused Python worker."""
+    return repr((cfg.time_format, cfg.header_values,
+                 cfg.negative_header_values, cfg.repeat_identifier,
+                 cfg.arrival_identifier, cfg.departure_identifier,
+                 cfg.route_identifier, cfg.annot_identifier))
 
 
 _MATCHERS_CACHE: dict = {}
@@ -204,10 +203,7 @@ def matchers_for(cfg: ExtractConfig) -> TypeMatchers:
     frozenset builds, and — far more importantly — the per-text guess
     memo survive across turns instead of restarting every
     CellStore.from_fields call."""
-    key = repr((cfg.time_format, cfg.header_values,
-                cfg.negative_header_values, cfg.repeat_identifier,
-                cfg.arrival_identifier, cfg.departure_identifier,
-                cfg.route_identifier, cfg.annot_identifier))
+    key = matcher_key(cfg)
     m = _MATCHERS_CACHE.get(key)
     if m is None:
         m = TypeMatchers(cfg)

@@ -1,6 +1,6 @@
 """Per-turn extraction kernel: char boxes -> typed table grids -> rows.
 
-Pure pandas/numpy, no Spark. Reproduces the reference's (legacy)
+Pure numpy, no Spark. Reproduces the reference's (legacy)
 extraction dataflow, which is already column-oriented and therefore the
 natural vectorization blueprint:
 
@@ -15,10 +15,10 @@ natural vectorization blueprint:
 - CSV serialization      reference: pdftable.py:185-234
 - timetable normalize    reference: datastructures/timetable/table.py:56-127
 
-The hot path works on parallel numpy arrays (one bundle per turn, one
-slice per table) — per-turn pandas frame churn was the throughput
-ceiling at ~55 ms/turn (ROADMAP r01 #1); DataFrames appear only at the
-public boundaries (payload decode, TableResult accessors for tests).
+The kernel works on parallel numpy arrays from decode to emit (one
+bundle per turn, one slice per table) — per-turn pandas frame churn was
+the throughput ceiling at ~55 ms/turn (ROADMAP r01 #1); DataFrames
+appear only in the TableResult accessors.
 """
 
 from __future__ import annotations
@@ -31,12 +31,11 @@ import numpy as np
 import pandas as pd
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
+from pdf2gtfs_spark.kernel.celltypes import matcher_key
 from pdf2gtfs_spark.kernel.payload import (
-    MalformedPayload, PageBox, decode_payload,
+    MalformedPayload, PageBox, decode_payload_batch,
 )
-from pdf2gtfs_spark.kernel.timefmt import (
-    _FIELD_SPECS, match_times, time_format_to_regex,
-)
+from pdf2gtfs_spark.kernel.timefmt import is_time_str, time_format_to_regex
 
 # Field type ladder; order = detection precedence in the reference
 # (pdftable/field.py:32-55). STOP is assigned later (needs col+row type).
@@ -73,49 +72,30 @@ STOP_COLUMNS = ["table_id", "stop_pos", "row_idx", "stop_name",
                 "stop_annot", "is_connection"]
 
 
-def _is_time_str(text: str, regex, order) -> bool:
-    """Scalar twin of timefmt.match_times (same bounds checks)."""
-    m = regex.match(text)
-    if not m:
-        return False
-    for spec, val in zip(order, m.groups()):
-        lo, hi = _FIELD_SPECS[spec][1], _FIELD_SPECS[spec][2]
-        if not lo <= int(val) <= hi:
-            return False
-    return True
-
-
 class TableResult:
     """One extracted table of a turn.
 
     Holds row-record lists (what the Arrow kernel ships); the DataFrame
-    accessors exist for tests and ad-hoc use.
+    accessors are built lazily from them for tests and ad-hoc use.
     """
 
     def __init__(self, csv_text: str, row_types: list[str],
-                 col_types: list[str],
-                 cells_records: Optional[list[dict]] = None,
-                 entries_records: Optional[list[dict]] = None,
-                 stops_records: Optional[list[dict]] = None,
-                 cells: Optional[pd.DataFrame] = None,
-                 entries: Optional[pd.DataFrame] = None,
-                 stops: Optional[pd.DataFrame] = None) -> None:
+                 col_types: list[str], cells_records: list[dict],
+                 entries_records: list[dict],
+                 stops_records: list[dict]) -> None:
         self.csv_text = csv_text
         self.row_types = row_types
         self.col_types = col_types
         self._cells_records = cells_records
         self._entries_records = entries_records
         self._stops_records = stops_records
-        self._cells = cells
-        self._entries = entries
-        self._stops = stops
+        self._frames: dict[str, pd.DataFrame] = {}
 
     def _frame(self, attr: str, cols: list[str]) -> pd.DataFrame:
-        cached = getattr(self, f"_{attr}")
+        cached = self._frames.get(attr)
         if cached is None:
-            recs = getattr(self, f"_{attr}_records") or []
-            cached = pd.DataFrame(recs, columns=cols)
-            setattr(self, f"_{attr}", cached)
+            cached = self._frames[attr] = pd.DataFrame(
+                getattr(self, f"_{attr}_records"), columns=cols)
         return cached
 
     @property
@@ -133,8 +113,6 @@ class TableResult:
     def records(self, attr: str, cols: list[str],
                 allow_extra: tuple = ()) -> list[dict]:
         recs = getattr(self, f"_{attr}_records")
-        if recs is None:
-            return getattr(self, f"_{attr}")[cols].to_dict("records")
         # fast path: the kernel builds each record list with one dict
         # comprehension, so when the first record's keys already equal
         # ``cols`` every record does and the per-record copy (~27% of
@@ -175,7 +153,6 @@ class _Matchers:
     """Precompiled field-content predicates for a config."""
 
     def __init__(self, cfg: ExtractConfig) -> None:
-        self.cfg = cfg
         comp = {}
         for name, rx in [
                 ("header", _contains_regex(tuple(cfg.header_values.keys()))),
@@ -223,7 +200,7 @@ class _Matchers:
                 r = F_HEADER
             elif c["repeat"] and c["repeat"].search(padded):
                 r = F_REPEAT
-            elif _is_time_str(t, self.time_re, self.time_order):
+            elif is_time_str(t, self.time_re, self.time_order):
                 r = F_DATA
             elif c["stop_annot"] and c["stop_annot"].search(padded):
                 r = F_STOP_ANNOT
@@ -238,10 +215,6 @@ class _Matchers:
             out.append(r)
         return out
 
-    def field_types(self, texts: pd.Series) -> pd.Series:
-        return pd.Series(self.field_types_list(texts.tolist()),
-                         index=texts.index, dtype=object)
-
     def repeat_intervals(self, joined_text: str) -> list[str]:
         """All repeat intervals in a column's newline-joined text
         (pdftable/container.py:315-323)."""
@@ -251,14 +224,17 @@ class _Matchers:
         return out
 
 
-_MATCHER_CACHE: dict[int, _Matchers] = {}
+_MATCHER_CACHE: dict[str, _Matchers] = {}
 
 
 def _matchers(cfg: ExtractConfig) -> _Matchers:
-    key = id(cfg)
-    if key not in _MATCHER_CACHE:
-        _MATCHER_CACHE[key] = _Matchers(cfg)
-    return _MATCHER_CACHE[key]
+    """One _Matchers (and per-text memo) per config value; see
+    celltypes.matcher_key."""
+    key = matcher_key(cfg)
+    m = _MATCHER_CACHE.get(key)
+    if m is None:
+        m = _MATCHER_CACHE[key] = _Matchers(cfg)
+    return m
 
 
 # ---------------------------------------------------------------------------
@@ -276,16 +252,6 @@ def cleanup_char_arrays(arrs: dict, page: PageBox) -> dict:
             & (y0 >= page.y0) & (y1 <= page.y1))
     return {"x0": x0[keep], "y0": y0[keep], "x1": x1[keep],
             "y1": y1[keep], "text": arrs["text"][keep]}
-
-
-def cleanup_chars(chars: pd.DataFrame, page: PageBox) -> pd.DataFrame:
-    """DataFrame boundary over cleanup_char_arrays (tests)."""
-    if chars.empty:
-        return chars
-    arrs = {c: chars[c].to_numpy() for c in
-            ("x0", "y0", "x1", "y1", "text")}
-    return pd.DataFrame(cleanup_char_arrays(arrs, page),
-                        columns=["x0", "y0", "x1", "y1", "text"])
 
 
 def _anchor_cluster(sorted_vals: np.ndarray, threshold: float) -> np.ndarray:
@@ -326,15 +292,8 @@ class _Fields:
                        self.x1[idx], self.y1[idx], self.line_id[idx],
                        self.ftype[idx] if self.ftype is not None else None)
 
-    def to_frame(self) -> pd.DataFrame:
-        return pd.DataFrame({
-            "text": self.text, "x0": self.x0, "y0": self.y0,
-            "x1": self.x1, "y1": self.y1, "line_id": self.line_id,
-            **({"ftype": self.ftype} if self.ftype is not None else {})})
 
-
-def chars_to_field_arrays(chars: pd.DataFrame,
-                          cfg: ExtractConfig) -> _Fields:
+def chars_to_field_arrays(chars: dict, cfg: ExtractConfig) -> _Fields:
     """chars -> field arrays (W1 line clustering + W2 field split).
 
     Line clustering (reader.py:369-383): chars sorted by (y0, x0); a new
@@ -348,16 +307,10 @@ def chars_to_field_arrays(chars: pd.DataFrame,
     the whole line prefix equals the within-field running max at every
     comparison point, so a per-line cummax works.
     """
-    empty = _Fields(*[np.array([], dtype=object)]
-                    + [np.array([], dtype=float)] * 4
-                    + [np.array([], dtype=np.int64), None])
-    if isinstance(chars, pd.DataFrame):
-        if chars.empty:
-            return empty
-        chars = {c: chars[c].to_numpy() for c in
-                 ("x0", "y0", "x1", "y1", "text")}
     if len(chars["x0"]) == 0:
-        return empty
+        return _Fields(*[np.array([], dtype=object)]
+                       + [np.array([], dtype=float)] * 4
+                       + [np.array([], dtype=np.int64), None])
     cx0 = np.asarray(chars["x0"], dtype=float)
     cy0 = np.asarray(chars["y0"], dtype=float)
     cx1 = np.asarray(chars["x1"], dtype=float)
@@ -419,13 +372,6 @@ def chars_to_field_arrays(chars: pd.DataFrame,
     return f.take(keep) if not keep.all() else f
 
 
-def chars_to_fields(chars: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    """DataFrame boundary for external callers (tests, new path)."""
-    f = chars_to_field_arrays(chars, cfg)
-    df = f.to_frame()
-    return df[["line_id", "x0", "y0", "x1", "y1", "text"]]
-
-
 # ---------------------------------------------------------------------------
 # lines -> tables
 # ---------------------------------------------------------------------------
@@ -441,14 +387,6 @@ def _line_bboxes(f: _Fields) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return (f.line_id[starts],
             np.minimum.reduceat(f.y0, starts),
             np.maximum.reduceat(f.y1, starts))
-
-
-def split_rows_into_tables(rows: pd.DataFrame,
-                           cfg: ExtractConfig) -> list[np.ndarray]:
-    """DataFrame boundary kept for tests; see _split_lines_into_tables."""
-    return _split_lines_into_tables(
-        rows["line_id"].to_numpy(), rows["y0"].to_numpy(dtype=float),
-        rows["y1"].to_numpy(dtype=float), cfg)
 
 
 def _split_lines_into_tables(line_ids: np.ndarray, y0: np.ndarray,
@@ -873,6 +811,37 @@ def detect_connections(stop_names: list[str],
     return is_conn
 
 
+def put_stop_value(slots: list, names, annots, stop: Optional[int],
+                   row: int, value: str) -> None:
+    """``entry.values[stop] = value`` on the reference's Stop-keyed dict
+    (entries.py:26-55, stops.py:16-21), simulated as a list of
+    ``[key, stop, row, value]`` slots in insertion order.
+
+    A Stop hashes its (name, annotation) AT INSERT TIME, but a later
+    StopAnnot cell can mutate the annotation without rehashing, so the
+    dict probe is mirrored literally: a slot matches when its STORED
+    key equals the new key and its stop compares equal — the same stop,
+    or an equal (name, annotation) PAIR in the current state (the
+    reference ``__eq__`` compares the fields separately, so 'a b'/'c'
+    and 'a'/'b c' stay distinct).  A match overwrites the slot's value
+    and keeps its first row id; otherwise a slot is appended.  All
+    stop-less values (``stop=None``) share the single None slot.
+
+    ``names``/``annots`` give each stop position's CURRENT name and
+    annotation."""
+    key = None if stop is None else f"{names[stop]} {annots[stop]}"
+    for slot in slots:
+        other = slot[1]
+        if slot[0] == key and (
+                other == stop
+                or (other is not None and stop is not None
+                    and names[other] == names[stop]
+                    and annots[other] == annots[stop])):
+            slot[3] = value
+            return
+    slots.append([key, stop, row, value])
+
+
 def _header_texts_for_columns(header: _Fields,
                               line_to_row: dict[int, int],
                               col_x1s: np.ndarray) -> list[str]:
@@ -1019,21 +988,12 @@ def _normalize_timetable(table_id: int, a: _TableAnalysis,
     if not meta:
         return [], stops_records
 
-    # reference quirk (entries.py:26-55, stops.py:16-21): entry.values
-    # is a dict keyed by Stop objects whose __eq__/__hash__ is
-    # (name, annotation) — evaluated AT INSERT TIME.  Duplicate-named
-    # stops collapse per entry (first-inserted key's row id retained,
-    # last value wins) and stop-less rows share the single None key.
-    # BUT a STOP_ANNOTATION column processed after a value column
-    # mutates the Stop's annotation without rehashing the dict, so two
-    # Stops that END UP equal stay distinct if their keys differed when
-    # inserted (sweep v4 seeds 65052/64691).  Mirror: walk the cells in
-    # column order (the reference's process_raw_column order,
-    # timetable/table.py:108-127), evolve each stop's annotation as
-    # STOP_ANNOTATION cells are reached, and simulate the dict slots —
-    # a new key matches a slot iff the slot's STORED key string equals
-    # it and the slot's stop still agrees (identity or current-state
-    # equality), else a fresh slot is appended.
+    # entry.values is the reference's Stop-keyed dict (put_stop_value):
+    # walk the cells in column order (the reference's process_raw_column
+    # order, timetable/table.py:108-127) and evolve each stop's
+    # annotation as STOP_ANNOTATION cells are reached, so a later
+    # annotation leaves earlier-inserted keys stale (sweep v4 seeds
+    # 65052/64691).
     per_entry: dict[int, tuple[dict, list]] = {}
     visible_cache: dict[int, dict[int, int]] = {}
 
@@ -1059,26 +1019,9 @@ def _normalize_timetable(table_id: int, a: _TableAnalysis,
         mrow = meta.get(cid)
         if mrow is None:
             continue
-        p = _visible(cid).get(r)
-        key = (f"{stop_names[p]} {walk_annot[p]}"
-               if p is not None else None)
         _, slots = per_entry.setdefault(mrow["entry_id"], (mrow, []))
-        for slot in slots:
-            # dict probe: stored hash matches the new key, then the
-            # stored Stop compares equal — same object, or equal
-            # (name, annotation) PAIR in its CURRENT state (the
-            # reference __eq__ compares the fields separately,
-            # stops.py:17-18; comparing the hash-concat string
-            # wrongly collapsed 'a b'/'c' with 'a'/'b c' — ADVICE r05)
-            if slot[0] == key and (
-                    slot[1] == p
-                    or (slot[1] is not None and p is not None
-                        and stop_names[slot[1]] == stop_names[p]
-                        and walk_annot[slot[1]] == walk_annot[p])):
-                slot[3] = texts_l[i]
-                break
-        else:
-            slots.append([key, p, r, texts_l[i]])
+        put_stop_value(slots, stop_names, walk_annot, _visible(cid).get(r),
+                       r, texts_l[i])
     entries_records = []
     for e_id in sorted(per_entry):
         mrow, slots = per_entry[e_id]
@@ -1190,13 +1133,8 @@ def extract_turn(payload: str,
     ``decode_payload_batch`` — either a (PageBox, arrays) pair or a
     MalformedPayload instance; when given, ``payload`` is not re-read.
     """
-    from pdf2gtfs_spark.kernel.payload import decode_payload_arrays
-
     if decoded is None:
-        try:
-            decoded = decode_payload_arrays(payload)
-        except MalformedPayload:
-            return TurnResult(malformed=True)
+        decoded = decode_payload_batch([payload])[0]
     if isinstance(decoded, MalformedPayload):
         return TurnResult(malformed=True)
     page, chars = decoded

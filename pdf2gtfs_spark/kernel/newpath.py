@@ -23,7 +23,6 @@ import math
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pdf2gtfs_spark.kernel import celltypes as ct
@@ -34,9 +33,8 @@ from pdf2gtfs_spark.kernel.celltypes import (
     is_repeat_value_text,
 )
 from pdf2gtfs_spark.kernel.extract import (
-    ENTRY_COLUMNS, STOP_COLUMNS, TableResult, bbox_is_indented,
-    detect_connections, get_stop_base_name, interval_str_to_int_list,
-    text_starts_with_delimiter,
+    TableResult, bbox_is_indented, detect_connections, get_stop_base_name,
+    interval_str_to_int_list, put_stop_value, text_starts_with_delimiter,
 )
 from pdf2gtfs_spark.kernel.table_grid import (
     E, Grid, H, N, S, V, W, _is_olap,
@@ -51,8 +49,7 @@ def _letter_count(text: str) -> int:
     return sum(ch.isalpha() or ch == " " for ch in text)
 
 
-# lowered header/negative-header sets per config object (keyed by id;
-# configs are frozen dataclasses that live for the whole kernel batch)
+# lowered header/negative-header sets per header-config value
 _HEADER_CACHE: dict = {}
 
 
@@ -822,8 +819,9 @@ class TypedTable:
         stop_rows = [i for i, _ in stops]          # series indices
         stop_texts = [s.text[g.cells[r][c]] for _, (r, c) in stops]
         is_conn = detect_connections(stop_texts, cfg)
+        stop_names = [t.strip() for t in stop_texts]
+        stop_annots = [""] * len(stops)     # evolves during the walk
         pos_of_series = {k: p for p, k in enumerate(stop_rows)}
-        annots_of_stop: dict[int, str] = {}
 
         # entries are sized from the first row / left column —
         # ENUMERATED rows only (table.py:694); the stop-axis walk also
@@ -845,43 +843,12 @@ class TypedTable:
                 text = s.text[g.cells[r][c]]
                 ent = entries[e_id]
                 if t == TIME:
-                    # reference quirk (entries.py:26-55): entry.values
-                    # is keyed by Stop objects whose __eq__/__hash__ is
-                    # (name, annotation) evaluated AT INSERT TIME —
-                    # duplicate-named stops COLLAPSE (last value wins,
-                    # first key's row id retained), non-stop rows share
-                    # the None key, and a StopAnnot cell mutating the
-                    # annotation AFTER a value insert leaves the dict
-                    # slot's stored hash stale, so equal-looking keys
-                    # can coexist (merge-split sweep seed 60268).
-                    # Mirrored as a literal dict-slot simulation, like
-                    # the legacy path's (extract.py).
-                    p = pos_of_series.get(k)
-                    key = (f"{stop_texts[p].strip()} "
-                           f"{annots_of_stop.get(k, '')}"
-                           if p is not None else None)
-                    for slot in ent["values"]:
-                        sk = slot[1]
-                        sp = pos_of_series.get(sk)
-                        # dict probe (ADVICE r05): stored hash == new
-                        # key, then the stored Stop compares equal —
-                        # identity (sp == p; None == None collapses
-                        # all stop-less rows onto the single None
-                        # slot, entries.py get_from_id -> None) or
-                        # current-state __eq__, which compares the
-                        # (name, annotation) PAIR, not the
-                        # hash-concat string (stops.py:17-21)
-                        if slot[0] == key and (
-                                sp == p
-                                or (sp is not None and p is not None
-                                    and stop_texts[sp].strip()
-                                        == stop_texts[p].strip()
-                                    and annots_of_stop.get(sk, "")
-                                        == annots_of_stop.get(k, ""))):
-                            slot[2] = text
-                            break
-                    else:
-                        ent["values"].append([key, k, text])
+                    # entry.values is the reference's Stop-keyed dict
+                    # (put_stop_value); a StopAnnot cell reached after
+                    # a value insert leaves that slot's key stale
+                    # (merge-split sweep seed 60268)
+                    put_stop_value(ent["values"], stop_names, stop_annots,
+                                   pos_of_series.get(k), k, text)
                     valid.add(e_id)
                 elif t == ENTRY_ANNOT_VALUE:
                     ent["annotations"] = {a.strip() for a in text.split()}
@@ -893,7 +860,7 @@ class TypedTable:
                     ent["route_name"] = text
                 elif t == STOP_ANNOT:
                     if k in pos_of_series:
-                        annots_of_stop[k] = text
+                        stop_annots[pos_of_series[k]] = text
                 elif t == REPEAT_VALUE:
                     if not ent["repeat_texts"]:
                         ent["repeat_texts"] = [text]
@@ -911,8 +878,6 @@ class TypedTable:
                         ent["route_name"] = ""
                     valid.add(e_id)
 
-        stop_names = [t.strip() for t in stop_texts]
-        stop_annots = [annots_of_stop.get(k, "") for k in stop_rows]
         stops_records = [{
             "table_id": table_id, "stop_pos": p, "row_idx": r,
             "stop_name": nm, "stop_annot": an, "is_connection": ic,
@@ -949,10 +914,9 @@ class TypedTable:
                 "annotations": sorted(ent["annotations"]),
                 "days": ent["days"], "repeat_intervals": repeat,
             }
-            values = ([(sk, tx) for _, sk, tx in ent["values"]]
-                      or [(None, None)])
-            for k, text in values:
-                p = pos_of_series.get(k) if k is not None else None
+            values = ([slot[1:] for slot in ent["values"]]
+                      or [(None, None, None)])
+            for p, k, text in values:
                 rows.append({
                     **base,
                     "stop_pos": p,
@@ -1159,27 +1123,18 @@ def merge_tables(tables: list[TypedTable]) -> list[TypedTable]:
 def tables_from_fields(fields,
                        cfg: ExtractConfig = DEFAULT_CONFIG
                        ) -> list[TypedTable]:
-    """create_tables_from_page for one turn's word fields.
-
-    Accepts either the word-field DataFrame (external callers/tests)
-    or the kernel's columnar ``_Fields`` arrays directly — the hot path
-    skips the pandas round-trip entirely."""
+    """create_tables_from_page for one turn's word fields (the kernel's
+    columnar ``_Fields`` arrays)."""
     from pdf2gtfs_spark.kernel.table_grid import CellStore
 
-    if isinstance(fields, pd.DataFrame):
-        fields = fields[~fields["text"].str.startswith("(cid")]
-        if fields.empty:
-            return []
-        store = CellStore.from_fields(fields, cfg)
-    else:
-        keep = np.fromiter(
-            (not t.startswith("(cid") for t in fields.text),
-            count=len(fields.text), dtype=bool)
-        if not keep.all():
-            fields = fields.take(keep)
-        if len(fields.text) == 0:
-            return []
-        store = CellStore.from_arrays(fields, cfg)
+    keep = np.fromiter(
+        (not t.startswith("(cid") for t in fields.text),
+        count=len(fields.text), dtype=bool)
+    if not keep.all():
+        fields = fields.take(keep)
+    if len(fields.text) == 0:
+        return []
+    store = CellStore.from_fields(fields, cfg)
     # vectorized strict-type pass for the time/other split (the
     # fresh store has no inferred types yet, so strict == guess)
     Pm = np.stack(store.P)

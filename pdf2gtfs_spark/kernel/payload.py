@@ -1,4 +1,4 @@
-"""Turn-payload codec: char-box stream <-> pandas char frame.
+"""Turn-payload codec: char-box stream <-> per-turn numpy char arrays.
 
 Wire format (one turn's ``text`` column, see FIXTURES.md §2):
 
@@ -111,20 +111,6 @@ def decode_payload_arrays(payload: str) -> tuple[PageBox, dict]:
     }
 
 
-def decode_payload(payload: str) -> tuple[PageBox, pd.DataFrame]:
-    """DataFrame boundary over decode_payload_arrays."""
-    page, arrs = decode_payload_arrays(payload)
-    return page, pd.DataFrame(arrs, columns=CHAR_COLUMNS)
-
-
-def _decode_one_guarded(payload: str):
-    """Per-payload decode that returns (not raises) MalformedPayload."""
-    try:
-        return decode_payload_arrays(payload)
-    except MalformedPayload as e:
-        return e
-
-
 def decode_payload_batch(payloads: Sequence[str]) -> list:
     """Decode many payloads with ONE vectorized CSV parse.
 
@@ -142,6 +128,7 @@ def decode_payload_batch(payloads: Sequence[str]) -> list:
     """
     out: list = [None] * len(payloads)
     pages: list = [None] * len(payloads)
+    exact: list[int] = []       # payloads left to decode_payload_arrays
     bodies: list[list[str]] = []
     counts: list[int] = []
     idxs: list[int] = []
@@ -172,13 +159,11 @@ def decode_payload_batch(payloads: Sequence[str]) -> list:
             n = len(lines)
             body = "\n".join(lines)
         if body.count("\t") != 4 * n:
-            out[i] = _decode_one_guarded(payload)   # ragged -> exact path
+            exact.append(i)         # ragged -> exact per-turn parser
             continue
         bodies.append(body)
         counts.append(n)
         idxs.append(i)
-    if not idxs:
-        return out
 
     import pyarrow as pa
     import pyarrow.csv as pacsv
@@ -231,13 +216,17 @@ def decode_payload_batch(payloads: Sequence[str]) -> list:
     except (pa.ArrowInvalid, ValueError):
         # one bad body poisons the batch parse: redo each pending
         # payload through the exact per-turn parser
-        for i in idxs:
-            out[i] = _decode_one_guarded(payloads[i])
+        exact += idxs
+    for i in exact:
+        try:
+            out[i] = decode_payload_arrays(payloads[i])
+        except MalformedPayload as e:
+            out[i] = e
     return out
 
 
 def encode_chars(page: PageBox, chars: pd.DataFrame) -> str:
-    """Inverse of decode_payload."""
+    """Inverse of decode_payload_arrays."""
     buf = io.StringIO()
     buf.write(f"PAGE\t{page.x0}\t{page.y0}\t{page.x1}\t{page.y1}\n")
     chars[CHAR_COLUMNS].to_csv(

@@ -30,7 +30,6 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pdf2gtfs_spark.kernel import celltypes as ct
@@ -105,44 +104,21 @@ class CellStore:
         return arrs
 
     @staticmethod
-    def from_fields(fields: pd.DataFrame,
-                    cfg: ExtractConfig = DEFAULT_CONFIG) -> "CellStore":
-        """Build the store from the word-level field frame and guess all
-        types in one vectorized pass (celltype.py:48-81)."""
-        s = CellStore(cfg=cfg, matchers=ct.matchers_for(cfg))
-        # plain-python strip/float loops: the frames here are tens to
-        # hundreds of rows, where the pandas str-accessor / astype
-        # machinery costs more than the work itself
-        s.text = [str(t).strip() for t in fields["text"].tolist()]
-        s.x0 = [float(v) for v in fields["x0"].tolist()]
-        s.y0 = [float(v) for v in fields["y0"].tolist()]
-        s.x1 = [float(v) for v in fields["x1"].tolist()]
-        s.y1 = [float(v) for v in fields["y1"].tolist()]
-        texts = s.text
-        # payloads carry no font: cell height is the fontsize proxy, so
-        # equal-height text compares equal (rel_indicator_time_annot)
-        s.fontsize = [round(b - a, 2) for a, b in zip(s.y0, s.y1)]
-        s.is_empty = [False] * len(s.text)
-        P, fb = s.matchers.guess(texts)
-        s.P = [P[i] for i in range(len(s.text))]
-        s.fallback = fb.tolist()
-        s.inferred = [None] * len(s.text)
-        return s
-
-    @staticmethod
-    def from_arrays(fields, cfg: ExtractConfig = DEFAULT_CONFIG
+    def from_fields(fields, cfg: ExtractConfig = DEFAULT_CONFIG
                     ) -> "CellStore":
-        """from_fields for the kernel's columnar ``_Fields`` arrays —
-        identical semantics, no pandas frame in between."""
+        """Build the store from the kernel's columnar word ``_Fields``
+        and guess all types in one vectorized pass (celltype.py:48-81)."""
         s = CellStore(cfg=cfg, matchers=ct.matchers_for(cfg))
         s.text = [str(t).strip() for t in fields.text.tolist()]
         s.x0 = fields.x0.tolist()
         s.y0 = fields.y0.tolist()
         s.x1 = fields.x1.tolist()
         s.y1 = fields.y1.tolist()
+        # payloads carry no font: cell height is the fontsize proxy, so
+        # equal-height text compares equal (rel_indicator_time_annot)
         s.fontsize = [round(b - a, 2) for a, b in zip(s.y0, s.y1)]
         s.is_empty = [False] * len(s.text)
-        P, fb = s.matchers.guess(s.text)
+        P, fb = s.matchers.guess_list(s.text)
         s.P = [P[i] for i in range(len(s.text))]
         s.fallback = fb.tolist()
         s.inferred = [None] * len(s.text)

@@ -7,8 +7,8 @@ GTFS times may exceed 24 hours (service-day semantics), so times are
   "%H.%M", src/pdf2gtfs/config.template.yaml:31) into an anchored regex
   whose groups are the numeric components, mirroring what
   ``datetime.strptime`` accepts (1-2 digits per field, bounds checked).
-- ``match_times``: vectorized predicate + parse over a pandas Series
-  (reference predicate: datastructures/pdftable/field.py:74-79).
+- ``is_time_str``: the time predicate over one string, bounds checked
+  like strptime (reference: datastructures/pdftable/field.py:74-79).
 - ``GtfsTime`` helpers: int-second arithmetic replacing the reference's
   ``Time`` dataclass (datastructures/gtfs_output/stop_times.py:24-130).
 """
@@ -17,9 +17,6 @@ from __future__ import annotations
 
 import re
 from typing import Tuple
-
-import numpy as np
-import pandas as pd
 
 _FIELD_SPECS = {
     "H": (r"(\d{1,2})", 0, 23),
@@ -52,7 +49,8 @@ def time_format_to_regex(fmt: str) -> Tuple[re.Pattern, list[str]]:
 
 
 def is_time_str(text: str, regex, order) -> bool:
-    """Scalar twin of match_times (same bounds checks)."""
+    """True iff ``text`` fully matches the compiled time format and every
+    numeric field is within its strptime bounds."""
     m = regex.match(text)
     if not m:
         return False
@@ -61,25 +59,6 @@ def is_time_str(text: str, regex, order) -> bool:
         if not lo <= int(val) <= hi:
             return False
     return True
-
-
-def match_times(texts: pd.Series, fmt: str) -> Tuple[pd.Series, pd.Series]:
-    """Return (is_time: bool Series, seconds: float Series with NaN).
-
-    ``seconds`` is seconds since service-day start for matching strings.
-    """
-    regex, order = time_format_to_regex(fmt)
-    extracted = texts.str.extract(regex)
-    seconds = pd.Series(np.zeros(len(texts)), index=texts.index)
-    valid = extracted.notna().all(axis=1)
-    mult = {"H": 3600, "M": 60, "S": 1}
-    for col_idx, spec in enumerate(order):
-        vals = pd.to_numeric(extracted[col_idx], errors="coerce")
-        lo, hi = _FIELD_SPECS[spec][1], _FIELD_SPECS[spec][2]
-        valid &= vals.between(lo, hi)
-        seconds = seconds + vals.fillna(0) * mult[spec]
-    seconds[~valid] = np.nan
-    return valid.fillna(False), seconds
 
 
 def seconds_to_gtfs(seconds: int) -> str:

@@ -13,11 +13,14 @@ import pytest
 from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pdf2gtfs_spark.kernel.extract import (
     R_DATA, detect_connections, extract_turn, fix_split_stop_names,
-    get_stop_base_name, interval_str_to_int_list, repeat_intervals_to_list,
+    get_stop_base_name, interval_str_to_int_list, put_stop_value,
+    repeat_intervals_to_list,
 )
-from pdf2gtfs_spark.kernel.payload import PageBox, decode_payload, encode_grid
+from pdf2gtfs_spark.kernel.payload import (
+    PageBox, decode_payload_arrays, encode_grid,
+)
 from pdf2gtfs_spark.kernel.timefmt import (
-    gtfs_to_seconds, match_times, seconds_to_gtfs,
+    gtfs_to_seconds, is_time_str, seconds_to_gtfs, time_format_to_regex,
 )
 from pdf2gtfs_spark.functions.normalize import (
     normalize_series, replace_abbreviations,
@@ -28,15 +31,13 @@ from pdf2gtfs_spark.sources.transcripts import (
 
 
 class TestTimeFormat:
-    def test_match_times_default_format(self):
-        s = pd.Series(["13.37", "0.17", "23.59", "24.00", "5.7", "x", "5",
-                       "5.61", "alle", "13:37", ""])
-        is_time, secs = match_times(s, "%H.%M")
-        assert list(is_time) == [True, True, True, False, True, False,
-                                 False, False, False, False, False]
-        assert secs[0] == 13 * 3600 + 37 * 60
-        assert secs[1] == 17 * 60
-        assert secs[4] == 5 * 3600 + 7 * 60
+    def test_is_time_str_default_format(self):
+        texts = ["13.37", "0.17", "23.59", "24.00", "5.7", "x", "5",
+                 "5.61", "alle", "13:37", ""]
+        regex, order = time_format_to_regex("%H.%M")
+        assert [is_time_str(t, regex, order) for t in texts] == [
+            True, True, True, False, True, False,
+            False, False, False, False, False]
 
     def test_gtfs_roundtrip_over_24h(self):
         # GTFS service-day times exceed 24h (stop_times.py:24-130)
@@ -152,6 +153,93 @@ class TestConnections:
         assert detect_connections(names, DEFAULT_CONFIG) == [False] * 4
 
 
+class TestStopValueSlots:
+    """put_stop_value, the one simulation of the reference's Stop-keyed
+    ``entry.values`` dict (entries.py:26-55, stops.py:16-21) that both
+    engines' timetable normalization calls.  Slots are
+    [stored key, stop, first row id, value]."""
+
+    def test_identity_match_overwrites_value(self):
+        slots = []
+        put_stop_value(slots, ["A"], [""], 0, 3, "5.01")
+        put_stop_value(slots, ["A"], [""], 0, 3, "5.02")
+        assert slots == [["A ", 0, 3, "5.02"]]
+
+    def test_pair_equality_not_concatenated_string(self):
+        # both stored keys read 'a b c'; the (name, annotation) pairs
+        # differ, so the reference __eq__ keeps two dict entries
+        names, annots = ["a b", "a"], ["c", "b c"]
+        slots = []
+        put_stop_value(slots, names, annots, 0, 1, "x")
+        put_stop_value(slots, names, annots, 1, 2, "y")
+        assert slots == [["a b c", 0, 1, "x"], ["a b c", 1, 2, "y"]]
+
+    def test_stale_stored_key_keeps_slots_distinct(self):
+        names, annots = ["A", "A"], ["", "an"]
+        slots = []
+        put_stop_value(slots, names, annots, 0, 1, "x")
+        put_stop_value(slots, names, annots, 1, 2, "y")
+        annots[0] = "an"        # a later StopAnnot cell; no rehash
+        # stop 0 now equals stop 1, but its slot keeps the stale key
+        put_stop_value(slots, names, annots, 1, 2, "z")
+        assert slots == [["A ", 0, 1, "x"], ["A an", 1, 2, "z"]]
+        # stop 0 now hashes like stop 1 and compares equal to it
+        put_stop_value(slots, names, annots, 0, 1, "w")
+        assert slots == [["A ", 0, 1, "x"], ["A an", 1, 2, "w"]]
+
+    def test_stale_key_blocks_identity_match(self):
+        annots = [""]
+        slots = []
+        put_stop_value(slots, ["A"], annots, 0, 1, "x")
+        annots[0] = "ab"
+        put_stop_value(slots, ["A"], annots, 0, 1, "y")
+        assert slots == [["A ", 0, 1, "x"], ["A ab", 0, 1, "y"]]
+
+    def test_stopless_values_share_the_none_slot(self):
+        slots = []
+        put_stop_value(slots, ["A"], [""], None, 3, "x")
+        put_stop_value(slots, ["A"], [""], 0, 4, "y")
+        put_stop_value(slots, ["A"], [""], None, 7, "z")
+        assert slots == [[None, None, 3, "z"], ["A ", 0, 4, "y"]]
+
+    def test_equal_stops_collapse_last_value_first_row(self):
+        names, annots = ["A", "B", "A"], ["an", "", "an"]
+        slots = []
+        put_stop_value(slots, names, annots, 0, 4, "x")
+        put_stop_value(slots, names, annots, 1, 6, "y")
+        put_stop_value(slots, names, annots, 2, 9, "z")
+        assert slots == [["A an", 0, 4, "z"], ["B ", 1, 6, "y"]]
+
+
+class TestMatcherCache:
+    """Matchers are cached per config VALUE: every Spark task unpickles
+    its own config copy, which must reuse the cached matcher and memo."""
+
+    def test_pickled_config_copy_reuses_legacy_matcher(self):
+        import pickle
+
+        from pdf2gtfs_spark.kernel import extract
+
+        m = extract._matchers(DEFAULT_CONFIG)
+        n = len(extract._MATCHER_CACHE)
+        for _ in range(3):
+            cfg = pickle.loads(pickle.dumps(DEFAULT_CONFIG))
+            assert cfg is not DEFAULT_CONFIG
+            assert extract._matchers(cfg) is m
+        assert len(extract._MATCHER_CACHE) == n
+
+    def test_pickled_config_copy_reuses_type_matcher(self):
+        import pickle
+
+        from pdf2gtfs_spark.kernel import celltypes as ct
+
+        m = ct.matchers_for(DEFAULT_CONFIG)
+        n = len(ct._MATCHERS_CACHE)
+        cfg = pickle.loads(pickle.dumps(DEFAULT_CONFIG))
+        assert ct.matchers_for(cfg) is m
+        assert len(ct._MATCHERS_CACHE) == n
+
+
 class TestPayloadCodec:
     def test_roundtrip(self):
         grid = [["Samstag", "", ""],
@@ -160,17 +248,17 @@ class TestPayloadCodec:
                 ["Stop number three", "", "5.04"],
                 ["Stop number four", "an", "5.06"]]
         payload = encode_grid(grid, header_rows=[0])
-        page, chars = decode_payload(payload)
+        page, chars = decode_payload_arrays(payload)
         assert isinstance(page, PageBox)
         n_chars = sum(len(c) for r, row in enumerate(grid)
                       for c in row if c)
-        assert len(chars) == n_chars
+        assert len(chars["text"]) == n_chars
         assert (chars["x1"] > chars["x0"]).all()
 
     def test_cid_repair(self):
         payload = "PAGE\t0\t0\t100\t100\n10\t10\t15\t18\t(cid:65)\n"
-        _, chars = decode_payload(payload)
-        assert chars["text"].iloc[0] == "A"
+        _, chars = decode_payload_arrays(payload)
+        assert chars["text"][0] == "A"
 
     def test_multi_glyph_field_texts_use_offset_slices(self):
         # chars_to_field_arrays builds field texts by slicing ONE
@@ -179,16 +267,15 @@ class TestPayloadCodec:
         # index is no longer the string offset and the cumulative-
         # length fallback must produce the same concatenation as the
         # old per-field join.
-        from pdf2gtfs_spark.kernel.extract import (
-            DEFAULT_CONFIG, chars_to_fields)
+        from pdf2gtfs_spark.kernel.extract import chars_to_field_arrays
         payload = ("PAGE\t0\t0\t200\t100\n"
                    "10\t10\t15\t18\tA\n"
                    "15\t10\t20\t18\t(cid:xx)\n"    # stays '(cid:xx)'
                    "20\t10\t25\t18\tB\n"
                    "60\t10\t65\t18\tC\n")          # gap -> new field
-        _, chars = decode_payload(payload)
-        fields = chars_to_fields(chars, DEFAULT_CONFIG)
-        assert fields["text"].tolist() == ["A(cid:xx)B", "C"]
+        _, chars = decode_payload_arrays(payload)
+        fields = chars_to_field_arrays(chars, DEFAULT_CONFIG)
+        assert fields.text.tolist() == ["A(cid:xx)B", "C"]
 
 
 class TestGoldenFixtures:

@@ -21,7 +21,7 @@ from pdf2gtfs_spark.kernel.celltypes import (
     DAYS, EMPTY, OTHER, REPEAT_IDENT, REPEAT_VALUE, STOP, STOP_ANNOT, TIME,
     TypeMatchers, is_legend_text, is_repeat_value_text,
 )
-from pdf2gtfs_spark.kernel.extract import extract_turn
+from pdf2gtfs_spark.kernel.extract import _Fields, extract_turn
 from pdf2gtfs_spark.kernel.payload import (
     CHAR_COLUMNS, CHAR_H, CHAR_W, PageBox, encode_chars,
 )
@@ -34,8 +34,18 @@ NEW_CFG = dataclasses.replace(DEFAULT_CONFIG, extraction_path="new")
 
 def guess_one(text: str, cfg=DEFAULT_CONFIG):
     m = TypeMatchers(cfg)
-    P, fb = m.guess(pd.Series([text]))
+    P, fb = m.guess_list([text])
     return P[0], bool(fb[0])
+
+
+def fields_from_rows(rows) -> _Fields:
+    """Word ``_Fields`` from row dicts (text, x0, y0, x1, y1); the
+    coordinates become float arrays like the kernel's."""
+    def coord(k):
+        return np.array([float(r[k]) for r in rows])
+    return _Fields(np.array([r["text"] for r in rows], dtype=object),
+                   coord("x0"), coord("y0"), coord("x1"), coord("y1"),
+                   np.zeros(len(rows), dtype=np.int64), None)
 
 
 class TestAbsIndicators:
@@ -45,10 +55,10 @@ class TestAbsIndicators:
         cfg = dataclasses.replace(DEFAULT_CONFIG, time_format="%H:%M")
         m = TypeMatchers(cfg)
         for t in ["13:33", "03:12", "01:01"]:
-            P, _ = m.guess(pd.Series([t]))
+            P, _ = m.guess_list([t])
             assert not np.isnan(P[0][TIME]), t
         for t in ["", "a", "19:65", "13.33", "18: 42"]:
-            P, _ = m.guess(pd.Series([t]))
+            P, _ = m.guess_list([t])
             assert np.isnan(P[0][TIME]), t
         for t in ["13.42", "03.2", "2.2"]:
             P, _ = guess_one(t)  # default %H.%M
@@ -89,8 +99,7 @@ def grid_from_cells(cells, cfg=DEFAULT_CONFIG):
         rows.append({"text": text, "x0": x0, "y0": y0,
                      "x1": x0 + CHAR_W * max(1, len(text)),
                      "y1": y0 + CHAR_H})
-    fields = pd.DataFrame(rows)
-    store = CellStore.from_fields(fields, cfg)
+    store = CellStore.from_fields(fields_from_rows(rows), cfg)
     g = Grid.from_time_cells(store, list(range(len(store.text))))
     return g, Typer(g)
 
@@ -340,7 +349,7 @@ class TestStoplessTimeRowCollapse:
         rows = [{"text": t, "x0": x0, "y0": y0,
                  "x1": x0 + CHAR_W * max(1, len(t)), "y1": y0 + CHAR_H}
                 for t, x0, y0 in cells]
-        tts = tables_from_fields(pd.DataFrame(rows), NEW_CFG)
+        tts = tables_from_fields(fields_from_rows(rows), NEW_CFG)
         assert len(tts) == 1
         tt = tts[0]
         ty, g, s = tt.typer, tt.grid, tt.grid.store
@@ -384,8 +393,7 @@ class TestMergeAndDuplicateDays:
         for text, x0, y0 in b1 + b2:
             rows.append({"text": text, "x0": x0, "y0": y0,
                          "x1": x0 + CHAR_W * len(text), "y1": y0 + CHAR_H})
-        fields = pd.DataFrame(rows)
-        store = CellStore.from_fields(fields, NEW_CFG)
+        store = CellStore.from_fields(fields_from_rows(rows), NEW_CFG)
         t_idx = [i for i in range(len(store.text))
                  if store.strict_type(i) == TIME]
         left = [i for i in t_idx if store.x0[i] < 500]

@@ -16,11 +16,10 @@ from hypothesis import strategies as st
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG
 from pdf2gtfs_spark.kernel.payload import (
-    PageBox, decode_payload, encode_chars,
+    PageBox, decode_payload_arrays, decode_payload_batch, encode_chars,
 )
 from pdf2gtfs_spark.kernel.timefmt import (
-    is_time_str, match_times, seconds_to_gtfs, gtfs_to_seconds,
-    time_format_to_regex,
+    is_time_str, seconds_to_gtfs, gtfs_to_seconds, time_format_to_regex,
 )
 from pdf2gtfs_spark.functions.normalize import normalize_name
 
@@ -46,12 +45,17 @@ class TestPayloadRoundTrip:
             columns=["x0", "y0", "x1", "y1", "text"])
         page = PageBox(0.0, 0.0, 1000.0, 1000.0)
         payload = encode_chars(page, chars)
-        page2, decoded = decode_payload(payload)
+        page2, decoded = decode_payload_arrays(payload)
         assert (page2.x0, page2.y1) == (page.x0, page.y1)
-        assert len(decoded) == len(chars)
+        assert len(decoded["text"]) == len(chars)
         if len(chars):
             assert list(decoded["text"]) == list(chars["text"])
             assert np.allclose(decoded["x0"], chars["x0"])
+        # the batch decoder is exact w.r.t. the per-turn parser
+        page3, batched = decode_payload_batch([payload])[0]
+        assert page3 == page2
+        for col, arr in decoded.items():
+            assert list(batched[col]) == list(arr), col
 
 
 class TestTimeRegexEquivalence:
@@ -68,8 +72,6 @@ class TestTimeRegexEquivalence:
         except ValueError:
             expected = False
         assert is_time_str(text, regex, order) == expected
-        got = match_times(pd.Series([text]), fmt)[0].iloc[0]
-        assert bool(got) == expected
 
     @given(st.integers(0, 99 * 3600 + 59 * 60 + 59))
     @settings(max_examples=100, deadline=None)

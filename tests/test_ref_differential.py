@@ -2,7 +2,7 @@
 implementation (/root/reference/src/pdf2gtfs/datastructures/table/),
 imported via tests/refcompat.
 
-Both engines receive the identical word-field frame (the repo kernel's
+Both engines receive the identical word fields (the repo kernel's
 chars->fields output) and run the same orchestration
 (reader.py:296-318 create_tables_from_page, minus pdfminer):
 
@@ -43,7 +43,7 @@ NEW_CFG = dataclasses.replace(DEFAULT_CONFIG, extraction_path="new")
 def payload_fields(payload: str):
     page, chars = decode_payload_arrays(payload)
     chars = cleanup_char_arrays(chars, page)
-    return chars_to_field_arrays(chars, DEFAULT_CONFIG).to_frame()
+    return chars_to_field_arrays(chars, DEFAULT_CONFIG)
 
 
 # ---------------------------------------------------------------------------
@@ -56,13 +56,13 @@ def run_reference(fields):
     Table = ref["Table"]
 
     cells = []
-    for row in fields.itertuples():
-        text = str(row.text)
-        c = Cell(text, BBox(float(row.x0), float(row.y0),
-                            float(row.x1), float(row.y1)))
+    for text, x0, y0, x1, y1 in zip(fields.text, fields.x0, fields.y0,
+                                    fields.x1, fields.y1):
+        c = Cell(str(text), BBox(float(x0), float(y0),
+                                 float(x1), float(y1)))
         # payloads carry no font; both engines use the cell height as
         # the fontsize proxy (see CellStore.from_fields)
-        c.fontsize = round(float(row.y1) - float(row.y0), 2)
+        c.fontsize = round(float(y1) - float(y0), 2)
         cells.append(c)
     cells = [c for c in cells if c.text
              and not c.text.startswith("(cid")]
