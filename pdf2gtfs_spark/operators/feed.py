@@ -36,6 +36,7 @@ from pdf2gtfs_spark.operators.gtfs import (
     apply_service_day_offsets, build_calendar, build_stop_times,
     build_stops, build_trips, expand_repeats, service_day_offsets,
 )
+from pdf2gtfs_spark.sources import literal_frame
 
 AGENCY_ROW = ("0", "pdf2gtfs", "https://example.com", "Europe/Berlin")
 FEED_DATE_BOUNDS = ("20240101", "20251231")
@@ -140,8 +141,8 @@ def build_calendar_dates(calendar: DataFrame,
     """J11: calendar x holiday dim broadcast cross join
     (handler.py:219-237): holiday services gain the dates
     (exception_type 1), weekday services lose them (2)."""
-    hol = spark.createDataFrame([(d,) for d in holiday_dates()],
-                                "date string")
+    hol = literal_frame(spark, [(d,) for d in holiday_dates()],
+                        "date string")
     on_holiday = F.array_contains(F.split("days_key", ","), "h")
     return (calendar
             .withColumn("exception_type",
@@ -199,8 +200,8 @@ def build_feed(entries: DataFrame, spark: SparkSession,
                  .drop("anchor"))
     trips = trips.unionByName(rep_trips)
     trips_kept, routes_kept = remove_unused(trips, stop_times, routes)
-    agency = spark.createDataFrame(
-        [AGENCY_ROW], "agency_id string, agency_name string, "
+    agency = literal_frame(
+        spark, [AGENCY_ROW], "agency_id string, agency_name string, "
         "agency_url string, agency_timezone string")
     calendar = cal.select(
         "service_id",

@@ -1,12 +1,13 @@
 """Lineage + checkpoint/resume (north_rule requirement; FIXTURES.md §7).
 
 The checkpoint unit is a *conversation bucket*: pmod(xxhash64(conv_id),
-n_buckets). A run processes pending buckets in groups; after each group
-commits its output (parquet append partitioned by bucket), one lineage
-row per bucket is appended. A killed job resumes by anti-joining
-pending buckets against the committed lineage — finished partitions are
-never recomputed (reference precedent: the fingerprinted OSM cache
-protocol, locate/osm_fetcher.py:40-100).
+n_buckets). Pending buckets run in commit groups of one Spark action
+each: extract + parquet write partitioned by bucket, with the lineage
+metrics observed during the write. Then one lineage row per bucket of
+the group (0 counts included) is appended. A killed job resumes by
+anti-joining pending buckets against the committed lineage — finished
+partitions are never recomputed (reference precedent: the fingerprinted
+OSM cache protocol, locate/osm_fetcher.py:40-100).
 
 On Iceberg this becomes snapshot-id bookkeeping; the sandbox uses
 parquet + an input fingerprint column with identical semantics.
@@ -34,8 +35,8 @@ def committed_buckets(spark, lineage_dir: str) -> set[int]:
     p = Path(lineage_dir)
     if not p.exists() or not any(p.glob("*.parquet")):
         return set()
-    rows = spark.read.parquet(lineage_dir).select("bucket").distinct()
-    return {r["bucket"] for r in rows.collect()}
+    rows = spark.read.schema(LINEAGE_COLUMNS).parquet(lineage_dir)
+    return {r[0] for r in rows.select("bucket").collect()}
 
 
 def run_with_checkpoint(spark, transcripts_df, out_dir: str,
@@ -47,54 +48,52 @@ def run_with_checkpoint(spark, transcripts_df, out_dir: str,
     """Process pending buckets in commit groups; returns the buckets
     processed this invocation. ``max_groups`` simulates a mid-run kill
     for resume tests."""
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation, functions as F
 
     from pdf2gtfs_spark.config import DEFAULT_CONFIG
     from pdf2gtfs_spark.plans.pipeline import run_extract
+    from pdf2gtfs_spark.sources import literal_frame
 
     cfg = cfg or DEFAULT_CONFIG
-    out = Path(out_dir)
-    lineage_dir = str(out / "lineage")
-    tables_dir = str(out / "tables")
+    lineage_dir = str(Path(out_dir) / "lineage")
+    tables_dir = str(Path(out_dir) / "tables")
 
     done = committed_buckets(spark, lineage_dir)
     pending = [b for b in range(n_buckets) if b not in done]
     groups = [pending[i:i + group_size]
-              for i in range(0, len(pending), group_size)]
-    if max_groups is not None:
-        groups = groups[:max_groups]
+              for i in range(0, len(pending), group_size)][:max_groups]
 
-    processed: list[int] = []
-    with_bucket = transcripts_df.withColumn("bucket", bucket_col(n_buckets))
-    for group in groups:
-        started = time.time()
-        part = with_bucket.where(F.col("bucket").isin(group))
-        extracted = run_extract(
-            part.select("conv_id", "turn_idx", "text"), cfg,
-            num_partitions=num_partitions)
-        extracted = extracted.withColumn("bucket", bucket_col(n_buckets))
-        # persist: the write and the metrics agg are two actions — without
-        # it the kernel (the expensive stage) would run twice per group
-        extracted = extracted.persist()
-        # commit output first, lineage second: a crash between the two
-        # re-processes the group idempotently (same bucket partition is
-        # overwritten on retry via dynamic partition overwrite)
-        (extracted.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("bucket").parquet(tables_dir))
-        metrics = (extracted.groupBy("bucket").agg(
-            F.countDistinct("conv_id", "turn_idx").alias("input_rows"),
-            F.count(F.col("table_id")).alias("extracted_tables"),
-            F.sum(F.col("malformed").cast("long")).alias("malformed_turns"),
-        ).collect())
-        rows = [(run_id, input_snapshot_id, m["bucket"], m["input_rows"],
-                 m["extracted_tables"], m["malformed_turns"] or 0,
-                 started, time.time()) for m in metrics]
-        missing = set(group) - {m["bucket"] for m in metrics}
-        rows += [(run_id, input_snapshot_id, b, 0, 0, 0, started,
-                  time.time()) for b in missing]
-        spark.createDataFrame(rows, LINEAGE_COLUMNS).write.mode(
-            "append").parquet(lineage_dir)
-        extracted.unpersist()
-        processed += group
-    return processed
+    # one kernel row per input turn has table_id NULL or 0 (pipeline.py)
+    tid = F.col("table_id")
+    metrics = {"input_rows": tid.isNull() | (tid == 0),
+               "extracted_tables": tid.isNotNull(),
+               "malformed_turns": F.col("malformed")}
+    sc = spark.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    try:
+        for group in groups:
+            started, obs = time.time(), Observation()
+            part = transcripts_df.where(bucket_col(n_buckets).isin(group))
+            extracted = run_extract(
+                part.select("conv_id", "turn_idx", "text"), cfg,
+                num_partitions=num_partitions).withColumn(
+                "bucket", bucket_col(n_buckets)).observe(obs, *[
+                    F.count_if((F.col("bucket") == b) & c).alias(f"{k}{b}")
+                    for b in group for k, c in metrics.items()])
+            # commit output first, lineage second: a crash between the
+            # two re-processes the group idempotently (same bucket
+            # partitions are overwritten via dynamic partition overwrite)
+            sc.setJobDescription(f"checkpoint group {group}: extract+write")
+            (extracted.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("bucket").parquet(tables_dir))
+            m = obs.get
+            rows = [(run_id, input_snapshot_id, b,
+                     *(m[f"{k}{b}"] for k in metrics), started, time.time())
+                    for b in group]
+            sc.setJobDescription(f"checkpoint group {group}: lineage append")
+            literal_frame(spark, rows, LINEAGE_COLUMNS).write.mode(
+                "append").parquet(lineage_dir)
+    finally:
+        sc.setJobDescription(caller_desc)
+    return [b for group in groups for b in group]

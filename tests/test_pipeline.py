@@ -1,6 +1,7 @@
 """Spark pipeline end-to-end tests: extraction, reassembly, match rate,
 lineage/resume."""
 
+import pandas as pd
 import pytest
 
 from pdf2gtfs_spark.plans.pipeline import (
@@ -8,9 +9,11 @@ from pdf2gtfs_spark.plans.pipeline import (
     run_extract, stops_table, turn_csvs,
 )
 from pdf2gtfs_spark.plans.lineage import (
-    committed_buckets, run_with_checkpoint,
+    bucket_col, committed_buckets, run_with_checkpoint,
 )
-from pdf2gtfs_spark.sources.transcripts import generate_transcripts
+from pdf2gtfs_spark.sources.transcripts import (
+    generate_transcripts, synth_turn_payload,
+)
 
 
 @pytest.fixture(scope="module")
@@ -78,11 +81,15 @@ class TestLineageResume:
     def test_resume_skips_committed(self, spark, small_input, tmp_path):
         _, _, tdf, _ = small_input
         out = str(tmp_path / "out")
+        sc = spark.sparkContext
+        sc.setJobDescription(None)
         # simulated kill: only the first commit group runs
         first = run_with_checkpoint(
             spark, tdf, out, run_id="r1", input_snapshot_id="s1",
             n_buckets=4, group_size=2, max_groups=1)
         assert len(first) == 2
+        # the per-group job descriptions do not leak to the caller
+        assert sc.getLocalProperty("spark.job.description") is None
         assert committed_buckets(spark, f"{out}/lineage") == set(first)
         # resume: processes only the remaining buckets
         second = run_with_checkpoint(
@@ -102,6 +109,102 @@ class TestLineageResume:
             spark, tdf, out, run_id="r3", input_snapshot_id="s1",
             n_buckets=4, group_size=2)
         assert third == []
+
+
+METRICS = ["input_rows", "extracted_tables", "malformed_turns"]
+MALFORMED = "PAGE\tbad\t0\t600\t99\n1\t1\t6\t9\tx\n"
+
+
+def _small_transcripts(n_convs):
+    transcripts, _ = generate_transcripts(
+        n_convs=n_convs, base_turns=2, skew_every=0, include_fixtures=False)
+    return transcripts
+
+
+def _rows_per_bucket(df, n_buckets):
+    return {r["bucket"]: r["count"] for r in
+            df.groupBy(bucket_col(n_buckets).alias("bucket")).count()
+            .collect()}
+
+
+class TestLineageMetrics:
+    N_BUCKETS = 8
+
+    def test_one_group_one_action(self, spark, tmp_path):
+        from pyspark.sql import functions as F
+
+        transcripts = _small_transcripts(3)
+        # a malformed turn and a three-table turn
+        planted = transcripts.iloc[[0, 1]].assign(
+            turn_idx=[99, 98],
+            text=[MALFORMED, synth_turn_payload("conv_00001", 98, 3)[0]])
+        tdf = spark.createDataFrame(
+            pd.concat([transcripts, planted], ignore_index=True))
+        out = str(tmp_path / "out")
+        sc = spark.sparkContext
+        persisted = set(sc._jsc.getPersistentRDDs().keys())
+        sc.setJobGroup("lineage-one-group", "caller description")
+        try:
+            # more buckets than conversations: the one commit group
+            # holds empty buckets
+            done = run_with_checkpoint(
+                spark, tdf, out, run_id="r", input_snapshot_id="s",
+                n_buckets=self.N_BUCKETS, group_size=self.N_BUCKETS)
+            desc = sc.getLocalProperty("spark.job.description")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        assert done == list(range(self.N_BUCKETS))
+        assert desc == "caller description"
+        # one extract+write action, one lineage append; no cached frame
+        # left behind (the metrics come from the write itself)
+        jobs = sc.statusTracker().getJobIdsForGroup("lineage-one-group")
+        assert len(jobs) <= 2, jobs
+        assert set(sc._jsc.getPersistentRDDs().keys()) == persisted
+
+        lin = {r["bucket"]: r for r in
+               spark.read.parquet(f"{out}/lineage").collect()}
+        assert sorted(lin) == list(range(self.N_BUCKETS))
+        # the earlier groupBy definitions, recomputed from the output
+        old = {r["bucket"]: r for r in
+               spark.read.parquet(f"{out}/tables").groupBy("bucket").agg(
+                   F.countDistinct("conv_id", "turn_idx")
+                   .alias("input_rows"),
+                   F.count("table_id").alias("extracted_tables"),
+                   F.sum(F.col("malformed").cast("long"))
+                   .alias("malformed_turns")).collect()}
+        assert len(old) < self.N_BUCKETS
+        for b in range(self.N_BUCKETS):
+            want = [old[b][k] if b in old else 0 for k in METRICS]
+            assert [lin[b][k] for k in METRICS] == want, b
+        assert sum(r["malformed_turns"] for r in lin.values()) == 1
+        # the three-table turn adds two tables over its one input row,
+        # the malformed turn one input row without a table
+        assert sum(r["extracted_tables"] - r["input_rows"]
+                   for r in lin.values()) == 2 - 1
+        assert {b: r["input_rows"] for b, r in lin.items()
+                if r["input_rows"]} == _rows_per_bucket(tdf, self.N_BUCKETS)
+
+    def test_input_rows_counts_every_input_row(self, spark, tmp_path):
+        # a NULL conv_id turn and a duplicated (conv_id, turn_idx) turn
+        # are both written, so each counts as an input row
+        transcripts = _small_transcripts(2)
+        rows = pd.concat([transcripts, transcripts.iloc[[0]],
+                          transcripts.iloc[[1]].assign(conv_id=None)],
+                         ignore_index=True)
+        tdf = spark.createDataFrame(rows)
+        out = str(tmp_path / "out")
+        run_with_checkpoint(spark, tdf, out, run_id="r",
+                            input_snapshot_id="s", n_buckets=2,
+                            group_size=2)
+        lin = spark.read.parquet(f"{out}/lineage").collect()
+        assert {r["bucket"]: r["input_rows"] for r in lin
+                if r["input_rows"]} == _rows_per_bucket(tdf, 2)
+        assert sum(r["input_rows"] for r in lin) == len(rows)
+        # countDistinct(conv_id, turn_idx) missed both
+        got = spark.read.parquet(f"{out}/tables")
+        assert got.select("conv_id", "turn_idx").distinct() \
+                  .dropna().count() == len(rows) - 2
 
 
 class TestArrowStructContract:
