@@ -134,6 +134,18 @@ def run_extract(transcripts_df, cfg: ExtractConfig = DEFAULT_CONFIG,
     exists before the reassembly window, which shuffles the far smaller
     extracted rows.
 
+    One wave for small inputs: when ``num_partitions`` is not given and
+    the optimizer's size estimate of the input is at most one scan
+    split (``spark.sql.files.maxPartitionBytes``), the scan partitions
+    are coalesced to ``defaultParallelism`` before the kernel. Every
+    Python task pays a fixed start-up cost (~0.3 s on a 4-core host,
+    whatever the batch holds) that ``openCostInBytes`` packing does not
+    model, so a small input of many files would otherwise run one task
+    per file, in several waves. ``coalesce`` is narrow (no exchange,
+    one stage) and only lowers the count; no task gets more input than
+    one split. Larger inputs keep one task per split: coalesce balances
+    partition counts, not bytes, so it could stack big splits together.
+
     At 100 TB the scan parallelism comes from Iceberg file splits —
     keep spark.sql.files.maxPartitionBytes small enough that wide
     payload rows still yield >= 2-3 splits per executor core.
@@ -144,6 +156,13 @@ def run_extract(transcripts_df, cfg: ExtractConfig = DEFAULT_CONFIG,
     if num_partitions:
         df = df.repartition(num_partitions, F.col("conv_id"),
                             F.col("turn_idx"))
+    else:
+        spark = df.sparkSession
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        split = spark._jsparkSession.sessionState().conf() \
+            .filesMaxPartitionBytes()
+        if size <= split:
+            df = df.coalesce(spark.sparkContext.defaultParallelism)
     schema = EXTRACT_SCHEMA if emit == "full" else EXTRACT_SCHEMA_CSV
     return df.mapInPandas(make_extract_kernel(cfg, emit=emit), schema)
 

@@ -23,3 +23,18 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def set_split_bytes(spark):
+    """Setter for ``spark.sql.files.maxPartitionBytes`` in one test;
+    the session is shared, so the caller's value is restored after."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    try:
+        yield lambda value: spark.conf.set(key, value)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

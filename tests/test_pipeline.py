@@ -1,6 +1,8 @@
 """Spark pipeline end-to-end tests: extraction, reassembly, match rate,
 lineage/resume."""
 
+from pathlib import Path
+
 import pandas as pd
 import pytest
 
@@ -115,9 +117,10 @@ METRICS = ["input_rows", "extracted_tables", "malformed_turns"]
 MALFORMED = "PAGE\tbad\t0\t600\t99\n1\t1\t6\t9\tx\n"
 
 
-def _small_transcripts(n_convs):
+def _small_transcripts(n_convs, base_turns=2):
     transcripts, _ = generate_transcripts(
-        n_convs=n_convs, base_turns=2, skew_every=0, include_fixtures=False)
+        n_convs=n_convs, base_turns=base_turns, skew_every=0,
+        include_fixtures=False)
     return transcripts
 
 
@@ -130,19 +133,29 @@ def _rows_per_bucket(df, n_buckets):
 class TestLineageMetrics:
     N_BUCKETS = 8
 
-    def test_one_group_one_action(self, spark, tmp_path):
+    def test_one_group_one_action(self, spark, tmp_path, set_split_bytes):
         from pyspark.sql import functions as F
 
-        transcripts = _small_transcripts(3)
+        transcripts = _small_transcripts(3, base_turns=6)
         # a malformed turn and a three-table turn
         planted = transcripts.iloc[[0, 1]].assign(
             turn_idx=[99, 98],
             text=[MALFORMED, synth_turn_payload("conv_00001", 98, 3)[0]])
-        tdf = spark.createDataFrame(
-            pd.concat([transcripts, planted], ignore_index=True))
+        # one parquet file per input row: more files than cores, and
+        # more than cores in one bucket
+        in_dir = str(tmp_path / "in")
+        spark.createDataFrame(
+            pd.concat([transcripts, planted], ignore_index=True)
+        ).write.option("maxRecordsPerFile", 1).parquet(in_dir)
+        tdf = spark.read.parquet(in_dir)
+        cores = spark.sparkContext.defaultParallelism
+        assert max(_rows_per_bucket(tdf, self.N_BUCKETS).values()) > cores
         out = str(tmp_path / "out")
         sc = spark.sparkContext
         persisted = set(sc._jsc.getPersistentRDDs().keys())
+        # the split size bench.py and perfbench run with: each small
+        # file is its own scan split
+        set_split_bytes("4m")
         sc.setJobGroup("lineage-one-group", "caller description")
         try:
             # more buckets than conversations: the one commit group
@@ -161,6 +174,10 @@ class TestLineageMetrics:
         jobs = sc.statusTracker().getJobIdsForGroup("lineage-one-group")
         assert len(jobs) <= 2, jobs
         assert set(sc._jsc.getPersistentRDDs().keys()) == persisted
+        # the small input ran as one wave of kernel tasks, each writing
+        # at most one file per bucket (not one task per input file)
+        for d in Path(out, "tables").glob("bucket=*"):
+            assert len(list(d.glob("*.parquet"))) <= cores, d.name
 
         lin = {r["bucket"]: r for r in
                spark.read.parquet(f"{out}/lineage").collect()}

@@ -37,8 +37,9 @@ class TestPlanQuality:
             anti_join_unused(spark, "/root/testdata/sf0.01"))
 
     def test_extract_has_no_pre_kernel_shuffle(self, spark):
-        """The stateless kernel maps directly over scan partitions; no
-        Exchange may appear below MapInPandas."""
+        """The stateless kernel maps over the scan partitions (narrowly
+        coalesced when small); no Exchange may appear below
+        MapInPandas."""
         from pdf2gtfs_spark.plans.pipeline import run_extract
         from pdf2gtfs_spark.sources.transcripts import generate_transcripts
 
@@ -49,6 +50,37 @@ class TestPlanQuality:
         map_idx = plan.find("MapInPandas")
         assert map_idx >= 0
         assert "Exchange" not in plan[map_idx:]
+
+    def test_small_extract_runs_one_wave(self, spark, tmp_path,
+                                         set_split_bytes):
+        """An input within one scan split runs the kernel in one wave of
+        defaultParallelism tasks (a narrow Coalesce below MapInPandas);
+        a larger input keeps one kernel task per scan split."""
+        from pdf2gtfs_spark.plans.pipeline import run_extract
+        from pdf2gtfs_spark.sources.transcripts import generate_transcripts
+
+        t, _ = generate_transcripts(n_convs=4, base_turns=2, skew_every=0,
+                                    include_fixtures=False)
+        path = str(tmp_path / "in")
+        spark.createDataFrame(t).write.option(
+            "maxRecordsPerFile", 1).parquet(path)
+        tdf = spark.read.parquet(path)
+        n_files = len(tdf.inputFiles())
+        cores = spark.sparkContext.defaultParallelism
+        assert n_files >= 8 and n_files > cores
+        # the split size bench.py and perfbench run with: each small
+        # file is its own scan split
+        set_split_bytes("4m")
+        df = run_extract(tdf, emit="csv")
+        plan = _plan(df)
+        assert 0 <= plan.find("MapInPandas") < plan.find("Coalesce")
+        assert df.rdd.getNumPartitions() == cores
+        size = tdf._jdf.queryExecution().optimizedPlan().stats() \
+            .sizeInBytes()
+        set_split_bytes(str(size - 1))
+        df = run_extract(tdf, emit="csv")
+        assert "Coalesce" not in _plan(df)
+        assert df.rdd.getNumPartitions() == n_files
 
     def test_agg_has_partial_aggregation(self, spark):
         """Decomposable agg plans map-side partial + final (two
@@ -103,6 +135,7 @@ class TestPlanQuality:
         plan = _plan(run_extract(tdf, num_partitions=4, emit="csv"))
         assert "MapInPandas" in plan
         assert "hashpartitioning(conv_id" in plan
+        assert "Coalesce" not in plan
         assert "turn_idx" in plan.split("hashpartitioning")[1][:80]
         assert spark.conf.get(
             "spark.sql.adaptive.skewJoin.enabled") == "true"
