@@ -132,7 +132,9 @@ def main(argv: list[str] | None = None) -> int:
         group_size=args.group_size, max_groups=args.max_groups,
         num_partitions=args.num_partitions)
 
-    lineage = spark.read.parquet(args.output + "/lineage")
+    # lineage of earlier input snapshots may sit in the same directory
+    lineage = spark.read.parquet(args.output + "/lineage").where(
+        F.col("input_snapshot_id") == snapshot)
     totals = lineage.agg(
         F.countDistinct("bucket").alias("committed_buckets"),
         F.sum("input_rows").alias("input_rows"),

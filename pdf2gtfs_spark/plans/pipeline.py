@@ -19,6 +19,8 @@ the extraction once per output table.
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from typing import Iterator
 
 import pandas as pd
@@ -63,6 +65,24 @@ EXTRACT_SCHEMA_CSV = (
 )
 
 
+def _drop_zip_finders() -> None:
+    """Drop the cached zip finders from ``sys.path_importer_cache``.
+
+    PySpark calls ``importlib.invalidate_caches()`` at the start of
+    every task; before CPython 3.13 that re-reads the central directory
+    of every archive behind a cached ``zipimporter`` (pyspark.zip,
+    py4j, Spark's jar: 0.13-0.45 s per task on a 4-core host). Dropping
+    them changes nothing that can be imported: the next import through
+    such a path entry builds a new finder from zipimport's directory
+    cache without reading the archive, and imported modules keep their
+    own loaders.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
+
+
 def make_extract_kernel(cfg: ExtractConfig = DEFAULT_CONFIG,
                         emit: str = "full", with_ts: bool = False):
     """Build the mapInPandas kernel closure (cfg is broadcast by value).
@@ -77,45 +97,48 @@ def make_extract_kernel(cfg: ExtractConfig = DEFAULT_CONFIG,
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pdf2gtfs_spark.kernel.payload import decode_payload_batch
 
-        for pdf in batches:
-            out: list[dict] = []
-            tss = pdf["ts"] if with_ts else None
-            # one vectorized CSV parse for the whole Arrow batch
-            # (pyarrow C++ reader) instead of per-line str.split per
-            # turn — decode was ~35% of kernel time (guide §4.5)
-            decs = decode_payload_batch(list(pdf["text"]))
-            for k, (conv_id, turn_idx, payload) in enumerate(zip(
-                    pdf["conv_id"], pdf["turn_idx"], pdf["text"])):
-                res = extract_turn(payload, cfg, light=light,
-                                   decoded=decs[k])
-                base = {"conv_id": conv_id, "turn_idx": int(turn_idx),
-                        "n_chars": res.n_chars, "n_fields": res.n_fields,
-                        "malformed": res.malformed}
-                if tss is not None:
-                    base["ts"] = tss.iloc[k]
-                if not res.tables:
-                    row = {**base, "table_id": None, "csv_text": None}
-                    if not light:
-                        row.update(cells=None, entries=None, stops=None)
-                    out.append(row)
-                    continue
-                for tid, t in enumerate(res.tables):
-                    row = {**base, "table_id": tid, "csv_text": t.csv_text}
-                    if not light:
-                        # allow_extra: Arrow's struct conversion maps
-                        # dict keys by name and drops extras, so the
-                        # stored records (which carry table_id for the
-                        # frame accessors) ship without a per-record
-                        # copy (~27% of this kernel, measured)
-                        row.update(
-                            cells=t.records("cells", _CELL_STRUCT_COLS),
-                            entries=t.records("entries",
-                                              _ENTRY_STRUCT_COLS,
-                                              allow_extra=("table_id",)),
-                            stops=t.records("stops", _STOP_STRUCT_COLS,
-                                            allow_extra=("table_id",)))
-                    out.append(row)
-            yield pd.DataFrame(out)
+        try:
+            for pdf in batches:
+                out: list[dict] = []
+                tss = pdf["ts"] if with_ts else None
+                # one vectorized CSV parse for the whole Arrow batch
+                # (pyarrow C++ reader) instead of per-line str.split per
+                # turn — decode was ~35% of kernel time (guide §4.5)
+                decs = decode_payload_batch(list(pdf["text"]))
+                for k, (conv_id, turn_idx, payload) in enumerate(zip(
+                        pdf["conv_id"], pdf["turn_idx"], pdf["text"])):
+                    res = extract_turn(payload, cfg, light=light,
+                                       decoded=decs[k])
+                    base = {"conv_id": conv_id, "turn_idx": int(turn_idx),
+                            "n_chars": res.n_chars, "n_fields": res.n_fields,
+                            "malformed": res.malformed}
+                    if tss is not None:
+                        base["ts"] = tss.iloc[k]
+                    if not res.tables:
+                        row = {**base, "table_id": None, "csv_text": None}
+                        if not light:
+                            row.update(cells=None, entries=None, stops=None)
+                        out.append(row)
+                        continue
+                    for tid, t in enumerate(res.tables):
+                        row = {**base, "table_id": tid, "csv_text": t.csv_text}
+                        if not light:
+                            # allow_extra: Arrow's struct conversion maps
+                            # dict keys by name and drops extras, so the
+                            # stored records (which carry table_id for the
+                            # frame accessors) ship without a per-record
+                            # copy (~27% of this kernel, measured)
+                            row.update(
+                                cells=t.records("cells", _CELL_STRUCT_COLS),
+                                entries=t.records("entries",
+                                                  _ENTRY_STRUCT_COLS,
+                                                  allow_extra=("table_id",)),
+                                stops=t.records("stops", _STOP_STRUCT_COLS,
+                                                allow_extra=("table_id",)))
+                        out.append(row)
+                yield pd.DataFrame(out)
+        finally:
+            _drop_zip_finders()
 
     return kernel
 
@@ -138,13 +161,14 @@ def run_extract(transcripts_df, cfg: ExtractConfig = DEFAULT_CONFIG,
     the optimizer's size estimate of the input is at most one scan
     split (``spark.sql.files.maxPartitionBytes``), the scan partitions
     are coalesced to ``defaultParallelism`` before the kernel. Every
-    Python task pays a fixed start-up cost (~0.3 s on a 4-core host,
-    whatever the batch holds) that ``openCostInBytes`` packing does not
-    model, so a small input of many files would otherwise run one task
-    per file, in several waves. ``coalesce`` is narrow (no exchange,
-    one stage) and only lowers the count; no task gets more input than
-    one split. Larger inputs keep one task per split: coalesce balances
-    partition counts, not bytes, so it could stack big splits together.
+    Python task pays a fixed start-up cost, whatever the batch holds
+    (~0.07 s on a 4-core host once ``_drop_zip_finders`` has run on the
+    worker), that ``openCostInBytes`` packing does not model, so a
+    small input of many files would otherwise run one task per file,
+    in several waves. ``coalesce`` is narrow (no exchange, one stage)
+    and only lowers the count; no task gets more input than one split.
+    Larger inputs keep one task per split: coalesce balances partition
+    counts, not bytes, so it could stack big splits together.
 
     At 100 TB the scan parallelism comes from Iceberg file splits —
     keep spark.sql.files.maxPartitionBytes small enough that wide

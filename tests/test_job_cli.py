@@ -9,8 +9,9 @@ executors (the script's own directory, jobs/, contains no package).
 
 Covers: full run (all buckets, match_rate 1.0 vs generated ground
 truth), kill-and-resume (``--max-groups 1`` then a plain re-submit
-recomputes only the unfinished buckets), and snapshot-id
-fingerprinting of the input file listing.
+recomputes only the unfinished buckets, and a new ``--snapshot-id``
+reprocesses every bucket), and snapshot-id fingerprinting of the input
+file listing.
 """
 
 from __future__ import annotations
@@ -128,6 +129,17 @@ def test_kill_and_resume_recomputes_only_pending(job_env):
     assert resumed["match_rate"] == 1.0
     # same input -> same fingerprint across both submits
     assert resumed["input_snapshot_id"] == killed["input_snapshot_id"]
+
+    # a new input snapshot reprocesses every bucket, and the summary
+    # counts only that snapshot's lineage rows
+    fresh = _submit(
+        tmp, zip_path,
+        "--input", str(tmp / "input"), "--output", str(out),
+        "--run-id", "t2c", "--n-buckets", str(N_BUCKETS),
+        "--group-size", str(GROUP_SIZE), "--snapshot-id", "v2")
+    assert fresh["buckets_processed"] == N_BUCKETS
+    assert fresh["committed_buckets"] == N_BUCKETS
+    assert fresh["input_rows"] == resumed["input_rows"]
 
 
 def test_zip_is_deterministic(job_env, tmp_path):

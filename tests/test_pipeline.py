@@ -1,14 +1,19 @@
 """Spark pipeline end-to-end tests: extraction, reassembly, match rate,
 lineage/resume."""
 
+import importlib
+import sys
+import zipfile
+import zipimport
 from pathlib import Path
 
 import pandas as pd
 import pytest
 
 from pdf2gtfs_spark.plans.pipeline import (
-    cells_table, entries_table, match_rate, reassemble_conversations,
-    run_extract, stops_table, turn_csvs,
+    _drop_zip_finders, cells_table, entries_table, make_extract_kernel,
+    match_rate, reassemble_conversations, run_extract, stops_table,
+    turn_csvs,
 )
 from pdf2gtfs_spark.plans.lineage import (
     bucket_col, committed_buckets, run_with_checkpoint,
@@ -79,6 +84,66 @@ class TestExtractPipeline:
         assert one["conversation_doc"] == exp_doc
 
 
+def _zip_finders():
+    return [p for p, f in sys.path_importer_cache.items()
+            if isinstance(f, zipimport.zipimporter)]
+
+
+@pytest.fixture
+def zip_package(tmp_path):
+    """A zip holding package ``zpkg`` (modules ``a`` and ``b``) on
+    ``sys.path``; ``sys.path`` and ``sys.modules`` are restored after."""
+    path = str(tmp_path / "zpkg.zip")
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("zpkg/__init__.py", "")
+        z.writestr("zpkg/a.py", "A = 1\n")
+        z.writestr("zpkg/b.py", "B = 2\n")
+    saved_path, saved_modules = list(sys.path), dict(sys.modules)
+    sys.path.insert(0, path)
+    try:
+        yield path
+    finally:
+        sys.path[:] = saved_path
+        for name in set(sys.modules) - set(saved_modules):
+            del sys.modules[name]
+        for p in _zip_finders():
+            if p.startswith(path):
+                del sys.path_importer_cache[p]
+
+
+class TestZipFinderDrop:
+    def test_drop_keeps_zip_importable(self, zip_package):
+        a = importlib.import_module("zpkg.a")
+        assert a.__file__.startswith(zip_package)
+        assert zip_package in _zip_finders()
+        _drop_zip_finders()
+        assert _zip_finders() == []
+        b = importlib.import_module("zpkg.b")
+        assert (a.A, b.B) == (1, 2)
+        assert b.__file__.startswith(zip_package)
+
+    @pytest.mark.parametrize("close_early", [False, True])
+    def test_kernel_drops_finders_when_partition_ends(self, tmp_path,
+                                                      close_early):
+        path = str(tmp_path / "empty.zip")
+        zipfile.ZipFile(path, "w").close()
+        sys.path_importer_cache[path] = zipimport.zipimporter(path)
+        batch = pd.DataFrame({
+            "conv_id": ["c"], "turn_idx": [0],
+            "text": [synth_turn_payload("c", 0)[0]]})
+        out = make_extract_kernel(emit="csv")(iter([batch]))
+        try:
+            if close_early:
+                assert len(next(out)) == 1
+                assert path in sys.path_importer_cache
+                out.close()
+            else:
+                assert [len(f) for f in out] == [1]
+            assert path not in sys.path_importer_cache
+        finally:
+            sys.path_importer_cache.pop(path, None)
+
+
 class TestLineageResume:
     def test_resume_skips_committed(self, spark, small_input, tmp_path):
         _, _, tdf, _ = small_input
@@ -92,7 +157,7 @@ class TestLineageResume:
         assert len(first) == 2
         # the per-group job descriptions do not leak to the caller
         assert sc.getLocalProperty("spark.job.description") is None
-        assert committed_buckets(spark, f"{out}/lineage") == set(first)
+        assert committed_buckets(spark, f"{out}/lineage", "s1") == set(first)
         # resume: processes only the remaining buckets
         second = run_with_checkpoint(
             spark, tdf, out, run_id="r2", input_snapshot_id="s1",
@@ -111,6 +176,26 @@ class TestLineageResume:
             spark, tdf, out, run_id="r3", input_snapshot_id="s1",
             n_buckets=4, group_size=2)
         assert third == []
+
+    def test_new_snapshot_reprocesses_all(self, spark, small_input,
+                                          tmp_path):
+        _, _, tdf, _ = small_input
+        out = str(tmp_path / "out")
+
+        def run(snapshot):
+            return run_with_checkpoint(
+                spark, tdf, out, run_id="r", input_snapshot_id=snapshot,
+                n_buckets=4, group_size=4)
+
+        assert run("s1") == [0, 1, 2, 3]
+        assert run("s1") == []
+        # buckets committed from s1 do not count for s2
+        assert committed_buckets(spark, f"{out}/lineage", "s2") == set()
+        assert run("s2") == [0, 1, 2, 3]
+        assert run("s2") == []
+        got = spark.read.parquet(f"{out}/tables")
+        assert got.select("conv_id", "turn_idx", "table_id").distinct() \
+                  .count() == got.count()
 
 
 METRICS = ["input_rows", "extracted_tables", "malformed_turns"]
