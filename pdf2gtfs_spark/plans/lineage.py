@@ -4,11 +4,12 @@ The checkpoint unit is a *conversation bucket*: pmod(xxhash64(conv_id),
 n_buckets). Pending buckets run in commit groups of one Spark action
 each: extract + parquet write partitioned by bucket, with the lineage
 metrics observed during the write. Then one lineage row per bucket of
-the group (0 counts included) is appended. A killed job resumes by
-anti-joining pending buckets against the lineage committed from the
-same input snapshot — finished partitions are never recomputed, and a
-new snapshot of the input is processed in full (reference precedent:
-the fingerprinted OSM cache protocol, locate/osm_fetcher.py:40-100).
+the group (0 counts included) is appended as one parquet file. A
+killed job resumes by anti-joining pending buckets against the lineage
+committed from the same input snapshot — finished partitions are never
+recomputed, and a new snapshot of the input is processed in full
+(reference precedent: the fingerprinted OSM cache protocol,
+locate/osm_fetcher.py:40-100).
 
 On Iceberg this becomes snapshot-id bookkeeping; the sandbox uses
 parquet + an input fingerprint column with identical semantics.
@@ -100,8 +101,10 @@ def run_with_checkpoint(spark, transcripts_df, out_dir: str,
                      *(m[f"{k}{b}"] for k in metrics), started, time.time())
                     for b in group]
             sc.setJobDescription(f"checkpoint group {group}: lineage append")
-            literal_frame(spark, rows, LINEAGE_COLUMNS).write.mode(
-                "append").parquet(lineage_dir)
+            # one file per group: every resume and summary lists and
+            # reads all of them
+            literal_frame(spark, rows, LINEAGE_COLUMNS).coalesce(1) \
+                .write.mode("append").parquet(lineage_dir)
     finally:
         sc.setJobDescription(caller_desc)
     return [b for group in groups for b in group]

@@ -6,12 +6,12 @@ Dataflow (SURVEY.md §3.1 Spark recast):
       -> repartition(hash(conv_id, turn_idx))        # salt: per-turn
          the kernel is stateless per turn, so skewed long conversations
          spread across all executors; conv-level grouping happens only
-         at the cheap reassembly window afterwards
+         at the reassembly afterwards
       -> mapInPandas(extract kernel)                 # Arrow-batched
       -> per-table rows with nested cells/entries/stops
       -> exploded relational outputs (Catalyst-side, codegen)
-      -> per-conversation reassembly under
-         Window.partitionBy(conv_id).orderBy(turn_idx)
+      -> per-conversation reassembly: one groupBy(conv_id) shuffle of
+         the extracted rows, sorted by (turn_idx, table_id) per doc
 
 One kernel pass produces every output; the nested row avoids running
 the extraction once per output table.
@@ -27,7 +27,7 @@ import pandas as pd
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pdf2gtfs_spark.kernel.extract import extract_turn
-from pdf2gtfs_spark.sources.transcripts import TABLE_SEP
+from pdf2gtfs_spark.sources.transcripts import CONV_DOC_SEP, TABLE_SEP
 
 # Grain: one row per (turn, table); turns without tables emit one row
 # with table_id NULL so metrics/lineage cover every input turn.
@@ -154,7 +154,7 @@ def run_extract(transcripts_df, cfg: ExtractConfig = DEFAULT_CONFIG,
     (conv_id, turn_idx): needed only when the *input layout* is skewed
     (e.g. one file per conversation with 10^4-turn outliers, SURVEY.md
     §4 item 1); salting at turn grain is safe because no per-conv state
-    exists before the reassembly window, which shuffles the far smaller
+    exists before the reassembly, which shuffles the far smaller
     extracted rows.
 
     One wave for small inputs: when ``num_partitions`` is not given and
@@ -245,27 +245,36 @@ def turn_csvs(extracted):
             ))
 
 
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal of ``\\uXXXX`` escapes."""
+    return "'%s'" % "".join(f"\\u{ord(c):04X}" for c in s)
+
+
+# The separator in front of element i of a conversation's sorted
+# (turn_idx, table_id, csv_text) structs ``r``: CONV_DOC_SEP when the
+# turn changes, nothing after a table-less row (csv_text NULL; it sorts
+# first in its turn) and TABLE_SEP after any other table.
+_ELEMENT_SEP = (
+    "CASE WHEN i = 0 THEN '' WHEN NOT (r[i - 1].turn_idx <=> s.turn_idx) "
+    f"THEN {_sql_str(CONV_DOC_SEP)} WHEN r[i - 1].csv_text IS NULL "
+    f"THEN '' ELSE {_sql_str(TABLE_SEP)} END")
+
+
 def reassemble_conversations(extracted):
-    """W12: stable per-conversation output under
-    Window.partitionBy(conv_id).orderBy(turn_idx) — implemented as a
-    sort_array over collected (turn_idx, table_id) structs, which is a
-    single conv-grain shuffle with map-side partial aggregation (no
-    second windowing pass)."""
+    """W12: one document per conversation, byte-equal to the
+    CONV_DOC_SEP join of its ``turn_csvs`` texts in turn_idx order (NULL
+    first), in one conv_id shuffle with map-side partial aggregation:
+    the structs are sorted once, then joined with _ELEMENT_SEP."""
     from pyspark.sql import functions as F
 
-    per_turn = turn_csvs(extracted)
-    return (per_turn
-            .groupBy("conv_id")
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(
-                            F.struct("turn_idx", "extracted_csvs"))),
-                        lambda s: s["extracted_csvs"]),
-                    "\n\x1e\n").alias("conversation_doc"),
-                F.count("*").alias("n_turns"),
-                F.sum("n_tables").alias("n_tables"),
-            ))
+    return extracted.groupBy("conv_id").agg(
+        F.expr("array_sort(collect_list(struct(turn_idx, table_id, "
+               "csv_text))) AS r"),
+        F.expr("count(table_id) AS n_tables")).selectExpr(
+        "conv_id", f"array_join(transform(r, (s, i) -> concat({_ELEMENT_SEP}, "
+        "coalesce(s.csv_text, ''))), '') AS conversation_doc",
+        "CAST(size(array_distinct(r.turn_idx)) AS BIGINT) AS n_turns",
+        "n_tables")
 
 
 def match_rate(extracted, expected_df):

@@ -4,15 +4,16 @@
 Batch reassembly (plans.pipeline.reassemble_conversations) needs every
 turn of a conversation in one shuffle; on an unbounded turn stream the
 equivalent is a per-conversation GroupState that accumulates
-(turn_idx, csv_text) pairs and emits the finalized conversation
-document once the event-time watermark passes the conversation's last
-turn timestamp plus ``gap`` (agent transcripts carry no end marker, so
-watermarked quiescence is the close signal — session-window semantics
-with custom state).
+(turn_idx, table_id, csv_text) rows, table-less turns included, and
+emits the finalized conversation document once the event-time
+watermark passes the conversation's last turn timestamp plus ``gap``
+(agent transcripts carry no end marker, so watermarked quiescence is
+the close signal — session-window semantics with custom state).
 
-The emitted doc joins the CSVs in turn order with the same separators
-the batch reassembly uses, so a conversation closed by the stream is
-byte-equal to one produced by the batch path. State lives in the
+The emitted doc orders and joins the rows as the batch reassembly does
+(turns by turn_idx, a turn's tables by table_id; same separators), so
+a conversation closed by the stream is byte-equal to one produced by
+the batch path, with the same n_turns and n_tables. State lives in the
 streaming state store: a killed job resumes with its accumulated
 conversations intact (complements the bucket-grain lineage in
 plans.lineage).
@@ -24,13 +25,28 @@ from typing import Any, Iterable, Iterator, Tuple
 
 import pandas as pd
 
-CONV_DOC_SEP = "\n\x1e\n"   # matches plans.pipeline.reassemble_conversations
-TABLE_SEP = "\x1d"
+from pdf2gtfs_spark.sources.transcripts import CONV_DOC_SEP, TABLE_SEP
 
-STATE_SCHEMA = ("turn_idxs array<int>, csvs array<string>, "
-                "last_ts_ms bigint")
+STATE_SCHEMA = ("turn_idxs array<int>, table_ids array<int>, "
+                "csvs array<string>, last_ts_ms bigint")
 OUTPUT_SCHEMA = ("conv_id string, n_turns int, n_tables int, "
                  "conversation_doc string")
+
+
+def _doc(turn_idxs, table_ids, csvs) -> tuple[int, int, str]:
+    """(n_turns, n_tables, doc) of one conversation's rows, in batch
+    order: turns by turn_idx, a turn's rows by (table_id, csv_text)
+    with NULL first; a table-less row adds its turn but no text."""
+    def key(row):
+        return tuple((v is not None, v) for v in row)
+
+    by_turn: dict[int, list[str]] = {}
+    for t, _, c in sorted(zip(turn_idxs, table_ids, csvs), key=key):
+        cs = by_turn.setdefault(t, [])
+        if c is not None:
+            cs.append(c)
+    doc = CONV_DOC_SEP.join(TABLE_SEP.join(cs) for cs in by_turn.values())
+    return len(by_turn), sum(t is not None for t in table_ids), doc
 
 
 def _reassemble_fn(gap_ms: int):
@@ -40,35 +56,31 @@ def _reassemble_fn(gap_ms: int):
            state: GroupState) -> Iterator[pd.DataFrame]:
         (conv_id,) = key
         if state.hasTimedOut:
-            turn_idxs, csvs, _ = state.get
-            pairs = sorted(zip(turn_idxs, csvs))
-            by_turn: dict[int, list[str]] = {}
-            for t, c in pairs:
-                by_turn.setdefault(t, []).append(c)
-            doc = CONV_DOC_SEP.join(
-                TABLE_SEP.join(cs) for _, cs in sorted(by_turn.items()))
+            n_turns, n_tables, doc = _doc(*state.get[:3])
             state.remove()
             yield pd.DataFrame([{
                 "conv_id": conv_id,
-                "n_turns": len(by_turn),
-                "n_tables": len(pairs),
+                "n_turns": n_turns,
+                "n_tables": n_tables,
                 "conversation_doc": doc,
             }])
             return
         if state.exists:
-            turn_idxs, csvs, last_ts = state.get
-            turn_idxs, csvs = list(turn_idxs), list(csvs)
+            turn_idxs, table_ids, csvs = map(list, state.get[:3])
+            last_ts = state.get[3]
         else:
-            turn_idxs, csvs, last_ts = [], [], 0
+            turn_idxs, table_ids, csvs, last_ts = [], [], [], 0
         for pdf in pdfs:
             ts_ms = (pdf["ts"].astype("int64") // 1_000_000)
-            for t, c, ms in zip(pdf["turn_idx"], pdf["csv_text"], ts_ms):
-                if c is None:
-                    continue
+            for t, tid, c, ms in zip(pdf["turn_idx"], pdf["table_id"],
+                                     pdf["csv_text"], ts_ms):
+                # a table-less turn is kept: it still counts as a turn
+                # and takes its separator in the doc
                 turn_idxs.append(int(t))
-                csvs.append(str(c))
+                table_ids.append(None if pd.isna(tid) else int(tid))
+                csvs.append(None if pd.isna(c) else str(c))
                 last_ts = max(last_ts, int(ms))
-        state.update((turn_idxs, csvs, last_ts))
+        state.update((turn_idxs, table_ids, csvs, last_ts))
         # close when the watermark passes the last turn + gap
         state.setTimeoutTimestamp(last_ts + gap_ms)
         return

@@ -11,9 +11,9 @@ import pandas as pd
 import pytest
 
 from pdf2gtfs_spark.plans.pipeline import (
-    _drop_zip_finders, cells_table, entries_table, make_extract_kernel,
-    match_rate, reassemble_conversations, run_extract, stops_table,
-    turn_csvs,
+    EXTRACT_SCHEMA_CSV, _drop_zip_finders, cells_table, entries_table,
+    make_extract_kernel, match_rate, reassemble_conversations, run_extract,
+    stops_table, turn_csvs,
 )
 from pdf2gtfs_spark.plans.lineage import (
     bucket_col, committed_buckets, run_with_checkpoint,
@@ -73,15 +73,49 @@ class TestExtractPipeline:
         assert s.where("stop_name = '' OR stop_name IS NULL").count() == 0
 
     def test_reassembly_order(self, spark, extracted, small_input):
-        transcripts, expected, _, _ = small_input
-        convs = reassemble_conversations(extracted)
-        one = convs.orderBy("conv_id").limit(1).collect()[0]
-        conv_turns = expected[expected["conv_id"] == one["conv_id"]]
-        assert one["n_turns"] == len(conv_turns)
-        # document is the turn-ordered concatenation
-        exp_doc = "\n\x1e\n".join(
-            conv_turns.sort_values("turn_idx")["expected_csvs"])
-        assert one["conversation_doc"] == exp_doc
+        _, expected, _, _ = small_input
+        docs = {r["conv_id"]: r for r in
+                reassemble_conversations(extracted).collect()}
+        per_turn = turn_csvs(extracted).toPandas()
+        assert sorted(docs) == sorted(expected["conv_id"].unique())
+        for cid, doc in docs.items():
+            turns = per_turn[per_turn["conv_id"] == cid] \
+                .sort_values("turn_idx")
+            exp = expected[expected["conv_id"] == cid]
+            assert doc["n_turns"] == len(turns) == len(exp), cid
+            assert doc["n_tables"] == turns["n_tables"].sum(), cid
+            # the document is the turn-ordered concatenation
+            assert doc["conversation_doc"] == "\n\x1e\n".join(
+                turns["extracted_csvs"]), cid
+            assert doc["conversation_doc"] == "\n\x1e\n".join(
+                exp.sort_values("turn_idx")["expected_csvs"]), cid
+
+
+class TestReassemblyContract:
+    def test_edge_cases(self, spark):
+        """Table order within a turn is (table_id, csv_text), not text
+        order; a table-less turn keeps its separator and counts as a
+        turn; a table-less copy of a turn adds no separator; a NULL
+        turn_idx is a turn of its own and sorts first; a NULL conv_id
+        is a conversation of its own."""
+        rows = [("d", 1, 0, "x\n"), ("c", 2, 0, "c,3\n"),
+                ("c", 0, 1, "a,2\n"), ("d", 1, None, None),
+                (None, None, 0, "z\n"), ("c", 1, None, None),
+                ("d", 0, 0, "n\n"), ("c", 0, 0, "b,1\n"),
+                ("d", 1, 0, "w\n"), ("e", 1, 0, "q\n"),
+                ("e", None, 0, "p\n")]
+        df = spark.createDataFrame([(*r, 1, 1, False) for r in rows],
+                                   EXTRACT_SCHEMA_CSV)
+        docs = reassemble_conversations(df)
+        assert docs.schema.simpleString() == (
+            "struct<conv_id:string,conversation_doc:string,"
+            "n_turns:bigint,n_tables:bigint>")
+        assert sorted(map(tuple, docs.collect()), key=str) == [
+            ("c", "b,1\n\x1da,2\n\n\x1e\n\n\x1e\nc,3\n", 3, 3),
+            ("d", "n\n\n\x1e\nw\n\x1dx\n", 2, 3),
+            ("e", "p\n\n\x1e\nq\n", 2, 2),
+            (None, "z\n", 1, 1),
+        ]
 
 
 def _zip_finders():
@@ -196,6 +230,17 @@ class TestLineageResume:
         got = spark.read.parquet(f"{out}/tables")
         assert got.select("conv_id", "turn_idx", "table_id").distinct() \
                   .count() == got.count()
+
+    def test_one_lineage_file_per_group(self, spark, tmp_path):
+        tdf = spark.createDataFrame(_small_transcripts(3))
+        out = str(tmp_path / "out")
+        done = run_with_checkpoint(spark, tdf, out, run_id="r",
+                                   input_snapshot_id="s", n_buckets=6,
+                                   group_size=2)
+        assert done == list(range(6))
+        # three commit groups of two lineage rows each
+        assert len(list(Path(out, "lineage").glob("*.parquet"))) == 3
+        assert committed_buckets(spark, f"{out}/lineage", "s") == set(done)
 
 
 METRICS = ["input_rows", "extracted_tables", "malformed_turns"]

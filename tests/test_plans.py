@@ -51,6 +51,23 @@ class TestPlanQuality:
         assert map_idx >= 0
         assert "Exchange" not in plan[map_idx:]
 
+    def test_reassembly_shuffles_once_by_conv_id(self, spark):
+        """Reassembly groups the kernel output per conversation in one
+        exchange; no per-turn shuffle comes first."""
+        import re
+
+        from pdf2gtfs_spark.plans.pipeline import (
+            reassemble_conversations, run_extract,
+        )
+        from pdf2gtfs_spark.sources.transcripts import generate_transcripts
+
+        t, _ = generate_transcripts(n_convs=2, base_turns=2, skew_every=0,
+                                    include_fixtures=False)
+        plan = _plan(reassemble_conversations(
+            run_extract(spark.createDataFrame(t), emit="csv")))
+        exchanges = re.findall(r"Exchange (\w+)\((\w+)#", plan)
+        assert exchanges == [("hashpartitioning", "conv_id")], plan
+
     def test_small_extract_runs_one_wave(self, spark, tmp_path,
                                          set_split_bytes):
         """An input within one scan split runs the kernel in one wave of

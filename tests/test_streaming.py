@@ -92,6 +92,55 @@ class TestStatefulReassembly:
             assert docs[cid]["conversation_doc"] == b["conversation_doc"]
             assert docs[cid]["n_turns"] == b["n_turns"]
 
+    def test_closed_doc_equals_batch_doc(self, spark):
+        """Same rows, same doc: a turn's tables join in table_id order
+        (not text order) and a table-less turn keeps its separator and
+        its count, as in the batch reassembly."""
+        import pandas as pd
+
+        from pdf2gtfs_spark.plans.pipeline import (
+            EXTRACT_SCHEMA_CSV, reassemble_conversations,
+        )
+        from pdf2gtfs_spark.streaming.stateful import _reassemble_fn
+
+        class FakeState:
+            hasTimedOut, value = False, None
+
+            @property
+            def exists(self):
+                return self.value is not None
+
+            @property
+            def get(self):
+                return self.value
+
+            def update(self, value):
+                self.value = value
+
+            def remove(self):
+                self.value = None
+
+            def setTimeoutTimestamp(self, ms):
+                pass
+
+        rows = [("c", 0, 0, "b,1\n"), ("c", 0, 1, "a,2\n"),
+                ("c", 1, None, None), ("c", 2, 0, "c,3\n")]
+        pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx",
+                                          "table_id", "csv_text"])
+        pdf["ts"] = pd.Timestamp("2026-01-01")
+        fn, state = _reassemble_fn(gap_ms=1000), FakeState()
+        assert list(fn(("c",), [pdf], state)) == []
+        state.hasTimedOut = True
+        (out,) = fn(("c",), [], state)
+        got = out.iloc[0]
+        batch = reassemble_conversations(spark.createDataFrame(
+            [(*r, 1, 1, False) for r in rows], EXTRACT_SCHEMA_CSV)
+        ).collect()[0]
+        assert got["conversation_doc"] == batch["conversation_doc"]
+        assert (got["n_turns"], got["n_tables"]) == (
+            batch["n_turns"], batch["n_tables"]) == (3, 3)
+        assert not state.exists
+
 
 class TestWindowedWatermark:
     def test_late_rows_dropped_after_watermark(self, spark, tmp_path):

@@ -135,6 +135,8 @@ def main() -> None:
         # CSV texts, not raw payloads).
         from pyspark.sql import functions as F
 
+        from pdf2gtfs_spark.sources.transcripts import CONV_DOC_SEP
+
         # Materialize the per-turn surface of the SKEWED input once,
         # then time ONLY the conv-grain aggregation over it — the
         # kernel stage is out of the measurement entirely, so the pair
@@ -158,7 +160,7 @@ def main() -> None:
                      F.array_sort(F.collect_list(
                          F.struct("turn_idx", "extracted_csvs"))),
                      lambda s: s["extracted_csvs"]),
-                 "\n\x1e\n").alias("conversation_doc"),
+                 CONV_DOC_SEP).alias("conversation_doc"),
                  F.count("*").alias("n_turns"))
              .write.format("noop").mode("overwrite").save())
 
