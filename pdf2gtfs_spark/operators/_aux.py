@@ -22,7 +22,9 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-AUX_DIR = Path("/root/repo/.oracle_aux")
+# in the checkout that holds this package, so each checkout's oracles
+# read the files its own code wrote
+AUX_DIR = Path(__file__).resolve().parents[2] / ".oracle_aux"
 
 
 def aux_path(name: str) -> str:
