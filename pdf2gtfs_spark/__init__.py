@@ -7,7 +7,8 @@ Architecture (Spark-first, per BASELINE.json north_rule):
   field split -> table split -> column clustering -> typing -> timetable
   normalization) is a *pure, vectorized pandas library* in
   ``pdf2gtfs_spark.kernel`` — no Spark imports — executed on the cluster
-  via Arrow-batched ``mapInPandas`` (``pdf2gtfs_spark.plans.pipeline``).
+  via ``mapInArrow``, Arrow batches in and out
+  (``pdf2gtfs_spark.plans.pipeline``).
 - Everything around the kernel (partitioning, skew salting, reassembly
   windows, dedup, GTFS-shaping joins/windows, lineage/checkpointing) is
   declarative DataFrame/SQL so Catalyst/AQE optimizes it.

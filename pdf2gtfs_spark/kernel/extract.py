@@ -17,8 +17,10 @@ natural vectorization blueprint:
 
 The kernel works on parallel numpy arrays from decode to emit (one
 bundle per turn, one slice per table) — per-turn pandas frame churn was
-the throughput ceiling at ~55 ms/turn (ROADMAP r01 #1); DataFrames
-appear only in the TableResult accessors.
+the throughput ceiling at ~55 ms/turn (ROADMAP r01 #1).  Each table's
+cells, entries and stops leave as record lists that the pipeline packs
+into Arrow batches; DataFrames appear only in the TableResult
+accessors.
 """
 
 from __future__ import annotations
@@ -59,77 +61,58 @@ C_DATA = "DATA"
 C_REPEAT = "REPEAT"
 C_OTHER = "OTHER"
 
-_CELL_COLS = ["row_idx", "col_idx", "text", "row_type", "col_type",
-              "x0", "y0", "x1", "y1"]
-
-ENTRY_COLUMNS = [
-    "table_id", "entry_id", "kind", "header_text", "route_name",
+# Field order of the shipped cells/entries/stops structs (the pipeline's
+# EXTRACT_SCHEMA); every record dict carries exactly these keys.
+CELL_FIELDS = ["row_idx", "col_idx", "text", "row_type", "col_type",
+               "x0", "y0", "x1", "y1"]
+ENTRY_FIELDS = [
+    "entry_id", "kind", "header_text", "route_name",
     "annotations", "days", "repeat_intervals",
     "stop_pos", "stop_row_idx", "stop_name", "stop_annot",
     "is_connection", "value",
 ]
-STOP_COLUMNS = ["table_id", "stop_pos", "row_idx", "stop_name",
-                "stop_annot", "is_connection"]
+STOP_FIELDS = ["stop_pos", "row_idx", "stop_name", "stop_annot",
+               "is_connection"]
 
 
 class TableResult:
     """One extracted table of a turn.
 
-    Holds row-record lists (what the Arrow kernel ships); the DataFrame
-    accessors are built lazily from them for tests and ad-hoc use.
+    ``cells_records``, ``entries_records`` and ``stops_records`` are the
+    record lists the pipeline kernel packs into an Arrow batch, one dict
+    per struct with exactly that struct's fields.  The DataFrame
+    accessors build a fresh frame on each access; the entries and stops
+    frames lead with a ``table_id`` column.
     """
 
-    def __init__(self, csv_text: str, row_types: list[str],
+    def __init__(self, table_id: int, csv_text: str, row_types: list[str],
                  col_types: list[str], cells_records: list[dict],
                  entries_records: list[dict],
                  stops_records: list[dict]) -> None:
+        self.table_id = table_id
         self.csv_text = csv_text
         self.row_types = row_types
         self.col_types = col_types
-        self._cells_records = cells_records
-        self._entries_records = entries_records
-        self._stops_records = stops_records
-        self._frames: dict[str, pd.DataFrame] = {}
+        self.cells_records = cells_records
+        self.entries_records = entries_records
+        self.stops_records = stops_records
 
-    def _frame(self, attr: str, cols: list[str]) -> pd.DataFrame:
-        cached = self._frames.get(attr)
-        if cached is None:
-            cached = self._frames[attr] = pd.DataFrame(
-                getattr(self, f"_{attr}_records"), columns=cols)
-        return cached
+    def _frame(self, records: list[dict], cols: list[str]) -> pd.DataFrame:
+        df = pd.DataFrame(records, columns=cols)
+        df.insert(0, "table_id", self.table_id)
+        return df
 
     @property
     def cells(self) -> pd.DataFrame:
-        return self._frame("cells", _CELL_COLS)
+        return pd.DataFrame(self.cells_records, columns=CELL_FIELDS)
 
     @property
     def entries(self) -> pd.DataFrame:
-        return self._frame("entries", ENTRY_COLUMNS)
+        return self._frame(self.entries_records, ENTRY_FIELDS)
 
     @property
     def stops(self) -> pd.DataFrame:
-        return self._frame("stops", STOP_COLUMNS)
-
-    def records(self, attr: str, cols: list[str],
-                allow_extra: tuple = ()) -> list[dict]:
-        recs = getattr(self, f"_{attr}_records")
-        # fast path: the kernel builds each record list with one dict
-        # comprehension, so when the first record's keys already equal
-        # ``cols`` every record does and the per-record copy (~27% of
-        # the full-emit kernel, measured) is pure waste.  allow_extra:
-        # keys the caller's consumer drops by itself — the Arrow
-        # struct conversion matches dict keys BY NAME and ignores
-        # extras (pinned by tests), so the pipeline can ship stored
-        # records carrying table_id untouched.  Callers treat the
-        # result as read-only.
-        if recs:
-            keys = list(recs[0].keys())
-            if keys == cols:
-                return recs
-            if allow_extra and \
-                    [k for k in keys if k not in allow_extra] == cols:
-                return recs
-        return [{k: r.get(k) for k in cols} for r in recs]
+        return self._frame(self.stops_records, STOP_FIELDS)
 
 
 @dataclass
@@ -866,7 +849,7 @@ def _header_texts_for_columns(header: _Fields,
     return [str(texts[i]) for i in idx]
 
 
-def _normalize_timetable(table_id: int, a: _TableAnalysis,
+def _normalize_timetable(a: _TableAnalysis,
                          header: _Fields,
                          cfg: ExtractConfig, m: _Matchers,
                          fixed_stop_text: dict[int, str]
@@ -934,7 +917,7 @@ def _normalize_timetable(table_id: int, a: _TableAnalysis,
 
     is_conn = detect_connections(stop_names, cfg)
     stops_records = [{
-        "table_id": table_id, "stop_pos": p, "row_idx": r,
+        "stop_pos": p, "row_idx": r,
         "stop_name": nm, "stop_annot": stop_annots[p],
         "is_connection": ic,
     } for p, (r, nm, ic) in enumerate(zip(stop_rows, stop_names, is_conn))]
@@ -1027,7 +1010,7 @@ def _normalize_timetable(table_id: int, a: _TableAnalysis,
         mrow, slots = per_entry[e_id]
         for _, p, r, text in slots:
             entries_records.append({
-                "table_id": table_id, **mrow,
+                **mrow,
                 "stop_pos": p, "stop_row_idx": r,
                 "stop_name": stop_names[p] if p is not None else None,
                 "stop_annot": (stops_records[p]["stop_annot"]
@@ -1081,12 +1064,12 @@ def _process_table(table_id: int, a: _TableAnalysis,
         if len(cells) == 0:
             return None
         return TableResult(
-            csv_text=csv_text, row_types=a.rtypes,
+            table_id=table_id, csv_text=csv_text, row_types=a.rtypes,
             col_types=[a.col_types[c] for c in a.col_order],
             cells_records=[], entries_records=[], stops_records=[])
 
     entries_records, stops_records = _normalize_timetable(
-        table_id, a, header, cfg, m, fixed_stop_text)
+        a, header, cfg, m, fixed_stop_text)
 
     col_pos = {cid: i for i, cid in enumerate(a.col_order)}
     cells_records = [{
@@ -1101,6 +1084,7 @@ def _process_table(table_id: int, a: _TableAnalysis,
     if not cells_records:
         return None
     return TableResult(
+        table_id=table_id,
         csv_text=csv_text,
         row_types=a.rtypes,
         col_types=[a.col_types[c] for c in a.col_order],

@@ -22,7 +22,7 @@ predict the exact output on synthetically wrapped documents
 extractor must keep from the *raw* text — if the parser or any rule
 drifts, the value hash diverges.
 
-Pure python/pandas over Arrow batches (mapInPandas caller); no
+Pure python/pandas over Arrow batches (operators/htmlstrip.py); no
 per-row Spark UDF.
 """
 

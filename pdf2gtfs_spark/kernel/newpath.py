@@ -809,7 +809,7 @@ class TypedTable:
 
     # -- timetable (table.py:624-711) --------------------------------------
 
-    def to_timetable(self, table_id: int,
+    def to_timetable(self,
                      cfg: ExtractConfig) -> tuple[list[dict], list[dict]]:
         g, s, ty = self.grid, self.grid.store, self.typer
         o, stops = find_stops(ty)
@@ -879,8 +879,8 @@ class TypedTable:
                     valid.add(e_id)
 
         stops_records = [{
-            "table_id": table_id, "stop_pos": p, "row_idx": r,
-            "stop_name": nm, "stop_annot": an, "is_connection": ic,
+            "stop_pos": p, "row_idx": r, "stop_name": nm,
+            "stop_annot": an, "is_connection": ic,
         } for p, (r, nm, an, ic) in enumerate(
             zip(stop_rows, stop_names, stop_annots, is_conn))]
 
@@ -908,7 +908,7 @@ class TypedTable:
             if kind == "repeat":
                 repeat = interval_str_to_int_list(ent["repeat_texts"][0])
             base = {
-                "table_id": table_id, "entry_id": entry_id, "kind": kind,
+                "entry_id": entry_id, "kind": kind,
                 "header_text": ent["days_text"],
                 "route_name": ent["route_name"],
                 "annotations": sorted(ent["annotations"]),
@@ -940,10 +940,10 @@ class TypedTable:
             # same contract as the legacy path's light mode
             # (extract.py::_process_table)
             return TableResult(
-                csv_text=self.to_csv(), row_types=[], col_types=[],
-                cells_records=[], entries_records=[],
+                table_id=table_id, csv_text=self.to_csv(), row_types=[],
+                col_types=[], cells_records=[], entries_records=[],
                 stops_records=[])
-        entries_records, stops_records = self.to_timetable(table_id, cfg)
+        entries_records, stops_records = self.to_timetable(cfg)
         # ty.bbox_arr already holds every cell bbox (EmptyCells get the
         # col-x/row-y stripe union); geometry-mutating cleanup steps
         # call ty.refresh(), so it is current here
@@ -973,8 +973,8 @@ class TypedTable:
                     "col_type": TYPE_NAMES[s.strict_type(i)],
                     "x0": bb[0], "y0": bb[1], "x1": bb[2], "y1": bb[3]})
         return TableResult(
-            csv_text=self.to_csv(), row_types=[], col_types=[],
-            cells_records=recs, entries_records=entries_records,
+            table_id=table_id, csv_text=self.to_csv(), row_types=[],
+            col_types=[], cells_records=recs, entries_records=entries_records,
             stops_records=stops_records)
 
 

@@ -7,7 +7,7 @@ Dataflow (SURVEY.md §3.1 Spark recast):
          the kernel is stateless per turn, so skewed long conversations
          spread across all executors; conv-level grouping happens only
          at the reassembly afterwards
-      -> mapInPandas(extract kernel)                 # Arrow-batched
+      -> mapInArrow(extract kernel)                  # Arrow batches in/out
       -> per-table rows with nested cells/entries/stops
       -> exploded relational outputs (Catalyst-side, codegen)
       -> per-conversation reassembly: one groupBy(conv_id) shuffle of
@@ -23,7 +23,7 @@ import sys
 import zipimport
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pdf2gtfs_spark.kernel.extract import extract_turn
@@ -45,15 +45,6 @@ EXTRACT_SCHEMA = (
     "stops array<struct<stop_pos:int,row_idx:int,stop_name:string,"
     "stop_annot:string,is_connection:boolean>>"
 )
-
-_ENTRY_STRUCT_COLS = [
-    "entry_id", "kind", "header_text", "route_name", "annotations",
-    "days", "repeat_intervals", "stop_pos", "stop_row_idx",
-    "stop_name", "stop_annot", "is_connection", "value"]
-_STOP_STRUCT_COLS = ["stop_pos", "row_idx", "stop_name", "stop_annot",
-                     "is_connection"]
-_CELL_STRUCT_COLS = ["row_idx", "col_idx", "text", "row_type", "col_type",
-                     "x0", "y0", "x1", "y1"]
 
 # text-surface-only schema (emit="csv"): the per-turn equality surface
 # without the nested per-cell detail — Arrow/JVM cost per turn drops
@@ -83,64 +74,83 @@ def _drop_zip_finders() -> None:
             cache.pop(path, None)
 
 
+def _extract_ddl(emit: str, with_ts: bool) -> str:
+    ddl = EXTRACT_SCHEMA if emit == "full" else EXTRACT_SCHEMA_CSV
+    return ddl + ", ts timestamp" if with_ts else ddl
+
+
 def make_extract_kernel(cfg: ExtractConfig = DEFAULT_CONFIG,
                         emit: str = "full", with_ts: bool = False):
-    """Build the mapInPandas kernel closure (cfg is broadcast by value).
+    """Build the mapInArrow kernel closure (cfg is broadcast by value).
 
     ``emit``: "full" ships nested cells/entries/stops per table;
     "csv" ships only the text surface (see EXTRACT_SCHEMA_CSV).
     ``with_ts``: pass event time through (streaming reassembly); the
-    caller's output schema must then include a ``ts`` field.
+    output schema then ends with a ``ts`` field.
+
+    Each input Arrow batch yields one ``pa.RecordBatch`` of the output
+    schema (parsed from the DDL above, on the driver): ``from_pylist``
+    packs the per-table values and the key columns are taken over from
+    the input batch, cast to their declared types.
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(_extract_ddl(emit, with_ts)))
+    keys = [n for n in ("conv_id", "turn_idx", "ts") if n in schema.names]
+    values = pa.schema([f for f in schema if f.name not in keys])
     light = emit == "csv"
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pdf2gtfs_spark.kernel.payload import decode_payload_batch
 
         try:
-            for pdf in batches:
-                out: list[dict] = []
-                tss = pdf["ts"] if with_ts else None
+            for batch in batches:
+                src: list[int] = []     # input row of each output row
+                rows: list[dict] = []
+                texts = batch.column("text").to_pylist()
                 # one vectorized CSV parse for the whole Arrow batch
                 # (pyarrow C++ reader) instead of per-line str.split per
                 # turn — decode was ~35% of kernel time (guide §4.5)
-                decs = decode_payload_batch(list(pdf["text"]))
-                for k, (conv_id, turn_idx, payload) in enumerate(zip(
-                        pdf["conv_id"], pdf["turn_idx"], pdf["text"])):
+                for k, (payload, dec) in enumerate(
+                        zip(texts, decode_payload_batch(texts))):
                     res = extract_turn(payload, cfg, light=light,
-                                       decoded=decs[k])
-                    base = {"conv_id": conv_id, "turn_idx": int(turn_idx),
-                            "n_chars": res.n_chars, "n_fields": res.n_fields,
+                                       decoded=dec)
+                    turn = {"n_chars": res.n_chars,
+                            "n_fields": res.n_fields,
                             "malformed": res.malformed}
-                    if tss is not None:
-                        base["ts"] = tss.iloc[k]
-                    if not res.tables:
-                        row = {**base, "table_id": None, "csv_text": None}
-                        if not light:
-                            row.update(cells=None, entries=None, stops=None)
-                        out.append(row)
-                        continue
-                    for tid, t in enumerate(res.tables):
-                        row = {**base, "table_id": tid, "csv_text": t.csv_text}
-                        if not light:
-                            # allow_extra: Arrow's struct conversion maps
-                            # dict keys by name and drops extras, so the
-                            # stored records (which carry table_id for the
-                            # frame accessors) ship without a per-record
-                            # copy (~27% of this kernel, measured)
-                            row.update(
-                                cells=t.records("cells", _CELL_STRUCT_COLS),
-                                entries=t.records("entries",
-                                                  _ENTRY_STRUCT_COLS,
-                                                  allow_extra=("table_id",)),
-                                stops=t.records("stops", _STOP_STRUCT_COLS,
-                                                allow_extra=("table_id",)))
-                        out.append(row)
-                yield pd.DataFrame(out)
+                    # a table-less turn ships one row, its table
+                    # fields NULL
+                    for t in res.tables or [None]:
+                        row = dict(turn)
+                        if t is not None:
+                            row.update(table_id=t.table_id,
+                                       csv_text=t.csv_text)
+                            if not light:
+                                row.update(cells=t.cells_records,
+                                           entries=t.entries_records,
+                                           stops=t.stops_records)
+                        src.append(k)
+                        rows.append(row)
+                take = pa.array(src, pa.int32())
+                packed = pa.RecordBatch.from_pylist(rows, schema=values)
+                yield pa.RecordBatch.from_arrays([
+                    batch.column(f.name).take(take).cast(f.type)
+                    if f.name in keys else packed.column(f.name)
+                    for f in schema], schema=schema)
         finally:
             _drop_zip_finders()
 
     return kernel
+
+
+def map_extract(df, cfg: ExtractConfig = DEFAULT_CONFIG,
+                emit: str = "full", with_ts: bool = False):
+    """``df.mapInArrow`` of the extraction kernel and its output
+    schema; ``df`` needs ``conv_id``, ``turn_idx`` and ``text`` (and
+    ``ts`` with ``with_ts``)."""
+    return df.mapInArrow(make_extract_kernel(cfg, emit, with_ts),
+                         _extract_ddl(emit, with_ts))
 
 
 def run_extract(transcripts_df, cfg: ExtractConfig = DEFAULT_CONFIG,
@@ -187,8 +197,7 @@ def run_extract(transcripts_df, cfg: ExtractConfig = DEFAULT_CONFIG,
             .filesMaxPartitionBytes()
         if size <= split:
             df = df.coalesce(spark.sparkContext.defaultParallelism)
-    schema = EXTRACT_SCHEMA if emit == "full" else EXTRACT_SCHEMA_CSV
-    return df.mapInPandas(make_extract_kernel(cfg, emit=emit), schema)
+    return map_extract(df, cfg, emit)
 
 
 def cells_table(extracted):

@@ -37,6 +37,8 @@ from pdf2gtfs_spark.kernel.payload import encode_grid, encode_tables
 REFERENCE_FIXTURE_DIR = Path("/root/reference/test/data")
 TABLE_SEP = "\x1d"  # separates per-table CSVs inside expected strings
 CONV_DOC_SEP = "\n\x1e\n"  # separates turns inside a conversation doc
+TRANSCRIPT_DDL = ("conv_id string, turn_idx int, role string, "
+                  "text string, tool string, ts timestamp")
 
 TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 

@@ -13,10 +13,8 @@ is irrelevant to the per-turn invariant (SURVEY.md §2.9).
 from __future__ import annotations
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
-from pdf2gtfs_spark.plans.pipeline import EXTRACT_SCHEMA, make_extract_kernel
-
-TRANSCRIPT_DDL = ("conv_id string, turn_idx int, role string, "
-                  "text string, tool string, ts timestamp")
+from pdf2gtfs_spark.plans.pipeline import map_extract
+from pdf2gtfs_spark.sources.transcripts import TRANSCRIPT_DDL
 
 
 def stream_extract(spark, input_dir: str, output_dir: str,
@@ -32,7 +30,7 @@ def stream_extract(spark, input_dir: str, output_dir: str,
               .schema(TRANSCRIPT_DDL)
               .parquet(input_dir)
               .select("conv_id", "turn_idx", "text"))
-    extracted = stream.mapInPandas(make_extract_kernel(cfg), EXTRACT_SCHEMA)
+    extracted = map_extract(stream, cfg)
     query = (extracted.writeStream
              .format("parquet")
              .option("path", output_dir)

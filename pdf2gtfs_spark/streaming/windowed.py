@@ -13,8 +13,7 @@ the aggregation operator, so the two paths cannot drift.
 
 from __future__ import annotations
 
-TRANSCRIPT_DDL = ("conv_id string, turn_idx int, role string, "
-                  "text string, tool string, ts timestamp")
+from pdf2gtfs_spark.sources.transcripts import TRANSCRIPT_DDL
 
 
 def stream_turn_rate(spark, inp: str, out: str, ckpt: str,

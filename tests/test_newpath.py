@@ -360,7 +360,7 @@ class TestStoplessTimeRowCollapse:
         (k1, (r1, c1)), (k2, (r2, c2)) = stops[1], stops[2]
         ty.strict[r1, c1] = ct.OTHER
         ty.strict[r2, c2] = ct.OTHER
-        er, _ = tt.to_timetable(0, NEW_CFG)
+        er, _ = tt.to_timetable(NEW_CFG)
         assert er, "timetable must survive with >= 3 remaining stops"
         by_entry: dict = {}
         for row in er:

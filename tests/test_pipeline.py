@@ -8,6 +8,7 @@ import zipimport
 from pathlib import Path
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from pdf2gtfs_spark.plans.pipeline import (
@@ -157,14 +158,15 @@ class TestZipFinderDrop:
         assert b.__file__.startswith(zip_package)
 
     @pytest.mark.parametrize("close_early", [False, True])
-    def test_kernel_drops_finders_when_partition_ends(self, tmp_path,
-                                                      close_early):
+    def test_kernel_drops_finders_when_partition_ends(
+            self, spark, tmp_path, close_early):
         path = str(tmp_path / "empty.zip")
         zipfile.ZipFile(path, "w").close()
         sys.path_importer_cache[path] = zipimport.zipimporter(path)
-        batch = pd.DataFrame({
+        batch = pa.RecordBatch.from_pydict({
             "conv_id": ["c"], "turn_idx": [0],
             "text": [synth_turn_payload("c", 0)[0]]})
+        # the output schema is parsed on the driver: needs a session
         out = make_extract_kernel(emit="csv")(iter([batch]))
         try:
             if close_early:
@@ -354,24 +356,32 @@ class TestLineageMetrics:
                   .dropna().count() == len(rows) - 2
 
 
-class TestArrowStructContract:
-    def test_struct_conversion_drops_extra_dict_keys_by_name(self, spark):
-        # The full-emit kernel ships stored record dicts that carry a
-        # table_id key the pipeline struct schema does not declare
-        # (TableResult.records allow_extra); this pins the Arrow
-        # behavior that makes that safe: struct fields are matched by
-        # dict key NAME and undeclared keys are dropped.
-        import pandas as pd
+class TestRecordLayout:
+    """Every shipped record carries exactly its struct's fields, in
+    EXTRACT_SCHEMA order; the entries and stops frames add table_id."""
 
-        def kern(batches):
-            for _ in batches:
-                yield pd.DataFrame({
-                    "id": [1],
-                    "ents": [[{"table_id": 9, "a": 5, "b": "x"},
-                              {"b": "y", "a": 6, "table_id": 8}]],
-                })
+    @pytest.mark.parametrize("surface", ["legacy", "newpath"])
+    def test_records_carry_exactly_the_struct_fields(self, spark, surface):
+        from pyspark.sql.types import StructType
 
-        out = (spark.range(1).toDF("x")
-               .mapInPandas(kern, "id int, ents array<struct<a:int, b:string>>")
-               .collect())
-        assert [tuple(r) for r in out[0].ents] == [(5, "x"), (6, "y")]
+        from pdf2gtfs_spark.kernel.extract import extract_turn
+        from pdf2gtfs_spark.plans.pipeline import EXTRACT_SCHEMA
+        from test_output_corpus import SURFACES, corpus_payload
+
+        structs = {f.name: f.dataType.elementType.names
+                   for f in StructType.fromDDL(EXTRACT_SCHEMA).fields
+                   if f.name in ("cells", "entries", "stops")}
+        seen = {name: 0 for name in structs}
+        for family, seed in [("v2", 0), ("v3", 1), ("v4", 2), ("v5", 3)]:
+            res = extract_turn(corpus_payload(family, seed),
+                               SURFACES[surface])
+            for t in res.tables:
+                for name, fields in structs.items():
+                    for rec in getattr(t, f"{name}_records"):
+                        assert list(rec) == fields, (name, list(rec))
+                        seen[name] += 1
+                assert list(t.cells.columns) == structs["cells"]
+                for name in ("entries", "stops"):
+                    assert list(getattr(t, name).columns) == [
+                        "table_id", *structs[name]]
+        assert all(seen.values()), seen

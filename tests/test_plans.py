@@ -39,7 +39,7 @@ class TestPlanQuality:
     def test_extract_has_no_pre_kernel_shuffle(self, spark):
         """The stateless kernel maps over the scan partitions (narrowly
         coalesced when small); no Exchange may appear below
-        MapInPandas."""
+        MapInArrow."""
         from pdf2gtfs_spark.plans.pipeline import run_extract
         from pdf2gtfs_spark.sources.transcripts import generate_transcripts
 
@@ -47,7 +47,7 @@ class TestPlanQuality:
                                     include_fixtures=False)
         df = run_extract(spark.createDataFrame(t))
         plan = _plan(df)
-        map_idx = plan.find("MapInPandas")
+        map_idx = plan.find("MapInArrow")
         assert map_idx >= 0
         assert "Exchange" not in plan[map_idx:]
 
@@ -71,7 +71,7 @@ class TestPlanQuality:
     def test_small_extract_runs_one_wave(self, spark, tmp_path,
                                          set_split_bytes):
         """An input within one scan split runs the kernel in one wave of
-        defaultParallelism tasks (a narrow Coalesce below MapInPandas);
+        defaultParallelism tasks (a narrow Coalesce below MapInArrow);
         a larger input keeps one kernel task per scan split."""
         from pdf2gtfs_spark.plans.pipeline import run_extract
         from pdf2gtfs_spark.sources.transcripts import generate_transcripts
@@ -90,7 +90,7 @@ class TestPlanQuality:
         set_split_bytes("4m")
         df = run_extract(tdf, emit="csv")
         plan = _plan(df)
-        assert 0 <= plan.find("MapInPandas") < plan.find("Coalesce")
+        assert 0 <= plan.find("MapInArrow") < plan.find("Coalesce")
         assert df.rdd.getNumPartitions() == cores
         size = tdf._jdf.queryExecution().optimizedPlan().stats() \
             .sizeInBytes()
@@ -140,7 +140,7 @@ class TestPlanQuality:
     def test_skew_salting_and_aqe(self, spark):
         """SURVEY §4 item 1: run_extract(num_partitions=N) salts the
         kernel input on (conv_id, turn_idx) — the plan must show the
-        turn-grain hash exchange below MapInPandas — and AQE skew-join
+        turn-grain hash exchange below MapInArrow — and AQE skew-join
         splitting stays available for the join-heavy operators
         (evidence: tools/skew_bench.py, BENCH/BASELINE.md round-4
         section, 0.815 efficiency on the monster-conversation input)."""
@@ -150,7 +150,7 @@ class TestPlanQuality:
             [("c0", i, "x") for i in range(8)],
             "conv_id string, turn_idx int, text string")
         plan = _plan(run_extract(tdf, num_partitions=4, emit="csv"))
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
         assert "hashpartitioning(conv_id" in plan
         assert "Coalesce" not in plan
         assert "turn_idx" in plan.split("hashpartitioning")[1][:80]

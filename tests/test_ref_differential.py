@@ -151,7 +151,7 @@ def ref_timetable(table):
 
 def repo_timetable(tt, cfg=NEW_CFG):
     """Normalized repo timetable records: (stops, entries)."""
-    er, sr = tt.to_timetable(0, cfg)
+    er, sr = tt.to_timetable(cfg)
     if not sr:
         return None
     stops = [(r["stop_name"], (r["stop_annot"] or "").strip(),
@@ -946,13 +946,7 @@ class TestLegacySurface:
         res = extract_turn(payload, DEFAULT_CONFIG)
         out = []
         for t in res.tables:
-            sr = t.records("stops", ["stop_pos", "row_idx", "stop_name",
-                                     "stop_annot", "is_connection"])
-            er = t.records(
-                "entries",
-                ["entry_id", "kind", "route_name", "annotations",
-                 "days", "repeat_intervals", "stop_pos",
-                 "stop_row_idx", "value"])
+            sr, er = t.stops_records, t.entries_records
             tt = None
             # stop-less entries survive in BOTH engines (values collapse
             # onto the None key, table.py:127 + stops.py:53-57), so a

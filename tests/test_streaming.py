@@ -44,8 +44,7 @@ class TestStatefulReassembly:
         from datetime import timedelta
 
         from pdf2gtfs_spark.plans.pipeline import (
-            EXTRACT_SCHEMA_CSV, make_extract_kernel,
-            reassemble_conversations, run_extract,
+            map_extract, reassemble_conversations, run_extract,
         )
         from pdf2gtfs_spark.streaming.stateful import stream_reassemble
 
@@ -61,9 +60,7 @@ class TestStatefulReassembly:
         def run_once():
             stream = (spark.readStream.schema(TRANSCRIPT_DDL).parquet(inp)
                       .select("conv_id", "turn_idx", "text", "ts"))
-            extracted = stream.mapInPandas(
-                make_extract_kernel(emit="csv", with_ts=True),
-                EXTRACT_SCHEMA_CSV + ", ts timestamp")
+            extracted = map_extract(stream, emit="csv", with_ts=True)
             q = (stream_reassemble(extracted).writeStream
                  .format("parquet").option("path", out)
                  .option("checkpointLocation", ckpt)
