@@ -119,17 +119,16 @@ def make_extract_kernel(cfg: ExtractConfig = DEFAULT_CONFIG,
                     turn = {"n_chars": res.n_chars,
                             "n_fields": res.n_fields,
                             "malformed": res.malformed}
-                    # a table-less turn ships one row, its table
-                    # fields NULL
-                    for t in res.tables or [None]:
-                        row = dict(turn)
-                        if t is not None:
-                            row.update(table_id=t.table_id,
-                                       csv_text=t.csv_text)
-                            if not light:
-                                row.update(cells=t.cells_records,
-                                           entries=t.entries_records,
-                                           stops=t.stops_records)
+                    if not res.tables:  # one row, table fields NULL
+                        src.append(k)
+                        rows.append(turn)
+                    for t in res.tables:
+                        row = {**turn, "table_id": t.table_id,
+                               "csv_text": t.csv_text}
+                        if not light:
+                            row.update(cells=t.cells_records,
+                                       entries=t.entries_records,
+                                       stops=t.stops_records)
                         src.append(k)
                         rows.append(row)
                 take = pa.array(src, pa.int32())
