@@ -106,7 +106,8 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession, functions as F
 
-    from pdf2gtfs_spark.plans.lineage import run_with_checkpoint
+    from pdf2gtfs_spark.plans.lineage import (
+        LINEAGE_COLUMNS, output_dir, run_with_checkpoint)
     from pdf2gtfs_spark.plans.pipeline import match_rate, turn_csvs
 
     # master / memory / shuffle width come from spark-submit --conf;
@@ -133,7 +134,8 @@ def main(argv: list[str] | None = None) -> int:
         num_partitions=args.num_partitions)
 
     # lineage of earlier input snapshots may sit in the same directory
-    lineage = spark.read.parquet(args.output + "/lineage").where(
+    lineage = spark.read.schema(LINEAGE_COLUMNS).parquet(
+        output_dir(args.output, "lineage")).where(
         F.col("input_snapshot_id") == snapshot)
     totals = lineage.agg(
         F.countDistinct("bucket").alias("committed_buckets"),
@@ -151,7 +153,7 @@ def main(argv: list[str] | None = None) -> int:
         "malformed_turns": totals["malformed_turns"],
     }
     if args.expected:
-        extracted = spark.read.parquet(args.output + "/tables")
+        extracted = spark.read.parquet(output_dir(args.output, "tables"))
         exp = spark.read.parquet(args.expected)
         # resume runs cover only their own buckets, but `tables` holds
         # every committed bucket, so the rate is over all committed work
@@ -160,7 +162,7 @@ def main(argv: list[str] | None = None) -> int:
         summary["matched_turns"] = per_turn.where("match").count()
     else:
         summary["distinct_turns"] = (
-            turn_csvs(spark.read.parquet(args.output + "/tables"))
+            turn_csvs(spark.read.parquet(output_dir(args.output, "tables")))
             .count())
 
     # single parseable line, matching the bench.py contract

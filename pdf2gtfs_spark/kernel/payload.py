@@ -146,6 +146,10 @@ def decode_payload_batch(payloads: Sequence[str]) -> list:
             out[i] = MalformedPayload(str(e))
             continue
         body = payload[nl + 1:] if nl >= 0 else ""
+        # encode_chars ends every line with "\n"; drop that one so a
+        # clean body takes the fast path below
+        if body.endswith("\n"):
+            body = body[:-1]
         # fast shape check without splitting: a clean body has exactly
         # 4 tabs per line. The total-count test is necessary but not
         # sufficient (a 5-tab and a 3-tab line can balance); pyarrow's

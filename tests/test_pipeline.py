@@ -16,8 +16,10 @@ from pdf2gtfs_spark.plans.pipeline import (
     make_extract_kernel, match_rate, reassemble_conversations, run_extract,
     stops_table, turn_csvs,
 )
+from pdf2gtfs_spark.plans import lineage
 from pdf2gtfs_spark.plans.lineage import (
-    bucket_col, committed_buckets, run_with_checkpoint,
+    LINEAGE_COLUMNS, bucket_col, committed_buckets, output_dir,
+    run_with_checkpoint,
 )
 from pdf2gtfs_spark.sources.transcripts import (
     generate_transcripts, synth_turn_payload,
@@ -244,6 +246,109 @@ class TestLineageResume:
         assert len(list(Path(out, "lineage").glob("*.parquet"))) == 3
         assert committed_buckets(spark, f"{out}/lineage", "s") == set(done)
 
+    def test_commit_leaves_whole_files_of_the_declared_schema(
+            self, spark, tmp_path):
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+        import pyarrow.parquet as pq
+
+        tdf = spark.createDataFrame(_small_transcripts(3))
+        out = tmp_path / "out"
+        run_with_checkpoint(spark, tdf, str(out), run_id="r",
+                            input_snapshot_id="s", n_buckets=6,
+                            group_size=2)
+        names = sorted(p.name for p in (out / "lineage").iterdir())
+        # no temp file (or its checksum) outlives its rename
+        assert not [n for n in names if ".tmp" in n], names
+        declared = StructType.fromDDL(LINEAGE_COLUMNS)
+        files = [out / "lineage" / n for n in names
+                 if not n.startswith(("_", "."))]
+        assert len(files) == 3
+        for f in files:
+            assert pq.read_schema(f).equals(to_arrow_schema(declared))
+            assert spark.read.parquet(str(f)).schema == declared
+            assert spark.read.schema(LINEAGE_COLUMNS).parquet(str(f)) \
+                .count() == 2
+        assert spark.read.parquet(str(out / "lineage")).schema == declared
+
+    def test_resume_reads_lineage_without_a_spark_job(self, spark,
+                                                      tmp_path):
+        tdf = spark.createDataFrame(_small_transcripts(3))
+        out = str(tmp_path / "out")
+        args = dict(run_id="r", input_snapshot_id="s", n_buckets=4,
+                    group_size=2)
+        run_with_checkpoint(spark, tdf, out, **args)
+        sc = spark.sparkContext
+        sc.setJobGroup("lineage-read", "resume")
+        try:
+            assert committed_buckets(spark, f"{out}/lineage", "s") \
+                == {0, 1, 2, 3}
+            # nothing pending: the resume ends without running a job
+            assert run_with_checkpoint(spark, tdf, out, **args) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        assert sc.statusTracker().getJobIdsForGroup("lineage-read") == []
+
+    def test_reads_lineage_that_spark_wrote(self, spark, small_input,
+                                            tmp_path):
+        from pdf2gtfs_spark.sources import literal_frame
+
+        _, _, tdf, _ = small_input
+        out = tmp_path / "out"
+        # the earlier layout: Spark appends, one file per commit group,
+        # with _SUCCESS and .crc files beside the snappy parquet parts
+        for rows in ([("r0", "s", 0, 1, 1, 0, 0.0, 1.0),
+                      ("r0", "s", 1, 2, 2, 0, 0.0, 1.0)],
+                     [("r0", "old", 2, 3, 3, 0, 0.0, 1.0)]):
+            literal_frame(spark, rows, LINEAGE_COLUMNS).coalesce(1) \
+                .write.mode("append").parquet(str(out / "lineage"))
+        names = [p.name for p in (out / "lineage").iterdir()]
+        assert "_SUCCESS" in names
+        assert any(n.endswith(".snappy.parquet.crc") for n in names)
+        assert committed_buckets(spark, str(out / "lineage"), "s") == {0, 1}
+        # a resume appends the driver's files next to Spark's
+        assert run_with_checkpoint(
+            spark, tdf, str(out), run_id="r1", input_snapshot_id="s",
+            n_buckets=4, group_size=4) == [2, 3]
+        assert committed_buckets(spark, str(out / "lineage"), "s") \
+            == {0, 1, 2, 3}
+        got = spark.read.schema(LINEAGE_COLUMNS).parquet(str(out / "lineage"))
+        assert sorted((r["input_snapshot_id"], r["bucket"])
+                      for r in got.collect()) == [
+            ("old", 2), ("s", 0), ("s", 1), ("s", 2), ("s", 3)]
+
+    def test_file_uri_output_resumes(self, spark, small_input, tmp_path):
+        _, _, tdf, _ = small_input
+        out = (tmp_path / "out").as_uri()
+        assert out.startswith("file:///")
+        args = dict(input_snapshot_id="s", n_buckets=4, group_size=2)
+        first = run_with_checkpoint(spark, tdf, out, run_id="r1",
+                                    max_groups=1, **args)
+        assert committed_buckets(spark, f"{out}/lineage", "s") == set(first)
+        rest = run_with_checkpoint(spark, tdf, out, run_id="r2", **args)
+        assert sorted(first + rest) == [0, 1, 2, 3]
+        assert set(first).isdisjoint(rest)
+        lin = spark.read.schema(LINEAGE_COLUMNS).parquet(
+            f"{out}/lineage").collect()
+        assert sorted(r["bucket"] for r in lin) == [0, 1, 2, 3]
+        assert sum(r["input_rows"] for r in lin) == tdf.count()
+
+    def test_uri_output_keeps_its_authority(self, spark, monkeypatch):
+        seen = []
+
+        def all_committed(spark, lineage_dir, input_snapshot_id):
+            seen.append(lineage_dir)
+            return set(range(4))
+
+        monkeypatch.setattr(lineage, "committed_buckets", all_committed)
+        assert run_with_checkpoint(spark, None, "hdfs://nn:8020/out",
+                                   run_id="r", input_snapshot_id="s",
+                                   n_buckets=4) == []
+        assert seen == ["hdfs://nn:8020/out/lineage"]
+        assert output_dir("hdfs://nn:8020/out/", "tables") \
+            == "hdfs://nn:8020/out/tables"
+
 
 METRICS = ["input_rows", "extracted_tables", "malformed_turns"]
 MALFORMED = "PAGE\tbad\t0\t600\t99\n1\t1\t6\t9\tx\n"
@@ -301,10 +406,10 @@ class TestLineageMetrics:
             sc.setJobDescription(None)
         assert done == list(range(self.N_BUCKETS))
         assert desc == "caller description"
-        # one extract+write action, one lineage append; no cached frame
-        # left behind (the metrics come from the write itself)
+        # one extract+write job; the driver commits the lineage file.
+        # No cached frame left behind (the metrics come from the write)
         jobs = sc.statusTracker().getJobIdsForGroup("lineage-one-group")
-        assert len(jobs) <= 2, jobs
+        assert len(jobs) == 1, jobs
         assert set(sc._jsc.getPersistentRDDs().keys()) == persisted
         # the small input ran as one wave of kernel tasks, each writing
         # at most one file per bucket (not one task per input file)
