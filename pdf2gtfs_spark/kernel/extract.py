@@ -55,6 +55,14 @@ R_OTHER = "OTHER"
 R_ANNOTATION = "ANNOTATION"
 R_ROUTE_INFO = "ROUTE_INFO"
 
+# field types as int8 codes (_Fields.ftype): the first four are the row
+# type ladder's rungs (ROW_LADDER below), in its order
+FIELD_TYPES = (F_HEADER, F_ROW_ANNOT, F_ROUTE_INFO, F_DATA, F_REPEAT,
+               F_STOP_ANNOT, F_OTHER)
+_FT_HEADER, _FT_DATA, _FT_STOP_ANNOT = (
+    FIELD_TYPES.index(t) for t in (F_HEADER, F_DATA, F_STOP_ANNOT))
+_FT_CODE = {t: i for i, t in enumerate(FIELD_TYPES)}
+
 C_STOP = "STOP"
 C_STOP_ANNOTATION = "STOP_ANNOTATION"
 C_DATA = "DATA"
@@ -149,54 +157,63 @@ class _Matchers:
                 ("route", _contains_regex(cfg.route_identifier))]:
             comp[name] = re.compile(rx) if rx else None
         self._c = comp
-        self._ftype_memo: dict[str, str] = {}
+        self._ftype_memo: dict[str, int] = {}
         self.time_re, self.time_order = time_format_to_regex(cfg.time_format)
         # repeat-interval extraction regex per identifier pair
-        # (pdftable/container.py:304-313)
-        self.interval_res = [
-            re.compile(
-                rf".*{re.escape(start)}\s*"
-                r"(\d{1,3}[-,]\ *\d{1,3}|\d{1,3})"
-                rf"\s*{re.escape(end)}.*",
-                flags=re.I | re.U)
+        # (pdftable/container.py:304-313); ``.*`` matches the empty
+        # string, so a findall finds something iff its core occurs
+        cores = [
+            rf"{re.escape(start)}\s*"
+            r"(\d{1,3}[-,]\ *\d{1,3}|\d{1,3})"
+            rf"\s*{re.escape(end)}"
             for start, end in cfg.repeat_identifier
         ]
+        self.interval_res = [re.compile(f".*{core}.*", flags=re.I | re.U)
+                             for core in cores]
+        self.repeat_core_re = (re.compile("|".join(cores), flags=re.I | re.U)
+                               if cores else None)
 
-    def field_types_list(self, texts) -> list[str]:
-        """Field-type ladder (pdftable/field.py:32-55). Direct compiled
-        re.search per string beats pandas str.contains ~10x at tens of
-        strings per turn (no Series/Index churn). The ladder is a pure
-        function of the text, and time strings / stop names repeat
-        heavily across turns -> memoized per matcher instance (capped;
-        one matcher lives per Arrow-kernel worker)."""
-        c = self._c
+    def field_type_codes(self, texts: list[str]) -> np.ndarray:
+        """Field-type ladder (pdftable/field.py:32-55) as FIELD_TYPES
+        codes. Direct compiled re.search per string beats pandas
+        str.contains ~10x at tens of strings per turn (no Series/Index
+        churn). The ladder is a pure function of the text, and time
+        strings / stop names repeat heavily across turns -> memoized per
+        matcher instance (capped; one matcher lives per Arrow-kernel
+        worker) and probed in one C-level map."""
         memo = self._ftype_memo
-        out = []
-        for t in texts:
-            cached = memo.get(t)
-            if cached is not None:
-                out.append(cached)
-                continue
-            padded = f" {t.lower().strip()} "
-            if (c["header"] and c["header"].search(padded)
-                    and not (c["neg"] and c["neg"].search(padded))):
-                r = F_HEADER
-            elif c["repeat"] and c["repeat"].search(padded):
-                r = F_REPEAT
-            elif is_time_str(t, self.time_re, self.time_order):
-                r = F_DATA
-            elif c["stop_annot"] and c["stop_annot"].search(padded):
-                r = F_STOP_ANNOT
-            elif c["row_annot"] and c["row_annot"].search(padded):
-                r = F_ROW_ANNOT
-            elif c["route"] and c["route"].search(padded):
-                r = F_ROUTE_INFO
-            else:
-                r = F_OTHER
-            if len(memo) < 200_000:
-                memo[t] = r
-            out.append(r)
-        return out
+        out = list(map(memo.get, texts))
+        if None in out:
+            for i, t in enumerate(texts):
+                if out[i] is None:
+                    out[i] = _FT_CODE[self._field_type(t)]
+                    if len(memo) < 200_000:
+                        memo[t] = out[i]
+        return np.array(out, dtype=np.int8)
+
+    def _field_type(self, t: str) -> str:
+        c = self._c
+        padded = f" {t.lower().strip()} "
+        if (c["header"] and c["header"].search(padded)
+                and not (c["neg"] and c["neg"].search(padded))):
+            return F_HEADER
+        if c["repeat"] and c["repeat"].search(padded):
+            return F_REPEAT
+        if is_time_str(t, self.time_re, self.time_order):
+            return F_DATA
+        if c["stop_annot"] and c["stop_annot"].search(padded):
+            return F_STOP_ANNOT
+        if c["row_annot"] and c["row_annot"].search(padded):
+            return F_ROW_ANNOT
+        if c["route"] and c["route"].search(padded):
+            return F_ROUTE_INFO
+        return F_OTHER
+
+    def may_repeat(self, text: str) -> bool:
+        """False when ``repeat_intervals`` finds nothing in ``text`` nor
+        in any substring of it."""
+        return (self.repeat_core_re is not None
+                and self.repeat_core_re.search(text) is not None)
 
     def repeat_intervals(self, joined_text: str) -> list[str]:
         """All repeat intervals in a column's newline-joined text
@@ -233,8 +250,34 @@ def cleanup_char_arrays(arrs: dict, page: PageBox) -> dict:
     keep = ((x0 < x1) & (y0 < y1)
             & (x0 >= page.x0) & (x1 <= page.x1)
             & (y0 >= page.y0) & (y1 <= page.y1))
+    if keep.all():
+        # the common case: every box is on the page, nothing to take
+        return {"x0": x0, "y0": y0, "x1": x1, "y1": y1,
+                "text": arrs["text"]}
     return {"x0": x0[keep], "y0": y0[keep], "x1": x1[keep],
             "y1": y1[keep], "text": arrs["text"][keep]}
+
+
+def _int_keys(rows: np.ndarray) -> tuple[np.ndarray, float, list]:
+    """Per row of a 2-D float block: non-negative int64 keys below
+    2**31 that order the row exactly as its floats compare (equal keys
+    iff equal values), with the scale and per-row base that map keys
+    back to values: ``(keys + base) / scale``, or ``base[keys]`` at
+    scale 0.
+
+    2-decimal values (what cleanup_char_arrays leaves, |v| < 2**30 /
+    100) key as ``rint(v * 100)`` at scale 100, checked exactly: such a
+    v is the double nearest k / 100, and division is monotone.  Any
+    other block keys by dense rank at scale 0 (a sort per row; NaNs
+    last and equal, as lexsort orders them)."""
+    k = np.rint(rows * 100)
+    low = k.min(axis=1, keepdims=True)
+    if ((k / 100 == rows).all() and low.min() > -2 ** 30
+            and k.max() < 2 ** 30):
+        return (k - low).astype(np.int64), 100.0, list(low[:, 0])
+    ranked = [np.unique(r, return_inverse=True) for r in rows]
+    return (np.stack([inv for _, inv in ranked]).astype(np.int64), 0.0,
+            [uniq for uniq, _ in ranked])
 
 
 def _anchor_cluster(sorted_vals: np.ndarray, threshold: float) -> np.ndarray:
@@ -242,17 +285,37 @@ def _anchor_cluster(sorted_vals: np.ndarray, threshold: float) -> np.ndarray:
     where anchor is the first value of the current cluster
     (reference: reader.py:369-383). Input must be sorted ascending and
     unique; loops over clusters (lines), not members (chars)."""
-    ids = np.zeros(len(sorted_vals), dtype=np.int64)
-    if len(sorted_vals) == 0:
-        return ids
-    anchor = sorted_vals[0]
-    cur = 0
-    for i in range(1, len(sorted_vals)):
-        if sorted_vals[i] - anchor > threshold:
-            cur += 1
-            anchor = sorted_vals[i]
-        ids[i] = cur
-    return ids
+    vals = sorted_vals.tolist()
+    ids = [0] * len(vals)
+    if vals:
+        anchor = vals[0]
+        cur = 0
+        for i, v in enumerate(vals):
+            if v - anchor > threshold:
+                cur += 1
+                anchor = v
+            ids[i] = cur
+    return np.array(ids, dtype=np.int64)
+
+
+def _field_texts(texts: np.ndarray, order: np.ndarray,
+                 starts: np.ndarray) -> list[str]:
+    """``"".join(texts[order][s:e]).strip()`` for each segment [s, e)
+    that ``starts`` opens, as one join split back on a separator put at
+    every segment start.  When every text is one ASCII char without a
+    tab (the common case: one glyph per char box) the permutation and
+    the separators work on the bytes of one join; otherwise on the
+    object array, with a tab, or the first code point no text holds."""
+    joined = "".join(texts.tolist())
+    if (len(joined) == len(texts) and joined.isascii()
+            and "\t" not in joined):
+        raw = np.frombuffer(joined.encode("ascii"), np.uint8)
+        cut = np.insert(raw[order], starts[1:], 9).tobytes().decode("ascii")
+        return list(map(str.strip, cut.split("\t")))
+    sep = "\t" if "\t" not in joined else next(
+        c for c in map(chr, range(1, 0x110000)) if c not in joined)
+    cut = "".join(np.insert(texts[order], starts[1:], sep).tolist())
+    return list(map(str.strip, cut.split(sep)))
 
 
 @dataclass
@@ -265,7 +328,7 @@ class _Fields:
     x1: np.ndarray
     y1: np.ndarray
     line_id: np.ndarray   # int64
-    ftype: np.ndarray     # object (set after typing)
+    ftype: np.ndarray     # int8 FIELD_TYPES codes (set after typing)
 
     def __len__(self) -> int:
         return len(self.text)
@@ -294,65 +357,57 @@ def chars_to_field_arrays(chars: dict, cfg: ExtractConfig) -> _Fields:
         return _Fields(*[np.array([], dtype=object)]
                        + [np.array([], dtype=float)] * 4
                        + [np.array([], dtype=np.int64), None])
-    cx0 = np.asarray(chars["x0"], dtype=float)
-    cy0 = np.asarray(chars["y0"], dtype=float)
-    cx1 = np.asarray(chars["x1"], dtype=float)
-    cy1 = np.asarray(chars["y1"], dtype=float)
-    ctext = np.asarray(chars["text"], dtype=object)
-    line_threshold = round(float((cy1 - cy0).mean())) / 2
+    box = np.stack([np.asarray(chars[c], dtype=float)
+                    for c in ("x0", "y0", "x1", "y1")])
+    line_threshold = round(float((box[3] - box[1]).mean())) / 2
 
-    order = np.lexsort((cx0, cy0))            # stable (y0, x0)
-    cx0, cy0, cx1, cy1, ctext = (a[order] for a in
-                                 (cx0, cy0, cx1, cy1, ctext))
-    uniq_y0 = np.unique(cy0)                  # ascending
+    # stable (y0, x0) order as ONE argsort of an int64 key: the same
+    # order and ties as np.lexsort((x0, y0)), at a third of its cost
+    (kx, ky, kx1), scale, bases = _int_keys(box[:3])
+    order = np.argsort((ky << 32) | kx, kind="stable")
+    ky = ky[order]
+    new_y = np.empty(len(ky), dtype=bool)
+    new_y[0] = True
+    np.not_equal(ky[1:], ky[:-1], out=new_y[1:])
+    uniq_y0 = box[1, order[new_y]]             # ascending
     line_of_y0 = _anchor_cluster(uniq_y0, line_threshold)
-    line_id = line_of_y0[np.searchsorted(uniq_y0, cy0)]
+    line_id = line_of_y0[np.cumsum(new_y) - 1]
 
-    order = np.lexsort((cx0, line_id))        # stable (line, x0)
-    cx0, cy0, cx1, cy1, ctext, line_id = (
-        a[order] for a in (cx0, cy0, cx1, cy1, ctext, line_id))
+    # stable (line, x0): a line spanning several y0 values needs a
+    # re-sort; when every line has one y0 the order already holds
+    key = (line_id << 32) | kx[order]
+    resorted = bool((key[1:] < key[:-1]).any())
+    if resorted:
+        by_line = np.argsort(key, kind="stable")
+        order = order[by_line]
+        line_id = line_id[by_line]
+    box = np.take(box, order, axis=1)
 
-    n = len(cx0)
-    new_line = np.empty(n, dtype=bool)
-    new_line[0] = True
-    new_line[1:] = line_id[1:] != line_id[:-1]
-    # per-line running max of x1 (segments are contiguous)
-    runmax = np.maximum.accumulate(cx1)
-    line_starts = np.flatnonzero(new_line)
-    for s, e in zip(line_starts, np.append(line_starts[1:], n)):
-        runmax[s:e] = np.maximum.accumulate(cx1[s:e])
-    is_new = new_line.copy()
-    is_new[1:] |= (cx0[1:] - runmax[:-1]) > cfg.max_char_distance
-    is_new[line_starts] = True
+    is_new = np.empty(len(order), dtype=bool)
+    is_new[0] = True
+    np.not_equal(line_id[1:], line_id[:-1], out=is_new[1:])
+    # per-line running max of x1 as one accumulate over int keys that
+    # carry the line in their high bits, mapped back to the exact
+    # floats (segments are contiguous)
+    runmax = np.maximum.accumulate((line_id << 32) | kx1[order]) & 0xFFFFFFFF
+    runmax = (runmax + bases[2]) / scale if scale else bases[2][runmax]
+    is_new[1:] |= (box[0, 1:] - runmax[:-1]) > cfg.max_char_distance
 
     starts = np.flatnonzero(is_new)
-    ends = np.append(starts[1:], n)
-    # one join over the whole page, then C-level slices per field: the
-    # per-field "".join over object-array slices was ~10% of the kernel
-    # (guide §1.2 "per-task work"). In the common all-1-glyph case the
-    # char index IS the string offset; otherwise build offsets once.
-    joined = "".join(ctext)
-    if len(joined) == n:
-        texts = np.array([joined[s:e].strip()
-                          for s, e in zip(starts, ends)], dtype=object)
+    texts = _field_texts(np.asarray(chars["text"], dtype=object), order,
+                         starts)
+    if scale and not resorted and not (box[:2] == 0).any():
+        # 2-decimal (so finite) coordinates in (y0, x0) order: a field's
+        # first char holds its minimal x0 and y0 (a zero could be -0.0,
+        # where reduceat would return the last of the tied zeros)
+        lo = np.take(box[:2], starts, axis=1)
     else:
-        offs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(np.fromiter(map(len, ctext), count=n, dtype=np.int64),
-                  out=offs[1:])
-        texts = np.array([joined[offs[s]:offs[e]].strip()
-                          for s, e in zip(starts, ends)], dtype=object)
-    f = _Fields(
-        text=texts,
-        x0=np.minimum.reduceat(cx0, starts),
-        y0=np.minimum.reduceat(cy0, starts),
-        x1=np.maximum.reduceat(cx1, starts),
-        y1=np.maximum.reduceat(cy1, starts),
-        line_id=line_id[starts],
-        ftype=None,
-    )
+        lo = np.minimum.reduceat(box[:2], starts, axis=1)
+    hi = np.maximum.reduceat(box[2:], starts, axis=1)
+    f = _Fields(text=np.array(texts, dtype=object), x0=lo[0], y0=lo[1],
+                x1=hi[0], y1=hi[1], line_id=line_id[starts], ftype=None)
     # reference drops fields whose text is empty (reader.py:213)
-    keep = texts != ""
-    return f.take(keep) if not keep.all() else f
+    return f.take(f.text != "") if "" in texts else f
 
 
 # ---------------------------------------------------------------------------
@@ -381,47 +436,32 @@ def _split_lines_into_tables(line_ids: np.ndarray, y0: np.ndarray,
     if len(line_ids) == 0:
         return []
     # bbox.y_distance (bbox.py:75-80): min of the 4 corner diffs
-    d = np.minimum.reduce([
-        np.abs(y0[1:] - y0[:-1]), np.abs(y0[1:] - y1[:-1]),
-        np.abs(y1[1:] - y0[:-1]), np.abs(y1[1:] - y1[:-1])])
-    breaks = np.concatenate(([0], (d > cfg.max_row_distance).astype(np.int64)))
-    seg = np.cumsum(breaks)
-    tables = []
-    for s in np.unique(seg):
-        members = line_ids[seg == s]
-        if len(members) >= cfg.min_row_count:
-            tables.append(members)
-    return tables
+    y = np.stack((y0, y1))
+    d = np.abs(y[:, None, 1:] - y[None, :, :-1]).min(axis=(0, 1))
+    cuts = [0, *(np.flatnonzero(d > cfg.max_row_distance) + 1).tolist(),
+            len(line_ids)]
+    return [line_ids[a:b] for a, b in zip(cuts[:-1], cuts[1:])
+            if b - a >= cfg.min_row_count]
 
 
 # ---------------------------------------------------------------------------
 # per-table analysis (computed once per table)
 # ---------------------------------------------------------------------------
 
-def _row_types(tf: _Fields, line_order: list[int]) -> list[str]:
-    """Row type ladder (pdftable/container.py:221-230) via per-type
-    line_id membership sets."""
-    # one pass over the fields instead of four object-array equality
-    # scans (ftype is dtype=object; each `== t` compares every string)
-    sets = {t: set() for t in
-            (F_HEADER, F_ROW_ANNOT, F_ROUTE_INFO, F_DATA)}
-    for lid, ft in zip(tf.line_id.tolist(), tf.ftype):
-        s_ = sets.get(ft)
-        if s_ is not None:
-            s_.add(lid)
-    out = []
-    for line in line_order:
-        if line in sets[F_HEADER]:
-            out.append(R_HEADER)
-        elif line in sets[F_ROW_ANNOT]:
-            out.append(R_ANNOTATION)
-        elif line in sets[F_ROUTE_INFO]:
-            out.append(R_ROUTE_INFO)
-        elif line in sets[F_DATA]:
-            out.append(R_DATA)
-        else:
-            out.append(R_OTHER)
-    return out
+# row type ladder (pdftable/container.py:221-230): a line takes the first
+# rung that one of its fields reaches, in this order, else R_OTHER; a
+# field's rung is its FIELD_TYPES code capped at R_OTHER's
+ROW_LADDER = (R_HEADER, R_ANNOTATION, R_ROUTE_INFO, R_DATA, R_OTHER)
+_ROW_HEADER, _ROW_OTHER = 0, 4
+
+
+def _row_codes(tf: _Fields) -> np.ndarray:
+    """Row type of every line as its ROW_LADDER index: a lookup table
+    over the dense line ids holding the lowest rung of the line's
+    fields."""
+    codes = np.full(int(tf.line_id.max()) + 1, _ROW_OTHER, dtype=np.int8)
+    np.minimum.at(codes, tf.line_id, tf.ftype)
+    return codes
 
 
 def _split_multi_header_tables(
@@ -431,7 +471,7 @@ def _split_multi_header_tables(
     The first table is always kept as-is (reference behavior)."""
     if not tables:
         return []
-    header_lines_all = set(f.line_id[f.ftype == F_HEADER])
+    header_lines_all = set(f.line_id[f.ftype == _FT_HEADER].tolist())
     out: list[list[int]] = [list(tables[0])]
     for tbl in tables[1:]:
         header_lines = [lid for lid in tbl if lid in header_lines_all]
@@ -457,7 +497,8 @@ def _split_multi_header_tables(
 
 @dataclass
 class _Cells:
-    """Merged (col, row) cells of one table, sorted by (col_id, y0)."""
+    """Merged (col, row) cells of one table, sorted by (col_id, y0).
+    Column ids are 0..n_cols-1 in x order; every id has a cell."""
     col_id: np.ndarray
     line_id: np.ndarray
     x0: np.ndarray
@@ -471,52 +512,60 @@ class _Cells:
         return len(self.col_id)
 
 
-def _cluster_columns(body: _Fields, m: _Matchers) -> _Cells:
-    """Assign col_id by x-overlap clustering over x0-sorted fields
-    (pdftable/pdftable.py:65-95): a field joins the current column iff
-    its x0 is strictly less than the running max x1; same-(col,row)
-    fields merge into one cell (container.py:336-353)."""
-    order = np.lexsort((body.y0, body.x0))       # stable (x0, y0)
-    x0 = body.x0[order]
-    x1 = body.x1[order]
+def _cluster_columns(tf: _Fields, body: np.ndarray, m: _Matchers) -> _Cells:
+    """Assign col_id by x-overlap clustering over the x0-sorted fields
+    ``tf[body]`` (pdftable/pdftable.py:65-95): a field joins the current
+    column iff its x0 is strictly less than the running max x1;
+    same-(col,row) fields merge into one cell (container.py:336-353)."""
+    order = body[np.lexsort((tf.y0[body], tf.x0[body]))]  # stable (x0, y0)
+    x0 = tf.x0[order]
+    x1 = tf.x1[order]
     runmax = np.maximum.accumulate(x1)
     new_col = np.empty(len(x0), dtype=bool)
     new_col[0] = True
     new_col[1:] = runmax[:-1] <= x0[1:]
     col_id = np.cumsum(new_col) - 1
+    line_id = tf.line_id[order]
+    y0 = tf.y0[order]
+    key = col_id * (line_id.max() + 1) + line_id
+    sorted_key = np.sort(key)
+    if not (sorted_key[1:] == sorted_key[:-1]).any():
+        # one field per (col, row), the common case: every array is
+        # taken once, in the final (col, y0) order
+        by_col = np.lexsort((y0, col_id))
+        idx = order[by_col]
+        return _Cells(col_id[by_col], line_id[by_col], x0[by_col],
+                      y0[by_col], x1[by_col], tf.y1[idx], tf.text[idx],
+                      tf.ftype[idx])
 
-    cells = _Cells(col_id, body.line_id[order], x0, body.y0[order],
-                   x1, body.y1[order], body.text[order],
-                   body.ftype[order])
+    cells = _Cells(col_id, line_id, x0, y0, x1, tf.y1[order],
+                   tf.text[order], tf.ftype[order])
 
     # merge fields sharing (col, row): texts joined with " " when there
     # is an x-gap (container.py:339-348); bboxes unioned. Rare; only
     # affected groups take the slow path and get their ftype recomputed.
-    key = cells.col_id * (cells.line_id.max() + 1) + cells.line_id
-    uniq, first_idx, counts = np.unique(key, return_index=True,
-                                        return_counts=True)
-    if (counts > 1).any():
-        keep_mask = np.ones(len(cells), dtype=bool)
-        arrs = cells
-        for k in uniq[counts > 1]:
-            idxs = np.flatnonzero(key == k)
-            idxs = idxs[np.argsort(arrs.x0[idxs], kind="stable")]
-            keep = idxs[0]
-            text = arrs.text[keep]
-            cx1 = arrs.x1[keep]
-            for j in idxs[1:]:
-                sep = " " if (arrs.x0[j] - cx1) != 0 else ""
-                text = text + sep + arrs.text[j]
-                cx1 = max(cx1, arrs.x1[j])
-                keep_mask[j] = False
-            arrs.text[keep] = text
-            arrs.x0[keep] = arrs.x0[idxs].min()
-            arrs.y0[keep] = arrs.y0[idxs].min()
-            arrs.x1[keep] = arrs.x1[idxs].max()
-            arrs.y1[keep] = arrs.y1[idxs].max()
-            arrs.ftype[keep] = m.field_types_list([text])[0]
-        cells = _Cells(*[getattr(arrs, n)[keep_mask] for n in (
-            "col_id", "line_id", "x0", "y0", "x1", "y1", "text", "ftype")])
+    uniq, counts = np.unique(key, return_counts=True)
+    keep_mask = np.ones(len(cells), dtype=bool)
+    arrs = cells
+    for k in uniq[counts > 1]:
+        idxs = np.flatnonzero(key == k)
+        idxs = idxs[np.argsort(arrs.x0[idxs], kind="stable")]
+        keep = idxs[0]
+        text = arrs.text[keep]
+        cx1 = arrs.x1[keep]
+        for j in idxs[1:]:
+            sep = " " if (arrs.x0[j] - cx1) != 0 else ""
+            text = text + sep + arrs.text[j]
+            cx1 = max(cx1, arrs.x1[j])
+            keep_mask[j] = False
+        arrs.text[keep] = text
+        arrs.x0[keep] = arrs.x0[idxs].min()
+        arrs.y0[keep] = arrs.y0[idxs].min()
+        arrs.x1[keep] = arrs.x1[idxs].max()
+        arrs.y1[keep] = arrs.y1[idxs].max()
+        arrs.ftype[keep] = m.field_type_codes([text])[0]
+    cells = _Cells(*[getattr(arrs, n)[keep_mask] for n in (
+        "col_id", "line_id", "x0", "y0", "x1", "y1", "text", "ftype")])
 
     order = np.lexsort((cells.y0, cells.col_id))  # stable (col, y0)
     return _Cells(*[getattr(cells, n)[order] for n in (
@@ -537,20 +586,11 @@ def _id_mask(ids: np.ndarray, wanted) -> np.ndarray:
     return lut[ids]
 
 
-def _col_segments(cells: _Cells) -> tuple[np.ndarray, np.ndarray]:
-    """(col_ids, segment starts) — cells are (col, y0)-sorted."""
-    n = len(cells)
-    new = np.empty(n, dtype=bool)
-    new[0] = True
-    new[1:] = cells.col_id[1:] != cells.col_id[:-1]
-    starts = np.flatnonzero(new)
-    return cells.col_id[starts], starts
-
-
-def _column_types(cells: _Cells, col_order: list[int],
+def _column_types(cells: _Cells, edges: list[int],
                   m: _Matchers) -> tuple[dict[int, str], set[int]]:
     """Left-to-right lazy column typing (pdftable/container.py:273-302),
-    including the retroactive previous-OTHER -> STOP upgrade.
+    including the retroactive previous-OTHER -> STOP upgrade.  Column
+    ``c`` holds cells ``edges[c]:edges[c + 1]``.
 
     Also returns the set of retroactively-UPGRADED columns: the
     reference evaluates types lazily during the split decision's
@@ -558,53 +598,38 @@ def _column_types(cells: _Cells, col_order: list[int],
     evaluating column j lands on j-1 AFTER the scan already visited
     j-1 — upgraded columns are invisible to the multi-stop-column
     split decision but cached as STOP for every later consumer
-    (sweep v4 seed 50315: side-by-side blocks stay ONE table)."""
-    col_ids, starts = _col_segments(cells)
-    ends = np.append(starts[1:], len(cells))
-    n = len(cells)
-    lens = np.fromiter(map(len, cells.text), count=n, dtype=np.float64)
-    is_empty = (cells.text == "").astype(np.float64)
-    is_annot = (cells.ftype == F_STOP_ANNOT).astype(np.uint8)
-    is_data = (cells.ftype == F_DATA).astype(np.uint8)
+    (sweep v4 seed 50315: side-by-side blocks stay ONE table).
 
-    # per-column aggregates in four reduceat passes instead of per-col
-    # numpy calls (each np.mean/sum/any on a tiny slice costs ~10us of
-    # dispatch; lens are exact small ints so sum/count == np.mean bit
-    # for bit)
-    counts = (ends - starts).astype(np.float64)
-    mean_lens = np.add.reduceat(lens, starts) / counts
-    n_emptys = np.add.reduceat(is_empty, starts)
-    has_annots = np.maximum.reduceat(is_annot, starts)
-    has_datas = np.maximum.reduceat(is_data, starts)
-
-    stats = {}
-    for k, (cid, s, e) in enumerate(zip(col_ids, starts, ends)):
-        stats[cid] = (
-            float(mean_lens[k]),                # mean_len
-            int(e - s),                         # n_fields
-            int(n_emptys[k]),                   # n_empty
-            bool(has_annots[k]),
-            bool(has_datas[k]),
-            "\n".join(cells.text[s:e]),
-        )
+    Per-column stats come from C-level list ops on the column's slice,
+    each computed only when the ladder reaches it; the mean length is
+    an exact int sum over the count, so it equals np.mean bit for
+    bit."""
+    texts = cells.text.tolist()
+    ftypes = cells.ftype.tolist()
+    # a column's repeat intervals need a repeat start word in its text:
+    # one search over the whole table skips the per-column joins and
+    # findalls on tables without any
+    may_repeat = m.may_repeat("\n".join(texts))
     types: dict[int, str] = {}
     upgraded: set[int] = set()
-    for i, cid in enumerate(col_order):
-        mean_len, n_fields, n_empty, has_annot, has_data, joined = stats[cid]
-        is_sparse = (n_fields / max(1, n_empty)) <= 0.5
-        if not is_sparse and mean_len > 8:
+    for cid in range(len(edges) - 1):
+        s, e = edges[cid], edges[cid + 1]
+        col = texts[s:e]
+        is_sparse = ((e - s) / max(1, col.count(""))) <= 0.5
+        if not is_sparse and sum(map(len, col)) / (e - s) > 8:
             types[cid] = C_STOP
             continue
-        if m.repeat_intervals(joined):
+        if may_repeat and m.repeat_intervals("\n".join(col)):
             types[cid] = C_REPEAT
             continue
-        if has_annot:
-            if i > 0 and types.get(col_order[i - 1]) == C_OTHER:
-                types[col_order[i - 1]] = C_STOP
-                upgraded.add(col_order[i - 1])
+        col_ftypes = ftypes[s:e]
+        if _FT_STOP_ANNOT in col_ftypes:
+            if cid > 0 and types.get(cid - 1) == C_OTHER:
+                types[cid - 1] = C_STOP
+                upgraded.add(cid - 1)
             types[cid] = C_STOP_ANNOTATION
             continue
-        if has_data:
+        if _FT_DATA in col_ftypes:
             types[cid] = C_DATA
             continue
         types[cid] = C_OTHER
@@ -613,14 +638,18 @@ def _column_types(cells: _Cells, col_order: list[int],
 
 @dataclass
 class _TableAnalysis:
-    line_order: list[int]
+    line_order: list[int]     # ascending line ids
     rtypes: list[str]
     row_type_of_line: dict[int, str]
     line_to_row: dict[int, int]
     tfields: _Fields
     cells: _Cells
-    col_order: list[int]
+    col_order: list[int]      # 0..n_cols-1
+    # column c holds cells[col_edges[c]:col_edges[c + 1]]
+    col_edges: list[int]
     col_types: dict[int, str]
+    # ROW_LADDER index of each field's row (parallel to tfields)
+    field_rows: np.ndarray
     # columns retroactively upgraded OTHER -> STOP; excluded from the
     # multi-stop split DECISION (see _column_types docstring)
     upgraded_stop_cols: set[int] = dc_field(default_factory=set)
@@ -628,22 +657,25 @@ class _TableAnalysis:
 
 def _analyze_table(tf: _Fields, line_order: list[int],
                    m: _Matchers) -> Optional[_TableAnalysis]:
-    rtypes = _row_types(tf, line_order)
-    row_type_of_line = dict(zip(line_order, rtypes))
-    body_lines = {lid for lid, t in zip(line_order, rtypes)
-                  if t in (R_DATA, R_ANNOTATION, R_ROUTE_INFO)}
-    body_mask = _id_mask(tf.line_id, body_lines)
-    if not body_mask.any():
+    codes = _row_codes(tf)
+    rtypes = [ROW_LADDER[c] for c in codes[line_order].tolist()]
+    field_rows = codes[tf.line_id]
+    # the body: fields of ANNOTATION, ROUTE_INFO and DATA rows
+    body = np.flatnonzero((field_rows > _ROW_HEADER)
+                          & (field_rows < _ROW_OTHER))
+    if len(body) == 0:
         return None
-    cells = _cluster_columns(tf.take(body_mask), m)
-    col_order = sorted(set(cells.col_id.tolist()))
-    col_types, upgraded = _column_types(cells, col_order, m)
+    cells = _cluster_columns(tf, body, m)
+    n_cols = int(cells.col_id[-1]) + 1
+    edges = np.searchsorted(cells.col_id, np.arange(n_cols + 1)).tolist()
+    col_types, upgraded = _column_types(cells, edges, m)
     return _TableAnalysis(
         line_order=list(line_order), rtypes=rtypes,
-        row_type_of_line=row_type_of_line,
+        row_type_of_line=dict(zip(line_order, rtypes)),
         line_to_row={lid: i for i, lid in enumerate(line_order)},
-        tfields=tf, cells=cells, col_order=col_order,
-        col_types=col_types, upgraded_stop_cols=upgraded)
+        tfields=tf, cells=cells, col_order=list(range(n_cols)),
+        col_edges=edges, col_types=col_types, field_rows=field_rows,
+        upgraded_stop_cols=upgraded)
 
 
 # ---------------------------------------------------------------------------
@@ -706,38 +738,48 @@ def fix_split_stop_names(texts: list[str], x0s: list[float],
 # CSV serialization (the golden-fixture equality surface)
 # ---------------------------------------------------------------------------
 
-def table_to_csv(a: _TableAnalysis, placeable: _Fields) -> str:
-    """Serialize a table grid exactly like the reference CSV writer
-    (pdftable/pdftable.py:185-234): cells per (row, col), header-typed
-    fields placed at the first column whose x0 exceeds theirs, rows
-    that are entirely empty dropped, trailing newline kept."""
-    n_rows, n_cols = len(a.line_order), len(a.col_order)
-    col_pos = {cid: i for i, cid in enumerate(a.col_order)}
-    grid = np.full((n_rows, n_cols), "", dtype=object)
+def _csv_cells(texts: list[str]) -> list[str]:
+    """The CSV writer's cell texts (pdftable.py:185-234): double quotes
+    dropped, stripped, quoted when they hold a comma.  One join decides
+    whether each edit has anything to do."""
+    if '"' in "".join(texts):
+        texts = [t.replace('"', "") for t in texts]
+    texts = list(map(str.strip, texts))
+    if "," in "".join(texts):
+        texts = [f'"{t}"' if "," in t else t for t in texts]
+    return texts
 
+
+def table_to_csv(a: _TableAnalysis, placeable: np.ndarray) -> str:
+    """Serialize a table grid exactly like the reference CSV writer
+    (pdftable/pdftable.py:185-234): cells per (row, col), the
+    ``placeable`` header-typed fields (indices into ``a.tfields``)
+    placed at the first column whose x0 exceeds theirs, rows that are
+    entirely empty dropped, trailing newline kept.
+
+    The grid is one flat object array filled by a single fancy
+    assignment (a table's cells have distinct (row, col) slots after
+    the merge in _cluster_columns); a line's row is its index in the
+    ascending ``line_order``."""
+    n_rows, n_cols = len(a.line_order), len(a.col_order)
     cells = a.cells
-    line_to_row = a.line_to_row
-    for lid, cid, txt in zip(cells.line_id.tolist(),
-                             cells.col_id.tolist(), cells.text):
-        t = txt.replace('"', "").strip()
-        if "," in t:
-            t = f'"{t}"'
-        grid[line_to_row[lid], col_pos[cid]] = t
+    grid = np.full(n_rows * n_cols, "", dtype=object)
+    grid[np.searchsorted(a.line_order, cells.line_id) * n_cols
+         + cells.col_id] = _csv_cells(cells.text.tolist())
 
     if len(placeable):
         # first col whose x0 > field.x0; else last (pdftable.py:197-205)
-        col_ids, starts = _col_segments(cells)
-        ends = np.append(starts[1:], len(cells))
-        col_min_x0 = {cid: float(cells.x0[s:e].min())
-                      for cid, s, e in zip(col_ids, starts, ends)}
-        xs = np.array([col_min_x0[c] for c in a.col_order])
-        idxs = np.minimum(np.searchsorted(xs, placeable.x0, side="right"),
-                          n_cols - 1)
-        for lid, c, txt in zip(placeable.line_id, idxs, placeable.text):
-            grid[a.line_to_row[lid], c] = txt
-    nonempty = (grid != "").any(axis=1)
-    lines = [",".join(row) for row, ne in zip(grid, nonempty) if ne]
-    return "\n".join(lines) + "\n"
+        tf = a.tfields
+        xs = np.minimum.reduceat(cells.x0, a.col_edges[:-1])
+        cols = np.minimum(np.searchsorted(xs, tf.x0[placeable],
+                                          side="right"), n_cols - 1)
+        slots = (np.searchsorted(a.line_order, tf.line_id[placeable])
+                 * n_cols + cols)
+        for k, txt in zip(slots.tolist(), tf.text[placeable]):
+            grid[k] = txt
+    # a row of n_cols empty cells joins to n_cols - 1 commas
+    lines = map(",".join, grid.reshape(n_rows, n_cols).tolist())
+    return "\n".join(ln for ln in lines if len(ln) >= n_cols) + "\n"
 
 
 # ---------------------------------------------------------------------------
@@ -928,9 +970,8 @@ def _normalize_timetable(a: _TableAnalysis,
     if not entry_cols:
         return [], stops_records
 
-    col_ids, starts = _col_segments(cells)
-    ends = np.append(starts[1:], n)
-    seg_of = {cid: (s, e) for cid, s, e in zip(col_ids, starts, ends)}
+    edges = a.col_edges
+    seg_of = {cid: (edges[cid], edges[cid + 1]) for cid in a.col_order}
 
     col_x1s = np.array([float(cells.x1[slice(*seg_of[c])].max())
                         for c in entry_cols])
@@ -1041,25 +1082,21 @@ def _process_table(table_id: int, a: _TableAnalysis,
     stop_cols = [c for c in a.col_order if a.col_types[c] == C_STOP]
     cells = a.cells
     if stop_cols:
-        sel = np.flatnonzero(cells.col_id == stop_cols[0])  # y0-sorted
+        # the first stop column's cells, y0-sorted
+        sel = slice(a.col_edges[stop_cols[0]], a.col_edges[stop_cols[0] + 1])
+        stop_lines = cells.line_id[sel].tolist()
         fixed = fix_split_stop_names(
-            [cells.text[i] for i in sel], [cells.x0[i] for i in sel],
-            [cells.line_id[i] for i in sel], a.row_type_of_line)
-        fixed_stop_text = dict(zip((cells.line_id[i] for i in sel), fixed))
-        for i, new_text in zip(sel, fixed):
-            cells.text[i] = new_text
+            cells.text[sel].tolist(), cells.x0[sel].tolist(), stop_lines,
+            a.row_type_of_line)
+        fixed_stop_text = dict(zip(stop_lines, fixed))
+        cells.text[sel] = np.array(fixed, dtype=object)
 
-    row_types_arr = np.array(
-        [a.row_type_of_line[l] for l in a.tfields.line_id], dtype=object)
-    # all fields of HEADER rows: used for per-column header text
-    # (pdftable/pdftable.py:121-129)
-    header = a.tfields.take(row_types_arr == R_HEADER)
-    # HEADER-*typed* fields outside any column: placed into the CSV
+    # HEADER-*typed* fields of HEADER or OTHER rows: placed into the CSV
     # (pdftable/pdftable.py:222-228)
-    placeable = a.tfields.take(
-        (a.tfields.ftype == F_HEADER)
-        & ((row_types_arr == R_HEADER) | (row_types_arr == R_OTHER)))
-    csv_text = table_to_csv(a, placeable)
+    rows = a.field_rows
+    csv_text = table_to_csv(a, np.flatnonzero(
+        (a.tfields.ftype == _FT_HEADER)
+        & ((rows == _ROW_HEADER) | (rows == _ROW_OTHER))))
     if light:
         if len(cells) == 0:
             return None
@@ -1068,6 +1105,9 @@ def _process_table(table_id: int, a: _TableAnalysis,
             col_types=[a.col_types[c] for c in a.col_order],
             cells_records=[], entries_records=[], stops_records=[])
 
+    # all fields of HEADER rows: used for per-column header text
+    # (pdftable/pdftable.py:121-129)
+    header = a.tfields.take(rows == _ROW_HEADER)
     entries_records, stops_records = _normalize_timetable(
         a, header, cfg, m, fixed_stop_text)
 
@@ -1098,7 +1138,7 @@ def _process_table(table_id: int, a: _TableAnalysis,
 # entry point
 # ---------------------------------------------------------------------------
 
-def extract_turn(payload: str,
+def extract_turn(payload: Optional[str],
                  cfg: ExtractConfig = DEFAULT_CONFIG,
                  light: bool = False,
                  decoded=None) -> TurnResult:
@@ -1115,7 +1155,8 @@ def extract_turn(payload: str,
 
     ``decoded``: optional pre-decoded payload from
     ``decode_payload_batch`` — either a (PageBox, arrays) pair or a
-    MalformedPayload instance; when given, ``payload`` is not re-read.
+    MalformedPayload instance; when given, ``payload`` is not read (and
+    may be None).
     """
     if decoded is None:
         decoded = decode_payload_batch([payload])[0]
@@ -1139,17 +1180,23 @@ def extract_turn(payload: str,
                                               light=light))
         return result
     m = _matchers(cfg)
-    fields.ftype = np.array(m.field_types_list(fields.text.tolist()),
-                            dtype=object)
+    fields.ftype = m.field_type_codes(fields.text.tolist())
 
     line_ids, ly0, ly1 = _line_bboxes(fields)
-    raw_tables = [list(t) for t in
+    raw_tables = [t.tolist() for t in
                   _split_lines_into_tables(line_ids, ly0, ly1, cfg)]
     tables = _split_multi_header_tables(raw_tables, fields)
 
     table_id = 0
     for line_order in tables:
-        tf = fields.take(_id_mask(fields.line_id, set(line_order)))
+        # ascending line ids; fields are line-sorted, so a table of
+        # consecutive lines is a slice (views, no copies)
+        first, last = line_order[0], line_order[-1]
+        if last - first + 1 == len(line_order):
+            tf = fields.take(slice(*np.searchsorted(
+                fields.line_id, (first, last + 1)).tolist()))
+        else:
+            tf = fields.take(_id_mask(fields.line_id, set(line_order)))
         if len(tf) == 0:
             continue
         analysis = _analyze_table(tf, line_order, m)
@@ -1212,7 +1259,7 @@ def _merge_mutated_fields(a: _TableAnalysis, m: _Matchers) -> _Fields:
         x1[lead] = cx1
         y0[lead] = y0[grp].min()
         y1[lead] = y1[grp].max()
-        ftype[grp] = m.field_types_list(list(text[grp]))
+        ftype[grp] = m.field_type_codes(text[grp].tolist())
     return _Fields(text, tf.x0.copy(), y0, x1, y1,
                    tf.line_id.copy(), ftype)
 
@@ -1235,11 +1282,9 @@ def _split_multi_stop_columns(a: _TableAnalysis,
     if len(genuine) <= 1:
         return [a]
     stop_cols = [c for c in a.col_order if a.col_types[c] == C_STOP]
-    col_ids, starts = _col_segments(a.cells)
-    ends = np.append(starts[1:], len(a.cells))
-    col_x0 = {cid: float(a.cells.x0[s:e].min())
-              for cid, s, e in zip(col_ids, starts, ends)}
-    boundaries = sorted(col_x0[c] for c in stop_cols)[1:]
+    edges = a.col_edges
+    boundaries = sorted(float(a.cells.x0[edges[c]:edges[c + 1]].min())
+                        for c in stop_cols)[1:]
     tf_m = _merge_mutated_fields(a, m)
     bucket = np.searchsorted(np.asarray(boundaries), tf_m.x0,
                              side="right")

@@ -24,6 +24,9 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.csv as pacsv
 
 CHAR_W = 5.0
 CHAR_H = 8.0
@@ -111,30 +114,75 @@ def decode_payload_arrays(payload: str) -> tuple[PageBox, dict]:
     }
 
 
-def decode_payload_batch(payloads: Sequence[str]) -> list:
+_CSV_READ = pacsv.ReadOptions(column_names=CHAR_COLUMNS, use_threads=False)
+_CSV_PARSE = pacsv.ParseOptions(delimiter="\t", quote_char=False)
+_CSV_CONVERT = pacsv.ConvertOptions(
+    column_types={"x0": pa.float64(), "y0": pa.float64(),
+                  "x1": pa.float64(), "y1": pa.float64(),
+                  "text": pa.string()},
+    null_values=[], strings_can_be_null=False)
+
+
+def _payload_column(payloads) -> pa.Array | None:
+    """The one normalizing entry of ``decode_payload_batch``: the batch
+    as an Arrow string array.  The kernel's Arrow ``text`` column passes
+    as it is; a list of str is encoded once.  None when a str cannot be
+    UTF-8 encoded (a lone surrogate)."""
+    if isinstance(payloads, pa.ChunkedArray):
+        return payloads.combine_chunks()
+    if isinstance(payloads, pa.Array):
+        return payloads
+    try:
+        return pa.array(payloads, pa.string())
+    except (pa.ArrowException, UnicodeError):
+        return None
+
+
+def decode_payload_batch(payloads) -> list:
     """Decode many payloads with ONE vectorized CSV parse.
 
-    The per-turn parser spends most of its time in per-line
-    ``str.split`` plus per-turn numpy array construction (guide §4.5:
-    amortize per-batch); here all body lines of a batch are parsed by
-    pyarrow's C++ CSV reader in one call and sliced back per turn as
-    numpy views.  Semantics are EXACTLY decode_payload_arrays': any
-    payload whose body is not uniformly 5 tab-separated fields — or
-    any batch pyarrow cannot parse under the strict options below —
-    falls back to the per-turn parser, so behavioural edge cases
-    (malformed headers, ragged bodies, exotic float spellings) keep
-    their r1-r5 outcomes.  Returns a list parallel to ``payloads`` of
+    ``payloads`` is a list of str or an Arrow string array (the
+    kernel's ``text`` column).  The bodies are parsed by pyarrow's C++
+    CSV reader in one call, straight from the batch's UTF-8 bytes: the
+    bodies that pass the shape check below are copied, each closed by a
+    newline, into one Arrow buffer, and the parsed columns are sliced
+    back per turn as numpy views.  The shape check counts rows and tabs
+    with numpy over each body's bytes, not with Python string scans.
+
+    Semantics are EXACTLY decode_payload_arrays': a payload whose body
+    is not 4 tabs per non-empty line — or any batch pyarrow cannot
+    parse under the strict options above — falls back to the per-turn
+    parser, so behavioural edge cases (malformed headers, ragged
+    bodies, exotic float spellings) keep their r1-r5 outcomes.  A null
+    payload is malformed.  Returns a list parallel to ``payloads`` of
     (PageBox, dict-of-arrays) or MalformedPayload instances.
     """
-    out: list = [None] * len(payloads)
-    pages: list = [None] * len(payloads)
-    exact: list[int] = []       # payloads left to decode_payload_arrays
-    bodies: list[list[str]] = []
+    col = _payload_column(payloads)
+    if col is None:
+        return [_decode_exact(p) for p in payloads]
+    n = len(col)
+    out: list = [None] * n
+    _, off_buf, data_buf = col.buffers()
+    if data_buf is None:        # every payload null or empty
+        return [MalformedPayload("") for _ in range(n)]
+    off_type = np.int64 if pa.types.is_large_string(col.type) else np.int32
+    bounds = np.frombuffer(off_buf, off_type)[
+        col.offset:col.offset + n + 1].tolist()
+    data = np.frombuffer(data_buf, np.uint8)
+
+    pages: list = [None] * n
+    bodies: list[tuple[int, int]] = []  # byte range of each parsed body
     counts: list[int] = []
     idxs: list[int] = []
-    for i, payload in enumerate(payloads):
-        nl = payload.find("\n")
-        header = payload[:nl] if nl >= 0 else payload
+    exact: list[int] = []       # payloads left to decode_payload_arrays
+    # byte offset of each payload's first newline
+    for i, nl in enumerate(pc.find_substring(col, "\n").to_pylist()):
+        if nl is None:          # a null payload
+            out[i] = MalformedPayload("")
+            continue
+        s, e = bounds[i], bounds[i + 1]
+        h_end = e if nl < 0 else s + nl
+        header = data[s:h_end].tobytes().decode("utf-8")
         parts = header.split("\t")
         if len(parts) != 5 or parts[0] != "PAGE":
             out[i] = MalformedPayload(header[:80])
@@ -142,91 +190,95 @@ def decode_payload_batch(payloads: Sequence[str]) -> list:
         try:
             pages[i] = PageBox(float(parts[1]), float(parts[2]),
                                float(parts[3]), float(parts[4]))
-        except ValueError as e:
-            out[i] = MalformedPayload(str(e))
+        except ValueError as err:
+            out[i] = MalformedPayload(str(err))
             continue
-        body = payload[nl + 1:] if nl >= 0 else ""
-        # encode_chars ends every line with "\n"; drop that one so a
-        # clean body takes the fast path below
-        if body.endswith("\n"):
-            body = body[:-1]
-        # fast shape check without splitting: a clean body has exactly
-        # 4 tabs per line. The total-count test is necessary but not
-        # sufficient (a 5-tab and a 3-tab line can balance); pyarrow's
-        # strict column-count parse catches any such remainder and
-        # sends the batch to the exact per-turn fallback below.
-        if body and ("\n\n" not in body and body[0] != "\n"
-                     and body[-1] != "\n"):
-            n = body.count("\n") + 1
+        body = data[h_end + 1:e]
+        if len(body) == 0:
+            rows = 0
         else:
-            lines = [ln for ln in body.split("\n") if ln]
-            n = len(lines)
-            body = "\n".join(lines)
-        if body.count("\t") != 4 * n:
-            exact.append(i)         # ragged -> exact per-turn parser
+            # rows = non-empty lines, counted at their first byte (a
+            # non-newline after a newline or at the body start)
+            is_nl = body == 10
+            rows = int(not is_nl[0]) + int(
+                np.count_nonzero(is_nl[:-1] > is_nl[1:]))
+        # 4 tabs per line is necessary but not sufficient (a 5-tab and
+        # a 3-tab line can balance); pyarrow's strict column-count parse
+        # catches any such remainder and sends the batch to the exact
+        # per-turn fallback below
+        if np.count_nonzero(body == 9) != 4 * rows:
+            exact.append(i)
             continue
-        bodies.append(body)
-        counts.append(n)
+        bodies.append((h_end + 1, e))
+        counts.append(rows)
         idxs.append(i)
 
-    import pyarrow as pa
-    import pyarrow.csv as pacsv
-
-    blob = "\n".join(b for b in bodies if b)
     try:
-        if blob:
-            tbl = pacsv.read_csv(
-                io.BytesIO(blob.encode("utf-8")),
-                read_options=pacsv.ReadOptions(
-                    column_names=CHAR_COLUMNS, use_threads=False),
-                parse_options=pacsv.ParseOptions(
-                    delimiter="\t", quote_char=False),
-                convert_options=pacsv.ConvertOptions(
-                    column_types={"x0": pa.float64(), "y0": pa.float64(),
-                                  "x1": pa.float64(), "y1": pa.float64(),
-                                  "text": pa.string()},
-                    null_values=[], strings_can_be_null=False))
+        if sum(counts):
+            tbl = pacsv.read_csv(pa.BufferReader(_concat_lines(data, bodies)),
+                                 read_options=_CSV_READ,
+                                 parse_options=_CSV_PARSE,
+                                 convert_options=_CSV_CONVERT)
             if tbl.num_rows != sum(counts):
                 raise ValueError("row-count drift vs line count")
-            coords = [tbl.column(c).to_numpy() for c in
+            # one chunk per column: the numpy arrays are views
+            tbl = tbl.combine_chunks()
+            coords = [tbl.column(c).chunk(0).to_numpy() for c in
                       ("x0", "y0", "x1", "y1")]
             text = tbl.column("text").to_numpy(zero_copy_only=False)
             # cid repair is the identity on 1-char glyphs; one C-level
             # length scan over the whole batch decides whether any
             # per-text repair runs at all (same skip rule as the
             # per-turn parser: keyed on length only)
-            import pyarrow.compute as pc
             lens = pc.utf8_length(tbl.column("text")).to_numpy()
             long_any = bool((lens > 1).any())
         else:
             coords = [np.empty(0)] * 4
             text = np.empty(0, dtype=object)
             long_any = False
-        off = 0
-        for j, i in enumerate(idxs):
-            n = counts[j]
-            sl = slice(off, off + n)
-            off += n
+        pos = 0
+        for i, rows in zip(idxs, counts):
+            sl = slice(pos, pos + rows)
+            pos = sl.stop
             t = text[sl]
-            if long_any and n and (lens[sl] > 1).any():
+            if long_any and (lens[sl] > 1).any():
                 t = np.array(
                     [_fix_cid_text(s) if len(s) > 1 else s for s in t],
                     dtype=object)
             out[i] = (pages[i], {
                 "x0": coords[0][sl], "y0": coords[1][sl],
                 "x1": coords[2][sl], "y1": coords[3][sl],
-                "text": t if t.dtype == object else t.astype(object),
+                "text": t,
             })
     except (pa.ArrowInvalid, ValueError):
         # one bad body poisons the batch parse: redo each pending
         # payload through the exact per-turn parser
         exact += idxs
     for i in exact:
-        try:
-            out[i] = decode_payload_arrays(payloads[i])
-        except MalformedPayload as e:
-            out[i] = e
+        out[i] = _decode_exact(col[i].as_py())
     return out
+
+
+def _concat_lines(data: np.ndarray, ranges: list[tuple[int, int]]
+                  ) -> pa.Buffer:
+    """The byte ranges of ``data`` back to back, each closed by a
+    newline, in one buffer from Arrow's memory pool."""
+    buf = pa.allocate_buffer(sum(e - s + 1 for s, e in ranges))
+    dst = np.frombuffer(buf, np.uint8)
+    pos = 0
+    for s, e in ranges:
+        end = pos + e - s
+        dst[pos:end] = data[s:e]
+        dst[end] = 10
+        pos = end + 1
+    return buf
+
+
+def _decode_exact(payload: str):
+    try:
+        return decode_payload_arrays(payload)
+    except MalformedPayload as e:
+        return e
 
 
 def encode_chars(page: PageBox, chars: pd.DataFrame) -> str:

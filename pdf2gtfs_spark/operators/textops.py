@@ -784,11 +784,15 @@ def embedding_ivf_topk(spark, sf_dir):
              .withColumn("cos_micros", _cos_cols(F.col("qv"), F.col("cv")))
              .withColumn("rk", F.row_number().over(wr))
              .where(f"rk <= {_IVF_TOPK}")
-             .select("query_id", F.col("vec_id").alias("exact_id")))
+             .select(F.col("query_id").alias("exact_qid"),
+                     F.col("vec_id").alias("exact_id")))
+    # ``exact`` keys under its own names: ``ivf.query_id ==
+    # exact.query_id`` compares one attribute of ``q`` with itself until
+    # the self-join is resolved
     return (ivf.join(exact,
-                     (ivf.query_id == exact.query_id)
-                     & (ivf.vec_id == exact.exact_id), "left")
-            .select(ivf.query_id, F.col("rk").cast("bigint").alias("rk"),
+                     (F.col("query_id") == F.col("exact_qid"))
+                     & (F.col("vec_id") == F.col("exact_id")), "left")
+            .select("query_id", F.col("rk").cast("bigint").alias("rk"),
                     F.col("vec_id").alias("neighbor_id"), "cos_micros",
                     F.when(F.col("exact_id").isNotNull(), 1).otherwise(0)
                     .alias("in_exact"))

@@ -3,8 +3,11 @@
 Dataflow (SURVEY.md §3.1 Spark recast):
 
     transcripts (conv_id, turn_idx, role, text, tool, ts)
-      -> repartition(hash(conv_id, turn_idx))        # salt: per-turn
-         the kernel is stateless per turn, so skewed long conversations
+      -> the scan partitions as they are; an input of at most one
+         scan split is coalesce()d to defaultParallelism (narrow: one
+         wave, no exchange).  Only with ``num_partitions`` does a
+         salted repartition(hash(conv_id, turn_idx)) run instead: the
+         kernel is stateless per turn, so skewed long conversations
          spread across all executors; conv-level grouping happens only
          at the reassembly afterwards
       -> mapInArrow(extract kernel)                  # Arrow batches in/out
@@ -108,14 +111,12 @@ def make_extract_kernel(cfg: ExtractConfig = DEFAULT_CONFIG,
             for batch in batches:
                 src: list[int] = []     # input row of each output row
                 rows: list[dict] = []
-                texts = batch.column("text").to_pylist()
                 # one vectorized CSV parse for the whole Arrow batch
-                # (pyarrow C++ reader) instead of per-line str.split per
-                # turn — decode was ~35% of kernel time (guide §4.5)
-                for k, (payload, dec) in enumerate(
-                        zip(texts, decode_payload_batch(texts))):
-                    res = extract_turn(payload, cfg, light=light,
-                                       decoded=dec)
+                # (pyarrow C++ reader), straight from the text column's
+                # bytes: no per-turn Python strings (guide §4.5)
+                for k, dec in enumerate(
+                        decode_payload_batch(batch.column("text"))):
+                    res = extract_turn(None, cfg, light=light, decoded=dec)
                     turn = {"n_chars": res.n_chars,
                             "n_fields": res.n_fields,
                             "malformed": res.malformed}

@@ -9,7 +9,8 @@ built to break fast paths:
 - multi-glyph, empty, whitespace and ``(cid:N)`` texts;
 - zero-width, zero-height and off-page boxes, negative coordinates;
 - coordinates with more than 2 decimals (also fed uncleaned straight
-  to ``chars_to_field_arrays``);
+  to ``chars_to_field_arrays``), signed zeros and a span too wide for
+  32-bit keys;
 - blank-line, ragged, header-only and malformed payloads, and exotic
   float spellings.
 
@@ -166,12 +167,39 @@ def _cases() -> dict[str, str]:
     random.Random(50).shuffle(chars)
     cases["negative"] = _payload(chars, page=(-400.0, -200.0, 800.0, 900.0))
 
+    # signed zeros: -0.001 rounds to -0.0, which ties with 0.0 inside
+    # one field (x0) and one line (y0)
+    chars = _synth_chars(80, n_tables=1)
+    for c in chars:
+        c[0] -= 40.0
+        c[2] -= 40.0
+        c[1] -= 40.0
+        c[3] -= 40.0
+    zeros = [[-0.001, -0.001, 4.0, 8.0, "Z"], [0.0, 0.0, 5.0, 8.0, "z"],
+             [0.004, -0.0, 6.0, 8.0, "y"], [-0.0, 0.002, 3.0, 8.0, "x"]]
+    cases["signed_zero"] = _payload(zeros + chars,
+                                    page=(-0.001, -0.001, 600.0, 600.0))
+
     # wide coordinates (large magnitudes) and values on 2-decimal steps
     chars = _synth_chars(60, n_tables=1)
     for c in chars:
         c[0] += 1e7
         c[2] += 1e7
     cases["wide"] = _payload(chars, page=(0.0, 0.0, 2e7, 1000.0))
+
+    # a block so far right that 2-decimal keys would overflow 32 bits
+    chars = _synth_chars(61, n_tables=1)
+    chars += [[c[0] + 5e7, c[1], c[2] + 5e7, c[3], c[4]]
+              for c in _synth_chars(62, n_tables=1)]
+    random.Random(61).shuffle(chars)
+    cases["huge"] = _payload(chars, page=(0.0, 0.0, 1e8, 1000.0))
+
+    # ASCII glyphs that str.strip() removes but C isspace() does not
+    rnd = random.Random(90)
+    chars = _synth_chars(90, n_tables=1)
+    for c in chars[::4]:
+        c[4] = rnd.choice("\x1c\x1d\x1e\x1f \x0b\x0c")
+    cases["ascii_separators"] = _payload(chars)
 
     base = _payload(_synth_chars(70, n_tables=1))
     head, body = base.split("\n", 1)
@@ -276,7 +304,10 @@ PINNED = {
     "decimals": "7422a2f233b7b904",
     "decimals_small": "f1031c716a235f17",
     "negative": "01cd65a77d86d920",
+    "signed_zero": "8cc057f20a9e6e6a",
     "wide": "6daa08dae70c23c7",
+    "huge": "093fb628ba94b7fe",
+    "ascii_separators": "930edba07c97ddc2",
     "blank_lines": "e46ed0ed6bd64c25",
     "no_trailing_newline": "e46ed0ed6bd64c25",
     "crlf": "320a0aa1a2f45c69",
@@ -308,6 +339,24 @@ def test_every_case_is_pinned(computed):
 def test_front_end_matches_pinned_digest(computed, name):
     assert computed[name] == PINNED[name], (
         f"front-end outputs changed on {name!r}: computed {computed[name]}")
+
+
+def test_arrow_column_decodes_like_list():
+    """The kernel hands decode_payload_batch its Arrow text column: a
+    sliced array (non-zero offset), a chunked one, large_string offsets
+    and nulls (malformed) must decode as the list of str does."""
+    import pyarrow as pa
+
+    payloads = list(_cases().values())
+    want = [_decoded_repr(d) for d in decode_payload_batch(payloads)]
+    arr = pa.array([None] + payloads, pa.string())
+    for col in (arr.slice(1), pa.chunked_array([arr.slice(1, 5),
+                                                arr.slice(6)]),
+                arr.slice(1).cast(pa.large_string())):
+        assert [_decoded_repr(d) for d in decode_payload_batch(col)] == want
+    nulls = decode_payload_batch(arr.slice(0, 2))
+    assert _decoded_repr(nulls[0]) == "malformed"
+    assert _decoded_repr(nulls[1]) == want[0]
 
 
 if __name__ == "__main__":
