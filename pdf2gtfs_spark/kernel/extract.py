@@ -303,11 +303,13 @@ def _field_texts(texts: np.ndarray, order: np.ndarray,
     """``"".join(texts[order][s:e]).strip()`` for each segment [s, e)
     that ``starts`` opens, as one join split back on a separator put at
     every segment start.  When every text is one ASCII char without a
-    tab (the common case: one glyph per char box) the permutation and
-    the separators work on the bytes of one join; otherwise on the
-    object array, with a tab, or the first code point no text holds."""
-    joined = "".join(texts.tolist())
-    if (len(joined) == len(texts) and joined.isascii()
+    tab (the common case: one glyph per char box; no text is empty and
+    the join is as long as the texts are many) the permutation and the
+    separators work on the bytes of one join; otherwise on the object
+    array, with a tab, or the first code point no text holds."""
+    parts = texts.tolist()
+    joined = "".join(parts)
+    if (len(joined) == len(parts) and all(parts) and joined.isascii()
             and "\t" not in joined):
         raw = np.frombuffer(joined.encode("ascii"), np.uint8)
         cut = np.insert(raw[order], starts[1:], 9).tobytes().decode("ascii")
@@ -396,13 +398,7 @@ def chars_to_field_arrays(chars: dict, cfg: ExtractConfig) -> _Fields:
     starts = np.flatnonzero(is_new)
     texts = _field_texts(np.asarray(chars["text"], dtype=object), order,
                          starts)
-    if scale and not resorted and not (box[:2] == 0).any():
-        # 2-decimal (so finite) coordinates in (y0, x0) order: a field's
-        # first char holds its minimal x0 and y0 (a zero could be -0.0,
-        # where reduceat would return the last of the tied zeros)
-        lo = np.take(box[:2], starts, axis=1)
-    else:
-        lo = np.minimum.reduceat(box[:2], starts, axis=1)
+    lo = np.minimum.reduceat(box[:2], starts, axis=1)
     hi = np.maximum.reduceat(box[2:], starts, axis=1)
     f = _Fields(text=np.array(texts, dtype=object), x0=lo[0], y0=lo[1],
                 x1=hi[0], y1=hi[1], line_id=line_id[starts], ftype=None)
@@ -527,49 +523,39 @@ def _cluster_columns(tf: _Fields, body: np.ndarray, m: _Matchers) -> _Cells:
     col_id = np.cumsum(new_col) - 1
     line_id = tf.line_id[order]
     y0 = tf.y0[order]
-    key = col_id * (line_id.max() + 1) + line_id
-    sorted_key = np.sort(key)
-    if not (sorted_key[1:] == sorted_key[:-1]).any():
-        # one field per (col, row), the common case: every array is
-        # taken once, in the final (col, y0) order
-        by_col = np.lexsort((y0, col_id))
-        idx = order[by_col]
-        return _Cells(col_id[by_col], line_id[by_col], x0[by_col],
-                      y0[by_col], x1[by_col], tf.y1[idx], tf.text[idx],
-                      tf.ftype[idx])
-
-    cells = _Cells(col_id, line_id, x0, y0, x1, tf.y1[order],
-                   tf.text[order], tf.ftype[order])
+    y1 = tf.y1[order]
+    text = tf.text[order]
+    ftype = tf.ftype[order]
 
     # merge fields sharing (col, row): texts joined with " " when there
     # is an x-gap (container.py:339-348); bboxes unioned. Rare; only
-    # affected groups take the slow path and get their ftype recomputed.
-    uniq, counts = np.unique(key, return_counts=True)
-    keep_mask = np.ones(len(cells), dtype=bool)
-    arrs = cells
-    for k in uniq[counts > 1]:
+    # affected groups get their ftype recomputed.
+    key = col_id * (line_id.max() + 1) + line_id
+    sorted_key = np.sort(key)
+    shared = np.unique(sorted_key[1:][sorted_key[1:] == sorted_key[:-1]])
+    absorbed = np.zeros(len(key), dtype=bool)
+    for k in shared:
         idxs = np.flatnonzero(key == k)
-        idxs = idxs[np.argsort(arrs.x0[idxs], kind="stable")]
-        keep = idxs[0]
-        text = arrs.text[keep]
-        cx1 = arrs.x1[keep]
+        idxs = idxs[np.argsort(x0[idxs], kind="stable")]
+        lead = idxs[0]
+        merged = text[lead]
+        cx1 = x1[lead]
         for j in idxs[1:]:
-            sep = " " if (arrs.x0[j] - cx1) != 0 else ""
-            text = text + sep + arrs.text[j]
-            cx1 = max(cx1, arrs.x1[j])
-            keep_mask[j] = False
-        arrs.text[keep] = text
-        arrs.x0[keep] = arrs.x0[idxs].min()
-        arrs.y0[keep] = arrs.y0[idxs].min()
-        arrs.x1[keep] = arrs.x1[idxs].max()
-        arrs.y1[keep] = arrs.y1[idxs].max()
-        arrs.ftype[keep] = m.field_type_codes([text])[0]
-    cells = _Cells(*[getattr(arrs, n)[keep_mask] for n in (
-        "col_id", "line_id", "x0", "y0", "x1", "y1", "text", "ftype")])
+            sep = " " if (x0[j] - cx1) != 0 else ""
+            merged = merged + sep + text[j]
+            cx1 = max(cx1, x1[j])
+            absorbed[j] = True
+        text[lead] = merged
+        x0[lead] = x0[idxs].min()
+        y0[lead] = y0[idxs].min()
+        x1[lead] = x1[idxs].max()
+        y1[lead] = y1[idxs].max()
+        ftype[lead] = m.field_type_codes([merged])[0]
 
-    order = np.lexsort((cells.y0, cells.col_id))  # stable (col, y0)
-    return _Cells(*[getattr(cells, n)[order] for n in (
-        "col_id", "line_id", "x0", "y0", "x1", "y1", "text", "ftype")])
+    kept = np.flatnonzero(~absorbed)
+    by_col = kept[np.lexsort((y0[kept], col_id[kept]))]  # stable (col, y0)
+    return _Cells(col_id[by_col], line_id[by_col], x0[by_col], y0[by_col],
+                  x1[by_col], y1[by_col], text[by_col], ftype[by_col])
 
 
 def _id_mask(ids: np.ndarray, wanted) -> np.ndarray:
@@ -638,14 +624,13 @@ def _column_types(cells: _Cells, edges: list[int],
 
 @dataclass
 class _TableAnalysis:
-    line_order: list[int]     # ascending line ids
+    # ascending line ids; a line's row is its index here
+    line_order: list[int]
     rtypes: list[str]
     row_type_of_line: dict[int, str]
-    line_to_row: dict[int, int]
     tfields: _Fields
     cells: _Cells
-    col_order: list[int]      # 0..n_cols-1
-    # column c holds cells[col_edges[c]:col_edges[c + 1]]
+    # column c (0 <= c < n_cols) holds cells[col_edges[c]:col_edges[c + 1]]
     col_edges: list[int]
     col_types: dict[int, str]
     # ROW_LADDER index of each field's row (parallel to tfields)
@@ -654,15 +639,28 @@ class _TableAnalysis:
     # multi-stop split DECISION (see _column_types docstring)
     upgraded_stop_cols: set[int] = dc_field(default_factory=set)
 
+    @property
+    def n_cols(self) -> int:
+        return len(self.col_edges) - 1
+
+    def rows_of(self, line_ids: np.ndarray) -> np.ndarray:
+        """Row index of each line id."""
+        return np.searchsorted(self.line_order, line_ids)
+
+
+def _body_fields(field_rows: np.ndarray) -> np.ndarray:
+    """Indices of the fields of ANNOTATION, ROUTE_INFO and DATA rows,
+    given each field's row as its ROW_LADDER index."""
+    return np.flatnonzero((field_rows > _ROW_HEADER)
+                          & (field_rows < _ROW_OTHER))
+
 
 def _analyze_table(tf: _Fields, line_order: list[int],
                    m: _Matchers) -> Optional[_TableAnalysis]:
     codes = _row_codes(tf)
     rtypes = [ROW_LADDER[c] for c in codes[line_order].tolist()]
     field_rows = codes[tf.line_id]
-    # the body: fields of ANNOTATION, ROUTE_INFO and DATA rows
-    body = np.flatnonzero((field_rows > _ROW_HEADER)
-                          & (field_rows < _ROW_OTHER))
+    body = _body_fields(field_rows)
     if len(body) == 0:
         return None
     cells = _cluster_columns(tf, body, m)
@@ -672,9 +670,8 @@ def _analyze_table(tf: _Fields, line_order: list[int],
     return _TableAnalysis(
         line_order=list(line_order), rtypes=rtypes,
         row_type_of_line=dict(zip(line_order, rtypes)),
-        line_to_row={lid: i for i, lid in enumerate(line_order)},
-        tfields=tf, cells=cells, col_order=list(range(n_cols)),
-        col_edges=edges, col_types=col_types, field_rows=field_rows,
+        tfields=tf, cells=cells, col_edges=edges, col_types=col_types,
+        field_rows=field_rows,
         upgraded_stop_cols=upgraded)
 
 
@@ -740,14 +737,9 @@ def fix_split_stop_names(texts: list[str], x0s: list[float],
 
 def _csv_cells(texts: list[str]) -> list[str]:
     """The CSV writer's cell texts (pdftable.py:185-234): double quotes
-    dropped, stripped, quoted when they hold a comma.  One join decides
-    whether each edit has anything to do."""
-    if '"' in "".join(texts):
-        texts = [t.replace('"', "") for t in texts]
-    texts = list(map(str.strip, texts))
-    if "," in "".join(texts):
-        texts = [f'"{t}"' if "," in t else t for t in texts]
-    return texts
+    dropped, stripped, quoted when they hold a comma."""
+    texts = [t.replace('"', "").strip() for t in texts]
+    return [f'"{t}"' if "," in t else t for t in texts]
 
 
 def table_to_csv(a: _TableAnalysis, placeable: np.ndarray) -> str:
@@ -761,10 +753,10 @@ def table_to_csv(a: _TableAnalysis, placeable: np.ndarray) -> str:
     assignment (a table's cells have distinct (row, col) slots after
     the merge in _cluster_columns); a line's row is its index in the
     ascending ``line_order``."""
-    n_rows, n_cols = len(a.line_order), len(a.col_order)
+    n_rows, n_cols = len(a.line_order), a.n_cols
     cells = a.cells
     grid = np.full(n_rows * n_cols, "", dtype=object)
-    grid[np.searchsorted(a.line_order, cells.line_id) * n_cols
+    grid[a.rows_of(cells.line_id) * n_cols
          + cells.col_id] = _csv_cells(cells.text.tolist())
 
     if len(placeable):
@@ -773,8 +765,7 @@ def table_to_csv(a: _TableAnalysis, placeable: np.ndarray) -> str:
         xs = np.minimum.reduceat(cells.x0, a.col_edges[:-1])
         cols = np.minimum(np.searchsorted(xs, tf.x0[placeable],
                                           side="right"), n_cols - 1)
-        slots = (np.searchsorted(a.line_order, tf.line_id[placeable])
-                 * n_cols + cols)
+        slots = a.rows_of(tf.line_id[placeable]) * n_cols + cols
         for k, txt in zip(slots.tolist(), tf.text[placeable]):
             grid[k] = txt
     # a row of n_cols empty cells joins to n_cols - 1 commas
@@ -868,20 +859,18 @@ def put_stop_value(slots: list, names, annots, stop: Optional[int],
 
 
 def _header_texts_for_columns(header: _Fields,
-                              line_to_row: dict[int, int],
                               col_x1s: np.ndarray) -> list[str]:
     """get_header_from_column (pdftable/pdftable.py:121-129).
 
-    Only the first header row matters (the reference's inner loop
-    always returns at the row's last field); within it, the answer is
+    Only the first header row, the lowest line id, matters (the
+    reference's inner loop always returns at the row's last field);
+    within it, the answer is
     the first field whose successor starts at/after the column's right
     edge — a searchsorted over the successors' x0.
     """
     if len(header) == 0:
         return [""] * len(col_x1s)
-    first_lid = min(set(header.line_id.tolist()),
-                    key=lambda lid: line_to_row[lid])
-    mask = header.line_id == first_lid
+    mask = header.line_id == header.line_id.min()
     order = np.argsort(header.x0[mask], kind="stable")
     hx = header.x0[mask][order]
     texts = header.text[mask][order]
@@ -909,8 +898,8 @@ def _normalize_timetable(a: _TableAnalysis,
     texts_l = cells.text.tolist()
     rt = np.array([a.row_type_of_line[l] for l in lids_l],
                   dtype=object)
-    row_l = [a.line_to_row[l] for l in lids_l]
-    row_idx = np.array(row_l)
+    row_idx = a.rows_of(cells.line_id)
+    row_l = row_idx.tolist()
     ctype = np.array([a.col_types[c] for c in cids_l], dtype=object)
 
     # stops: DATA-row cells of STOP columns, already in (col, y0) order
@@ -933,13 +922,12 @@ def _normalize_timetable(a: _TableAnalysis,
     # None (and collapses, last-write-wins).  get_from_id returns the
     # FIRST stop with the row id.  Mirror: per entry column, only stops
     # whose column precedes it are visible (sweep v4 seed 50039).
-    col_pos = {cid: k for k, cid in enumerate(a.col_order)}
-    stop_col_pos = [col_pos[int(cells.col_id[i])] for i in stop_idx]
+    stop_col_of = cells.col_id[stop_idx].tolist()
 
-    def _rows_visible_from(pos: int) -> dict[int, int]:
+    def _rows_visible_from(cid: int) -> dict[int, int]:
         vis: dict[int, int] = {}
         for p, r in enumerate(stop_rows):
-            if stop_col_pos[p] < pos and r not in vis:
+            if stop_col_of[p] < cid and r not in vis:
                 vis[r] = p
         return vis
 
@@ -952,7 +940,7 @@ def _normalize_timetable(a: _TableAnalysis,
     annot_mask = ((ctype == C_STOP_ANNOTATION)
                   & (rt != R_ROUTE_INFO) & (rt != R_ANNOTATION))
     for i in np.flatnonzero(annot_mask):
-        vis = _rows_visible_from(col_pos[int(cells.col_id[i])])
+        vis = _rows_visible_from(cids_l[i])
         p = vis.get(int(row_idx[i]))
         if p is not None:
             stop_annots[p] = cells.text[i]
@@ -965,18 +953,15 @@ def _normalize_timetable(a: _TableAnalysis,
     } for p, (r, nm, ic) in enumerate(zip(stop_rows, stop_names, is_conn))]
 
     # entries: one per DATA/REPEAT column with at least one DATA value
-    entry_cols = [cid for cid in a.col_order
+    entry_cols = [cid for cid in range(a.n_cols)
                   if a.col_types[cid] in (C_DATA, C_REPEAT)]
     if not entry_cols:
         return [], stops_records
 
     edges = a.col_edges
-    seg_of = {cid: (edges[cid], edges[cid + 1]) for cid in a.col_order}
-
-    col_x1s = np.array([float(cells.x1[slice(*seg_of[c])].max())
+    col_x1s = np.array([float(cells.x1[edges[c]:edges[c + 1]].max())
                         for c in entry_cols])
-    header_texts = _header_texts_for_columns(header, a.line_to_row,
-                                             col_x1s)
+    header_texts = _header_texts_for_columns(header, col_x1s)
 
     # per-column metadata (loops over columns, not cells)
     value_mask = (rt == R_DATA) & ((ctype == C_DATA) | (ctype == C_REPEAT))
@@ -986,7 +971,7 @@ def _normalize_timetable(a: _TableAnalysis,
     meta = {}
     entry_id = -1
     for cid, header_text in zip(entry_cols, header_texts):
-        s, e = seg_of[cid]
+        s, e = edges[cid], edges[cid + 1]
         seg_values = np.flatnonzero(value_mask[s:e])
         if len(seg_values) == 0:
             continue
@@ -1024,7 +1009,7 @@ def _normalize_timetable(a: _TableAnalysis,
     def _visible(cid: int) -> dict[int, int]:
         vis = visible_cache.get(cid)
         if vis is None:
-            vis = visible_cache[cid] = _rows_visible_from(col_pos[cid])
+            vis = visible_cache[cid] = _rows_visible_from(cid)
         return vis
 
     walk_annot = [""] * len(stop_names)
@@ -1079,7 +1064,7 @@ def _process_table(table_id: int, a: _TableAnalysis,
     # (tests/test_ref_differential.py legacy surface) proves the
     # current code repairs them pre-CSV; the artifact predates that.
     fixed_stop_text: dict[int, str] = {}
-    stop_cols = [c for c in a.col_order if a.col_types[c] == C_STOP]
+    stop_cols = [c for c in range(a.n_cols) if a.col_types[c] == C_STOP]
     cells = a.cells
     if stop_cols:
         # the first stop column's cells, y0-sorted
@@ -1102,7 +1087,7 @@ def _process_table(table_id: int, a: _TableAnalysis,
             return None
         return TableResult(
             table_id=table_id, csv_text=csv_text, row_types=a.rtypes,
-            col_types=[a.col_types[c] for c in a.col_order],
+            col_types=[a.col_types[c] for c in range(a.n_cols)],
             cells_records=[], entries_records=[], stops_records=[])
 
     # all fields of HEADER rows: used for per-column header text
@@ -1111,10 +1096,11 @@ def _process_table(table_id: int, a: _TableAnalysis,
     entries_records, stops_records = _normalize_timetable(
         a, header, cfg, m, fixed_stop_text)
 
-    col_pos = {cid: i for i, cid in enumerate(a.col_order)}
+    rows_l = a.rows_of(cells.line_id).tolist()
+    cids_l = cells.col_id.tolist()
     cells_records = [{
-        "row_idx": a.line_to_row[cells.line_id[i]],
-        "col_idx": col_pos[cells.col_id[i]],
+        "row_idx": rows_l[i],
+        "col_idx": cids_l[i],
         "text": cells.text[i],
         "row_type": a.row_type_of_line[cells.line_id[i]],
         "col_type": a.col_types[cells.col_id[i]],
@@ -1127,7 +1113,7 @@ def _process_table(table_id: int, a: _TableAnalysis,
         table_id=table_id,
         csv_text=csv_text,
         row_types=a.rtypes,
-        col_types=[a.col_types[c] for c in a.col_order],
+        col_types=[a.col_types[c] for c in range(a.n_cols)],
         cells_records=cells_records,
         entries_records=entries_records,
         stops_records=stops_records,
@@ -1189,14 +1175,7 @@ def extract_turn(payload: Optional[str],
 
     table_id = 0
     for line_order in tables:
-        # ascending line ids; fields are line-sorted, so a table of
-        # consecutive lines is a slice (views, no copies)
-        first, last = line_order[0], line_order[-1]
-        if last - first + 1 == len(line_order):
-            tf = fields.take(slice(*np.searchsorted(
-                fields.line_id, (first, last + 1)).tolist()))
-        else:
-            tf = fields.take(_id_mask(fields.line_id, set(line_order)))
+        tf = fields.take(_id_mask(fields.line_id, set(line_order)))
         if len(tf) == 0:
             continue
         analysis = _analyze_table(tf, line_order, m)
@@ -1225,9 +1204,7 @@ def _merge_mutated_fields(a: _TableAnalysis, m: _Matchers) -> _Fields:
     unsplit tables keep their pre-merge row types, like the reference,
     whose update_type only reruns inside _split_at."""
     tf = a.tfields
-    body_lines = {lid for lid, t in zip(a.line_order, a.rtypes)
-                  if t in (R_DATA, R_ANNOTATION, R_ROUTE_INFO)}
-    body_idx = np.flatnonzero(_id_mask(tf.line_id, body_lines))
+    body_idx = _body_fields(a.field_rows)
     if len(body_idx) == 0:
         return tf
     text = tf.text.copy()
@@ -1277,11 +1254,11 @@ def _split_multi_stop_columns(a: _TableAnalysis,
     lazily in order; the upgrade lands on an already-visited column).
     Once the split proceeds, split_at_stop_columns re-scans with warm
     caches, so the BOUNDARIES include upgraded columns."""
-    genuine = [c for c in a.col_order if a.col_types[c] == C_STOP
+    genuine = [c for c in range(a.n_cols) if a.col_types[c] == C_STOP
                and c not in a.upgraded_stop_cols]
     if len(genuine) <= 1:
         return [a]
-    stop_cols = [c for c in a.col_order if a.col_types[c] == C_STOP]
+    stop_cols = [c for c in range(a.n_cols) if a.col_types[c] == C_STOP]
     edges = a.col_edges
     boundaries = sorted(float(a.cells.x0[edges[c]:edges[c + 1]].min())
                         for c in stop_cols)[1:]

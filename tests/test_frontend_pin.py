@@ -123,6 +123,18 @@ def _cases() -> dict[str, str]:
     cases["glyphs"] = _payload(chars)
     cases["glyphs_ordered"] = _payload(sorted(chars, key=lambda c: c[:2]))
 
+    # as many empty as two-glyph texts, each pair inside one word, so
+    # the join is exactly as long as the texts are many; shuffled
+    chars = _synth_chars(25)
+    pairs = [(a, b) for a, b in zip(chars, chars[1:])
+             if a[1] == b[1] and a[2] == b[0]][::4]
+    for k, (a, b) in enumerate(pairs):
+        a[4], b[4] = ("", "fi") if k % 2 else ("ab", "")
+    random.Random(25).shuffle(chars)
+    cases["empty_multiglyph"] = _payload(chars)
+    cases["empty_multiglyph_pair"] = _payload([[10.0, 10.0, 15.0, 18.0, "ab"],
+                                               [5.0, 10.0, 10.0, 18.0, ""]])
+
     # zero-width, zero-height, inverted and off-page boxes
     chars = _synth_chars(30, n_tables=1)
     for k, c in enumerate(chars[::6]):
@@ -300,6 +312,8 @@ PINNED = {
     "ties_rowonly": "fe00862bf9d0d9ac",
     "glyphs": "b59aca5252d27724",
     "glyphs_ordered": "43e8c313165aa510",
+    "empty_multiglyph": "fd69fa7fabe3adc5",
+    "empty_multiglyph_pair": "fb673cc2e7894c70",
     "boxes": "c3e86aa4b62f8fae",
     "decimals": "7422a2f233b7b904",
     "decimals_small": "f1031c716a235f17",
@@ -339,6 +353,20 @@ def test_every_case_is_pinned(computed):
 def test_front_end_matches_pinned_digest(computed, name):
     assert computed[name] == PINNED[name], (
         f"front-end outputs changed on {name!r}: computed {computed[name]}")
+
+
+def test_field_texts_across_empty_and_multiglyph_fields():
+    """A field's text is the join of its chars' texts in x order, also
+    when an empty text and a two-glyph text fall in different fields
+    and the join is as long as the texts are many."""
+    chars = {"x0": np.array([50.0, 5.0, 55.0, 90.0, 95.0]),
+             "y0": np.full(5, 10.0),
+             "x1": np.array([55.0, 10.0, 60.0, 95.0, 100.0]),
+             "y1": np.full(5, 18.0),
+             "text": np.array(["ab", "", "c", "d", "e"], dtype=object)}
+    f = chars_to_field_arrays(chars, DEFAULT_CONFIG)
+    assert f.text.tolist() == ["abc", "de"]
+    assert f.x0.tolist() == [50.0, 90.0]
 
 
 def test_arrow_column_decodes_like_list():
