@@ -150,10 +150,11 @@ def decode_payload_batch(payloads) -> list:
     with numpy over each body's bytes, not with Python string scans.
 
     Semantics are EXACTLY decode_payload_arrays': a payload whose body
-    is not 4 tabs per non-empty line — or any batch pyarrow cannot
-    parse under the strict options above — falls back to the per-turn
-    parser, so behavioural edge cases (malformed headers, ragged
-    bodies, exotic float spellings) keep their r1-r5 outcomes.  A null
+    is not 4 tabs per non-empty line or holds a carriage return — or
+    any batch pyarrow cannot parse under the strict options above —
+    falls back to the per-turn parser, so behavioural edge cases
+    (malformed headers, ragged bodies, carriage returns, exotic float
+    spellings) keep their outcomes whatever else is in the batch.  A null
     payload is malformed.  Returns a list parallel to ``payloads`` of
     (PageBox, dict-of-arrays) or MalformedPayload instances.
     """
@@ -169,6 +170,10 @@ def decode_payload_batch(payloads) -> list:
     bounds = np.frombuffer(off_buf, off_type)[
         col.offset:col.offset + n + 1].tolist()
     data = np.frombuffer(data_buf, np.uint8)
+    # pyarrow's CSV reader also ends a line at "\r", the exact parser
+    # only at "\n": a body holding a "\r" goes to the exact parser, and
+    # one scan of the whole buffer decides whether any body is checked
+    any_cr = bool((data == 13).any())
 
     pages: list = [None] * n
     bodies: list[tuple[int, int]] = []  # byte range of each parsed body
@@ -206,7 +211,8 @@ def decode_payload_batch(payloads) -> list:
         # a 3-tab line can balance); pyarrow's strict column-count parse
         # catches any such remainder and sends the batch to the exact
         # per-turn fallback below
-        if np.count_nonzero(body == 9) != 4 * rows:
+        if (np.count_nonzero(body == 9) != 4 * rows
+                or any_cr and (body == 13).any()):
             exact.append(i)
             continue
         bodies.append((h_end + 1, e))

@@ -674,7 +674,8 @@ def extract_skewed_salted(spark, sf_dir):
     conversations spread across tasks — and the per-turn CSVs must
     still hash-equal the generator's expectations (salting must not
     perturb per-turn ordering or content).  Wall-clock evidence for
-    the same claim: tools/skew_bench.py (BENCH/BASELINE.md round 4)."""
+    the same claim: ``tools/scaling_bench.py skew`` (BENCH/BASELINE.md
+    round 4)."""
     from pdf2gtfs_spark.plans.pipeline import run_extract, turn_csvs
     from pdf2gtfs_spark.sources.transcripts import generate_transcripts
 

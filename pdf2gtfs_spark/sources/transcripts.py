@@ -22,7 +22,9 @@ table is written as parquet and read back distributed.
 from __future__ import annotations
 
 import csv
+import functools
 import io
+import warnings
 import zlib
 from datetime import datetime, timedelta
 from pathlib import Path
@@ -125,21 +127,35 @@ def _header_row_ids(grid: list[list[str]],
             if any(is_header_text(c) for c in row if c)]
 
 
+@functools.cache
+def _warn_missing(where: Path, missing: tuple[str, ...]) -> None:
+    """One warning per process and set of missing fixtures."""
+    warnings.warn(f"golden fixtures missing under REFERENCE_FIXTURE_DIR "
+                  f"{where}: {', '.join(missing)}", stacklevel=3)
+
+
 def load_fixture_grids(cfg: ExtractConfig = DEFAULT_CONFIG
                        ) -> list[tuple[str, list[list[str]], list[int]]]:
-    """(name, grid, header_rows) for each non-empty reference fixture."""
-    out = []
+    """(name, grid, header_rows) for each non-empty reference fixture.
+
+    Missing fixture files are left out with a warning that names them
+    (once per process): callers such as bench.py run on without the
+    reference checkout."""
+    out, missing = [], []
     # vag_1/00_00.csv is intentionally absent: the reference fixture file
     # is empty (0 bytes), so there is nothing to encode or compare.
     for rel in ["vag_1/01_00.csv", "kvv_s1/01_00.csv"]:
         p = REFERENCE_FIXTURE_DIR / rel
         if not p.exists():
+            missing.append(rel)
             continue
         text = p.read_text()
         if not text.strip():
             continue
         grid = _grid_from_csv_text(text)
         out.append((rel, grid, _header_row_ids(grid, cfg)))
+    if missing:
+        _warn_missing(REFERENCE_FIXTURE_DIR, tuple(missing))
     return out
 
 

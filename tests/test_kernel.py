@@ -290,6 +290,27 @@ class TestGoldenFixtures:
         p = Path("/root/reference/test/data/vag_1/00_00.csv")
         assert not p.exists() or p.read_text().strip() == ""
 
+    def test_missing_fixtures_warn(self, monkeypatch, tmp_path):
+        import warnings
+
+        from pdf2gtfs_spark.sources import transcripts
+        monkeypatch.setattr(transcripts, "REFERENCE_FIXTURE_DIR", tmp_path)
+        with pytest.warns(UserWarning, match="REFERENCE_FIXTURE_DIR") as w:
+            assert transcripts.load_fixture_grids() == []
+        assert len(w) == 1
+        assert "vag_1/01_00.csv" in str(w[0].message)
+        assert "kvv_s1/01_00.csv" in str(w[0].message)
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")      # warned once already
+            assert transcripts.load_fixture_grids() == []
+        (tmp_path / "kvv_s1").mkdir()
+        (tmp_path / "kvv_s1" / "01_00.csv").write_text("a,b\n1,2\n")
+        with pytest.warns(UserWarning) as w:
+            grids = transcripts.load_fixture_grids()
+        assert [g[0] for g in grids] == ["kvv_s1/01_00.csv"]
+        assert "vag_1/01_00.csv" in str(w[0].message)
+        assert "kvv_s1" not in str(w[0].message)
+
     @pytest.mark.parametrize("idx", [0, 1])
     def test_fixture_csv_byte_equality(self, idx):
         turns = fixture_turns()

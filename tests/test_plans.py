@@ -142,8 +142,9 @@ class TestPlanQuality:
         kernel input on (conv_id, turn_idx) — the plan must show the
         turn-grain hash exchange below MapInArrow — and AQE skew-join
         splitting stays available for the join-heavy operators
-        (evidence: tools/skew_bench.py, BENCH/BASELINE.md round-4
-        section, 0.815 efficiency on the monster-conversation input)."""
+        (evidence: ``tools/scaling_bench.py skew``, BENCH/BASELINE.md
+        round-4 section, 0.815 efficiency on the monster-conversation
+        input)."""
         from pdf2gtfs_spark.plans.pipeline import run_extract
 
         tdf = spark.createDataFrame(
