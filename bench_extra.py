@@ -86,8 +86,8 @@ def main() -> None:
     for name in names:
         fn = QUERIES[name]
         spark.sparkContext.setJobDescription(f"bench_extra: {name}")
-        df = fn(spark, sf_dir)
         if plan_dir:
+            df = fn(spark, sf_dir)
             os.makedirs(plan_dir, exist_ok=True)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
