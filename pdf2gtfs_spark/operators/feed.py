@@ -3,7 +3,9 @@ feed.zip (reference: datastructures/gtfs_output/handler.py:118-310).
 
 Spark-first shapes:
 - routes from first/last parseable stop per entry (routes.py:138-170):
-  groupBy(trip) + min_by/max_by — one shuffle at trip grain;
+  groupBy(trip) + min_by/max_by — one shuffle at trip grain, whose rows
+  also carry each trip's service, so routes.txt and trips.txt project
+  from the same aggregation;
 - trips/stop_times pruning (handler.py:259-264, trips.py:66-72):
   left_semi joins (J9), never collected;
 - holiday calendar_dates (handler.py:219-237): broadcast cross join of
@@ -32,9 +34,9 @@ from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pdf2gtfs_spark.operators import register
 from pdf2gtfs_spark.operators._aux import aux_glob, aux_path, write_aux_spark
 from pdf2gtfs_spark.operators.gtfs import (
-    _ST_TIME_RE, _md5_id, _time_parse_cols, annots_key_col,
-    apply_service_day_offsets, build_calendar, build_stop_times,
-    build_stops, build_trips, expand_repeats, service_day_offsets,
+    _ST_TIME_RE, _md5_id, _repeat_copies, _time_parse_cols, _trip_key,
+    annots_key_col, apply_service_day_offsets, build_calendar,
+    build_stop_times, build_stops, handler_walk,
 )
 from pdf2gtfs_spark.sources import literal_frame
 
@@ -51,12 +53,11 @@ def holiday_dates() -> list[str]:
             for m, d in HOLIDAY_MONTH_DAYS]
 
 
-def build_routes(entries: DataFrame,
-                 cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Routes from each entry's first/last parseable stop
-    (routes.py:138-170); dedup on (agency, short, long) with
-    deterministic ids (A4 first-wins semantics are id-free here because
-    the id is a pure function of the key)."""
+def _trip_keys(entries: DataFrame, cfg: ExtractConfig) -> DataFrame:
+    """One row per timed entry with a parseable value: ``trip_id``,
+    its route (``route_id``, ``route_short_name``, ``route_long_name``,
+    from the first/last parseable stop, routes.py:138-170) and its
+    calendar ``service_id`` (days + annotations key)."""
     # NOTE connection stops are NOT excluded: the reference's
     # names_from_entry iterates entry.values, which still carries the
     # values of connection-flagged stops (routes.py:138-161; pinned by
@@ -64,47 +65,7 @@ def build_routes(entries: DataFrame,
     # stop_times.txt skip connections.
     timed = (entries.where("kind = 'time' AND value IS NOT NULL "
                            "AND stop_name IS NOT NULL")
-             .withColumn("trip_key",
-                         F.concat_ws("/", "conv_id", "turn_idx",
-                                     "table_id", "entry_id")))
-    # names_from_entry runs RAW strptime (routes.py:149-152): no
-    # space strip (unlike Time.from_string) and strict field ranges —
-    # '5. 35' and '5.62' are not route-name anchors (gtfs sweep v4)
-    raw_is_time, _ = _time_parse_cols(F.col("value"), cfg.time_format,
-                                      bounded=True)
-    parseable = timed.where(raw_is_time)
-    per_trip = (parseable.groupBy("trip_key")
-                .agg(F.min_by("stop_name", "stop_pos").alias("first_stop"),
-                     F.max_by("stop_name", "stop_pos").alias("last_stop"),
-                     F.first("route_name", ignorenulls=True)
-                     .alias("route_name")))
-    routes = (per_trip
-              .select(F.coalesce("route_name", F.lit(""))
-                      .alias("route_short_name"),
-                      F.concat_ws("-", "first_stop", "last_stop")
-                      .alias("route_long_name"))
-              .distinct()
-              .withColumn("agency_id", F.lit(AGENCY_ROW[0]))
-              .withColumn("route_id", _md5_id(
-                  F.concat_ws("|", "agency_id", "route_short_name",
-                              "route_long_name")))
-              .withColumn("route_type", F.lit(3)))
-    return routes.select("route_id", "agency_id", "route_short_name",
-                         "route_long_name", "route_type")
-
-
-def trip_route_service(entries: DataFrame,
-                       cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """trips.txt rows: each timed entry becomes a trip bound to its
-    route (via first/last stop key) and calendar service (via
-    days+annotations key)."""
-    # connection stops included — must mirror build_routes' route key
-    # exactly (see the NOTE there)
-    timed = (entries.where("kind = 'time' AND value IS NOT NULL "
-                           "AND stop_name IS NOT NULL")
-             .withColumn("trip_id",
-                         F.concat_ws("/", "conv_id", "turn_idx",
-                                     "table_id", "entry_id")))
+             .withColumn("trip_id", _trip_key()))
     # entries may carry days/annotations as arrays (pipeline) or as
     # pre-joined keys (the materialized oracle handoff)
     if "days_key" not in timed.columns:
@@ -114,12 +75,12 @@ def trip_route_service(entries: DataFrame,
                 F.col("days"), F.array().cast("array<string>")), ","))
     if "annots_key" not in timed.columns:
         timed = timed.withColumn("annots_key", annots_key_col())
-    # must mirror build_routes' raw-strptime anchor rule (see NOTE
-    # there): the trip's route key comes from the same first/last pair
+    # names_from_entry runs RAW strptime (routes.py:149-152): no
+    # space strip (unlike Time.from_string) and strict field ranges —
+    # '5. 35' and '5.62' are not route-name anchors (gtfs sweep v4)
     raw_is_time, _ = _time_parse_cols(F.col("value"), cfg.time_format,
                                       bounded=True)
-    parseable = timed.where(raw_is_time)
-    per_trip = (parseable.groupBy("trip_id")
+    per_trip = (timed.where(raw_is_time).groupBy("trip_id")
                 .agg(F.min_by("stop_name", "stop_pos").alias("first_stop"),
                      F.max_by("stop_name", "stop_pos").alias("last_stop"),
                      F.first("route_name", ignorenulls=True)
@@ -127,13 +88,40 @@ def trip_route_service(entries: DataFrame,
                      F.first("days_key").alias("days_key"),
                      F.first("annots_key").alias("annots_key")))
     return (per_trip
+            .select("trip_id",
+                    F.coalesce("route_name", F.lit(""))
+                    .alias("route_short_name"),
+                    F.concat_ws("-", "first_stop", "last_stop")
+                    .alias("route_long_name"),
+                    _md5_id(F.concat_ws("|", "days_key", "annots_key"))
+                    .alias("service_id"))
             .withColumn("route_id", _md5_id(F.concat_ws(
-                "|", F.lit(AGENCY_ROW[0]),
-                F.coalesce("route_name", F.lit("")),
-                F.concat_ws("-", "first_stop", "last_stop"))))
-            .withColumn("service_id", _md5_id(
-                F.concat_ws("|", "days_key", "annots_key")))
-            .select("trip_id", "route_id", "service_id"))
+                "|", F.lit(AGENCY_ROW[0]), "route_short_name",
+                "route_long_name"))))
+
+
+def _routes(keys: DataFrame) -> DataFrame:
+    """routes.txt rows of a ``_trip_keys`` frame; dedup on (agency,
+    short, long) with deterministic ids (A4 first-wins semantics are
+    id-free here because the id is a pure function of the key)."""
+    return (keys.select("route_id", F.lit(AGENCY_ROW[0]).alias("agency_id"),
+                        "route_short_name", "route_long_name",
+                        F.lit(3).alias("route_type"))
+            .distinct())
+
+
+def build_routes(entries: DataFrame,
+                 cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Routes from each entry's first/last parseable stop."""
+    return _routes(_trip_keys(entries, cfg))
+
+
+def trip_route_service(entries: DataFrame,
+                       cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
+    """trips.txt rows: each timed entry becomes a trip bound to its
+    route and calendar service."""
+    return _trip_keys(entries, cfg).select("trip_id", "route_id",
+                                          "service_id")
 
 
 def build_calendar_dates(calendar: DataFrame,
@@ -171,24 +159,23 @@ def build_feed(entries: DataFrame, spark: SparkSession,
     Pass ``stops_src`` (pipeline.stops_table) so stops.txt also carries
     stops without any entry value, like the reference does."""
     stops = build_stops(entries, cfg, stops_src=stops_src)
-    base_trips = build_trips(entries)
     st = build_stop_times(entries, stops, cfg)
     # cross-entry service-day offsets precede repeat expansion: the
     # reference duplicates the already-shifted previous trip and
-    # compares against the already-shifted next (handler.py:144-217)
+    # compares against the already-shifted next (handler.py:144-217);
+    # one walk yields both the offsets and the repeat sandwiches
+    walk = handler_walk(entries, st)
     st = apply_service_day_offsets(
-        st, service_day_offsets(entries, st, cfg))
-    rep = expand_repeats(entries, st, cfg)
+        st, walk.select("trip_id", "shift_seconds"))
+    rep = _repeat_copies(entries, walk, st, cfg)
     stop_times = st.select(
         "trip_id", "stop_sequence", "arrival_time", "departure_time",
         "stop_id").unionByName(rep.select(
             "trip_id", "stop_sequence", "arrival_time", "departure_time",
             "stop_id"))
-    routes = build_routes(entries, cfg)
+    keys = _trip_keys(entries, cfg)
     cal = build_calendar(entries)
-    trs = trip_route_service(entries, cfg)
-    trips = (base_trips.select("trip_id")
-             .join(trs, "trip_id"))
+    trs = keys.select("trip_id", "route_id", "service_id")
     # repeat-expanded trips ("<next-anchor>#k") inherit the NEXT (right)
     # anchor's route/service — the reference's trip_factory is built
     # from the current entry (handler.py:163-216)
@@ -198,8 +185,9 @@ def build_feed(entries: DataFrame, spark: SparkSession,
                  .join(trs.withColumnRenamed("trip_id", "anchor"),
                        "anchor")
                  .drop("anchor"))
-    trips = trips.unionByName(rep_trips)
-    trips_kept, routes_kept = remove_unused(trips, stop_times, routes)
+    trips = trs.unionByName(rep_trips)
+    trips_kept, routes_kept = remove_unused(trips, stop_times,
+                                            _routes(keys))
     agency = literal_frame(
         spark, [AGENCY_ROW], "agency_id string, agency_name string, "
         "agency_url string, agency_timezone string")

@@ -15,7 +15,9 @@ All ops are pure DataFrame transformations over the extraction output
 - calendar: dedup on (days, annotations) (calendar.py:109-123)
 
 Scale: every op is a window or hash-shuffle on (conv_id-derived) keys;
-no driver loops, no UDFs.
+no driver loops. One grouped pandas UDF remains: ``handler_walk``, the
+reference's sequential per-table handler loop (service-day shifts and
+repeat anchors), run per (conv, turn, table) group.
 """
 
 from __future__ import annotations
@@ -61,6 +63,11 @@ def _md5_id(col):
     """Deterministic 60-bit id from a key column (X18 replacement —
     sequential UIDs are nondeterministic under distribution)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
+
+
+def _trip_key():
+    """Deterministic trip key of an entry: conv/turn/table/entry."""
+    return F.concat_ws("/", "conv_id", "turn_idx", "table_id", "entry_id")
 
 
 def gtfs_time_str(seconds_col):
@@ -119,18 +126,6 @@ def build_stops(entries: DataFrame,
                 F.col("stop_name"), "normalized_name"))
 
 
-def build_trips(entries: DataFrame) -> DataFrame:
-    """One trip per timed entry; deterministic trip key."""
-    return (entries.where("kind = 'time'")
-            .select("conv_id", "turn_idx", "table_id", "entry_id",
-                    "header_text", "days", "route_name")
-            .distinct()
-            .withColumn(
-                "trip_id",
-                F.concat_ws("/", "conv_id", "turn_idx", "table_id",
-                            "entry_id")))
-
-
 def build_stop_times(entries: DataFrame, stops: DataFrame,
                      cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     """entries -> GTFS stop_times rows.
@@ -146,9 +141,7 @@ def build_stop_times(entries: DataFrame, stops: DataFrame,
     timed = (entries
              .where("kind = 'time' AND value IS NOT NULL "
                     "AND stop_name IS NOT NULL")
-             .withColumn("trip_id",
-                         F.concat_ws("/", "conv_id", "turn_idx",
-                                     "table_id", "entry_id")))
+             .withColumn("trip_id", _trip_key()))
     # reference skips connection stops before emitting stop_times
     # (gtfs_output/stop_times.py:205-207); entries frames built by hand
     # in tests may lack the flag, so filter only when present
@@ -207,14 +200,22 @@ def expand_repeats(entries: DataFrame, stop_times: DataFrame,
     shifted copies of the previous trip until the next trip's start is
     reached. Shift of the k-th copy under the cycle strategy:
         shift(k) = (k // len) * sum(deltas) + prefix[k % len]
-    computed with element_at over a per-entry cumulative-sum array —
-    no UDF, no driver loop.
+    computed with element_at over a per-entry cumulative-sum array.
+    The sandwiches come from ``handler_walk``; they depend only on the
+    entries' kind, days and intervals, never on stop times.
     """
+    return _repeat_copies(entries, handler_walk(entries, stop_times),
+                          stop_times, cfg)
+
+
+def _repeat_copies(entries: DataFrame, walk: DataFrame,
+                   stop_times: DataFrame, cfg: ExtractConfig) -> DataFrame:
+    """expand_repeats over the sandwiches of a ``handler_walk`` frame."""
     reps = (entries.where(
                 "kind = 'repeat' AND repeat_intervals IS NOT NULL "
                 "AND size(repeat_intervals) > 0")
-            .select("conv_id", "turn_idx", "table_id", "entry_id",
-                    "repeat_intervals").distinct())
+            .select(_trip_key().alias("repeat_trip"), "repeat_intervals")
+            .distinct())
     if cfg.repeat_strategy == "mean":
         reps = reps.withColumn(
             "deltas",
@@ -224,79 +225,9 @@ def expand_repeats(entries: DataFrame, stop_times: DataFrame,
     else:
         reps = reps.withColumn(
             "deltas", F.col("repeat_intervals").cast("array<double>"))
-
-    # Anchor pairing follows the reference handler loop EXACTLY
-    # (handler.py:175-216): ``previous`` advances ONLY when a timed
-    # entry is processed with NO pending repeat, so stacked repeat
-    # sandwiches (time, repeat, time, repeat, time) all anchor on the
-    # entry before the FIRST repeat — the naive nearest-neighbor lag()
-    # used before r6 anchored each repeat on its left neighbor and
-    # diverged on multi-repeat tables (sweep seed 97194).  Also
-    # mirrored: a days-pattern change resets previous=None
-    # (same_days, calendar.py:109-115), a repeat with previous=None is
-    # skipped (handler.py:205-210), a repeat entry WITHOUT intervals
-    # CLEARS the pending repeat, and a later repeat replaces an
-    # earlier pending one (handler.py:182-184).  Same per-table walk
-    # shape as service_day_offsets below: groups are single tables, so
-    # the recurrence stays local at any scale.
-    ent2 = entries.where("kind IN ('time', 'repeat')")
-    days_key2 = F.array_join(F.coalesce(
-        F.col("days"), F.array().cast("array<string>")), ",")
-    repeat_ok2 = ((F.col("kind") == "repeat")
-                  & F.col("repeat_intervals").isNotNull()
-                  & (F.size("repeat_intervals") > 0))
-    meta2 = (ent2.select("conv_id", "turn_idx", "table_id", "entry_id",
-                         "kind", days_key2.alias("days_key"),
-                         repeat_ok2.alias("repeat_ok"))
-             .distinct())
-
-    def pair_walk(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import pandas as pd
-
-        rows = []
-        prev = None
-        prev_days = None
-        pending = None
-        sub = pdf.sort_values("entry_id")
-        conv = pdf["conv_id"].iloc[0]
-        turn = pdf["turn_idx"].iloc[0]
-        tab = pdf["table_id"].iloc[0]
-        for eid, kind, dk, rok in zip(sub["entry_id"], sub["kind"],
-                                      sub["days_key"],
-                                      sub["repeat_ok"]):
-            if kind == "repeat":
-                pending = int(eid) if rok else None
-                continue
-            if prev_days is not None and dk != prev_days:
-                prev = None
-            if pending is None:
-                prev = int(eid)
-            else:
-                if prev is not None:
-                    rows.append((conv, int(turn), int(tab),
-                                 pending, prev, int(eid)))
-                pending = None
-            prev_days = dk
-        return pd.DataFrame(rows, columns=[
-            "conv_id", "turn_idx", "table_id", "entry_id",
-            "prev_entry", "next_entry"])
-
-    pairs = (meta2.groupBy("conv_id", "turn_idx", "table_id")
-             .applyInPandas(pair_walk,
-                            "conv_id string, turn_idx int, "
-                            "table_id int, entry_id int, "
-                            "prev_entry int, next_entry int"))
-    anchored = (reps.join(pairs,
-                          ["conv_id", "turn_idx", "table_id",
-                           "entry_id"])
-                .select("conv_id", "turn_idx", "table_id", "deltas",
-                        "prev_entry", "next_entry"))
-    key = F.concat_ws("/", "conv_id", "turn_idx", "table_id")
-    anchored = (anchored
-                .withColumn("prev_trip",
-                            F.concat_ws("/", key, "prev_entry"))
-                .withColumn("next_trip",
-                            F.concat_ws("/", key, "next_entry")))
+    anchored = (reps.join(walk.withColumnRenamed("trip_id", "next_trip"),
+                          "repeat_trip")
+                .select("deltas", "prev_trip", "next_trip"))
     # The reference's stopping rule compares the two trips at the FIRST
     # stop (in the previous trip's sequence order) that both trips
     # share (stop_times.py:272-279 __lt__ walks previous' entries and
@@ -377,9 +308,18 @@ def expand_repeats(entries: DataFrame, stop_times: DataFrame,
 
 def service_day_offsets(entries: DataFrame, stop_times: DataFrame,
                         cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """(trip_id, shift_seconds): the reference's service-day offset
-    chain over a table's entry sequence (handler.py:144-217), mirrored
-    bug-for-bug:
+    """(trip_id, shift_seconds): the service-day offset chain of
+    ``handler_walk``."""
+    return handler_walk(entries, stop_times).select("trip_id",
+                                                    "shift_seconds")
+
+
+def handler_walk(entries: DataFrame, stop_times: DataFrame) -> DataFrame:
+    """The reference's per-table handler loop (handler.py:144-217) as
+    one walk over each table's entries, one row per timed entry:
+    ``(trip_id, shift_seconds, repeat_trip, prev_trip)``.
+
+    ``shift_seconds`` is the service-day offset, mirrored bug-for-bug:
 
     - new_day() tests ``previous > current`` where __gt__ is
       ``not __lt__ and not __eq__`` (stop_times.py:285-286) and __lt__
@@ -389,29 +329,43 @@ def service_day_offsets(entries: DataFrame, stop_times: DataFrame,
     - the accumulated ``service_day_offset`` is passed to add_multiple
       as ``Time(offset)`` — i.e. as HOURS, not days (handler.py:152,
       stop_times.py:202): the n-th day-crossing column is shifted by
-      24h + (n-1)h on top of earlier offsets;
-    - ``previous`` is NOT advanced past the right anchor of a repeat
-      sandwich (handler.py:205-216: ``previous = current`` only runs
-      ``if not repeat``), so the next comparison still uses the left
+      24h + (n-1)h on top of earlier offsets.
+
+    ``repeat_trip`` / ``prev_trip`` are set when the entry closes a
+    repeat sandwich: the pending repeat and the left anchor, whose
+    shifted copies expand_repeats emits up to this (right) anchor.
+    Both follow the reference's ``previous`` pointer EXACTLY
+    (handler.py:175-216):
+
+    - ``previous`` advances ONLY when a timed entry is processed with
+      NO pending repeat, so stacked repeat sandwiches (time, repeat,
+      time, repeat, time) all anchor on the entry before the FIRST
+      repeat — a nearest-neighbor lag() anchored each repeat on its
+      left neighbor and diverged on multi-repeat tables (sweep seed
+      97194) — and the next shift comparison still uses the left
       anchor;
     - the chain resets (offset=0, previous=None) when the entry's
       calendar DAYS differ from the previous entry's — annotations are
-      not part of same_days (calendar.py:109-115).
+      not part of same_days (calendar.py:109-115); a repeat with
+      previous=None is skipped (handler.py:205-210);
+    - a repeat entry WITHOUT intervals CLEARS the pending repeat, and a
+      later repeat replaces an earlier pending one
+      (handler.py:182-184).
 
     Runs per (conv, turn, table) group via applyInPandas — a table has
     at most a few dozen entries, so the sequential recurrence is local
-    and the operator stays partitioned by table key at any scale.
+    and the operator stays partitioned by table key at any scale. Frames
+    may carry ``days_key`` / ``repeat_ok`` precomputed (the oracle
+    handoff) instead of ``days`` / ``repeat_intervals``.
     """
     key_cols = ["conv_id", "turn_idx", "table_id"]
     ent = entries.where("kind IN ('time', 'repeat')")
     if "repeat_ok" in ent.columns:
         repeat_ok = F.col("repeat_ok")
-    elif "repeat_intervals" in ent.columns:
+    else:
         repeat_ok = ((F.col("kind") == "repeat")
                      & F.col("repeat_intervals").isNotNull()
                      & (F.size("repeat_intervals") > 0))
-    else:
-        repeat_ok = F.col("kind") == "repeat"
     if "days_key" in ent.columns:
         days_key = F.col("days_key")
     else:
@@ -421,8 +375,7 @@ def service_day_offsets(entries: DataFrame, stop_times: DataFrame,
                        days_key.alias("days_key"),
                        repeat_ok.alias("repeat_ok"))
             .distinct()
-            .withColumn("trip_id",
-                        F.concat_ws("/", *key_cols, "entry_id")))
+            .withColumn("trip_id", _trip_key()))
     inp = meta.join(
         stop_times.select("trip_id", "stop_sequence", "arr_seconds",
                           "stop_id"),
@@ -431,17 +384,17 @@ def service_day_offsets(entries: DataFrame, stop_times: DataFrame,
     def walk(pdf: pd.DataFrame) -> pd.DataFrame:
         import pandas as pd
 
-        out_ids, out_shifts = [], []
-        prev = None              # (stop order, {stop: arr}, shift)
+        rows = []
+        prev = None              # (stop order, {stop: arr}, shift, trip)
         prev_days = None
         offset = 0
-        pending_repeat = False
+        pending = None           # trip key of the pending repeat
         groups = {eid: g for eid, g in pdf.groupby("entry_id")}
         for eid in sorted(groups):
             g = groups[eid]
             r0 = g.iloc[0]
             if r0["kind"] == "repeat":
-                pending_repeat = bool(r0["repeat_ok"])
+                pending = r0["trip_id"] if r0["repeat_ok"] else None
                 continue
             g = g[g["stop_sequence"].notna()].sort_values("stop_sequence")
             # a stop may appear at several non-consecutive sequences
@@ -466,7 +419,7 @@ def service_day_offsets(entries: DataFrame, stop_times: DataFrame,
                 # (handler.py:173) short-circuits and the rollover is
                 # DISABLED for the next entry — even though a fired
                 # comparison would return True (GTFS sweep seed 70000)
-                p_order, p_arr, p_shift = prev
+                p_order, p_arr, p_shift, _ = prev
                 # disjoint stop sets -> __lt__ exhausts -> False
                 # -> __gt__ True -> the shift fires
                 common = next((s for s in p_order if s in arr), None)
@@ -478,17 +431,19 @@ def service_day_offsets(entries: DataFrame, stop_times: DataFrame,
             shift = delta0 + (86400 if flag else 0)
             if flag:
                 offset += 1
-            out_ids.append(r0["trip_id"])
-            out_shifts.append(shift)
+            closes = pending is not None and prev is not None
+            rows.append((r0["trip_id"], shift, pending if closes else None,
+                         prev[3] if closes else None))
             prev_days = days
-            if not pending_repeat:
-                prev = (order, arr, shift)
-            pending_repeat = False
-        return pd.DataFrame({"trip_id": out_ids,
-                             "shift_seconds": out_shifts})
+            if pending is None:
+                prev = (order, arr, shift, r0["trip_id"])
+            pending = None
+        return pd.DataFrame(rows, columns=[
+            "trip_id", "shift_seconds", "repeat_trip", "prev_trip"])
 
     return (inp.groupBy(*key_cols)
-            .applyInPandas(walk, "trip_id string, shift_seconds long"))
+            .applyInPandas(walk, "trip_id string, shift_seconds long, "
+                                 "repeat_trip string, prev_trip string"))
 
 
 def apply_service_day_offsets(stop_times: DataFrame,
@@ -751,9 +706,7 @@ def gtfs_stop_times_pipeline(spark, sf_dir):
     handoff = (entries
                .where("kind = 'time' AND value IS NOT NULL "
                       "AND stop_name IS NOT NULL")
-               .withColumn("trip_id",
-                           F.concat_ws("/", "conv_id", "turn_idx",
-                                       "table_id", "entry_id"))
+               .withColumn("trip_id", _trip_key())
                .withColumn("normalized_name",
                            normalize_col(F.col("stop_name")))
                .select("trip_id", "conv_id", "turn_idx", "table_id",
@@ -937,9 +890,7 @@ def gtfs_service_day_offsets(spark, sf_dir):
     entries = entries_table(_synthetic_extracted(spark))
     handoff = (entries
                .where("kind IN ('time', 'repeat')")
-               .withColumn("trip_id",
-                           F.concat_ws("/", "conv_id", "turn_idx",
-                                       "table_id", "entry_id"))
+               .withColumn("trip_id", _trip_key())
                .withColumn("normalized_name",
                            normalize_col(F.col("stop_name")))
                .select("conv_id", "turn_idx", "table_id", "entry_id",

@@ -8,9 +8,9 @@ W7, W11, add_repeat) exercised on hand-built entries frames.
 import pandas as pd
 import pytest
 
+from pdf2gtfs_spark.operators.feed import trip_route_service
 from pdf2gtfs_spark.operators.gtfs import (
-    build_calendar, build_stop_times, build_stops, build_trips,
-    expand_repeats,
+    build_calendar, build_stop_times, build_stops, expand_repeats,
 )
 
 ENTRY_COLS = ["conv_id", "turn_idx", "table_id", "entry_id", "kind",
@@ -30,10 +30,13 @@ def _entries_df(spark, rows):
     return spark.createDataFrame(pdf, schema)
 
 
-def _mk(entry_id, stop_pos, name, value, kind="time", intervals=None):
+WEEKDAYS = ["0", "1", "2", "3", "4"]
+
+
+def _mk(entry_id, stop_pos, name, value, kind="time", intervals=None,
+        days=WEEKDAYS):
     return ("c", 0, 0, entry_id, kind, "Montag - Freitag", "",
-            [], ["0", "1", "2", "3", "4"], intervals, stop_pos, stop_pos,
-            name, "", value)
+            [], days, intervals, stop_pos, stop_pos, name, "", value)
 
 
 class TestStopTimes:
@@ -111,16 +114,23 @@ class TestStopTimes:
 
 
 class TestRepeatExpansion:
-    def _base(self, spark, intervals, gap_minutes=60):
+    def _base(self, spark, intervals, gap_minutes=60, later=(),
+              next_days=WEEKDAYS):
+        """time0 (8:00), a repeat column per interval list in
+        ``(intervals, *later)``, then the next timed entry
+        ``gap_minutes`` later on ``next_days``."""
+        nxt = 2 + len(later)
         rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
                 _mk(0, 1, "Stop Beta Long", "8.10"),
-                ("c", 0, 0, 1, "repeat", "", "", [], [], intervals,
-                 None, None, None, None, "alle"),
-                _mk(2, 0, "Stop Alpha Long",
-                    f"{8 + gap_minutes // 60}.{gap_minutes % 60:02}"),
-                _mk(2, 1, "Stop Beta Long",
+                *(("c", 0, 0, 1 + i, "repeat", "", "", [], [], iv,
+                   None, None, None, None, "alle")
+                  for i, iv in enumerate((intervals, *later))),
+                _mk(nxt, 0, "Stop Alpha Long",
+                    f"{8 + gap_minutes // 60}.{gap_minutes % 60:02}",
+                    days=next_days),
+                _mk(nxt, 1, "Stop Beta Long",
                     f"{8 + (gap_minutes + 10) // 60}."
-                    f"{(gap_minutes + 10) % 60:02}")]
+                    f"{(gap_minutes + 10) % 60:02}", days=next_days)]
         e = _entries_df(spark, rows)
         stops = build_stops(e)
         st = build_stop_times(e, stops)
@@ -146,6 +156,30 @@ class TestRepeatExpansion:
         starts = sorted(r["arrival_time"] for r in rep
                         if r["stop_sequence"] == 0)
         assert starts == ["08:10:00", "08:30:00", "08:40:00"]
+
+    # anchor rule of the reference handler loop (handler.py:175-216)
+
+    def test_days_change_between_anchors_yields_no_copies(self, spark):
+        # a days change resets ``previous`` (same_days,
+        # calendar.py:109-115), so the repeat has no left anchor
+        e, st = self._base(spark, intervals=[20], next_days=["5"])
+        assert expand_repeats(e, st).count() == 0
+
+    def test_intervalless_repeat_clears_pending(self, spark):
+        # a repeat column without intervals clears the pending repeat
+        # (handler.py:182-184): the [20] column before it copies nothing
+        e, st = self._base(spark, intervals=[20], later=[None])
+        assert expand_repeats(e, st).count() == 0
+
+    def test_later_repeat_replaces_pending(self, spark):
+        # the nearer of two adjacent repeat columns wins: alle 30 gives
+        # 8:30 only (the 9:00 tie is dropped); the [20] column alone
+        # would give 8:20 and 8:40
+        e, st = self._base(spark, intervals=[20], later=[[30]])
+        rep = expand_repeats(e, st).collect()
+        starts = sorted(r["arrival_time"] for r in rep
+                        if r["stop_sequence"] == 0)
+        assert starts == ["08:30:00"]
 
     def test_copies_preserve_shape(self, spark):
         e, st = self._base(spark, intervals=[30], gap_minutes=60)
@@ -213,34 +247,44 @@ class TestCalendarAndTrips:
         rows = [_mk(0, 0, "Stop Alpha Long", "10.00"),
                 _mk(1, 0, "Stop Alpha Long", "11.00")]
         e = _entries_df(spark, rows)
-        assert build_trips(e).count() == 2
+        assert trip_route_service(e).count() == 2
 
 
-class TestFixtureGtfs:
-    def test_vag_fixture_stop_times(self, spark):
-        """End-to-end: vag golden fixture -> entries -> stop_times."""
+class TestEndToEndStopTimes:
+    def test_vag_like_block_stop_times(self, spark):
+        """End-to-end: a vag-like block crossing midnight, with one
+        stop listed twice in a row (an/ab) -> entries -> stop_times."""
         from pdf2gtfs_spark.plans.pipeline import entries_table, run_extract
-        from pdf2gtfs_spark.sources.transcripts import fixture_turns
+        from pdf2gtfs_spark.sources.transcripts import (
+            cells_to_payload, vag_like_block,
+        )
 
-        name, payload, _ = fixture_turns()[0]
+        # stop_seed 154: column k, stop s at 23:58 + 20k + 2s minutes;
+        # stops 2 and 3 become "<stop 2> an" / "<stop 2> ab" (stop
+        # column x 40, annotation column x 140) -> the W11 fold
+        cells, _ = vag_like_block(100.0, n_stops=8, n_trips=4,
+                                  stop_seed=154)
+        name2 = next(t for t, x, y in cells if (x, y) == (40.0, 120.0))
+        cells = [(name2 if (x, y) == (40.0, 130.0) else t, x, y)
+                 for t, x, y in cells]
+        cells += [("an", 140.0, 120.0), ("ab", 140.0, 130.0)]
         tdf = spark.createDataFrame(
-            [("vag", 0, payload)], "conv_id string, turn_idx int, "
-            "text string")
+            [("vag", 0, cells_to_payload(cells))],
+            "conv_id string, turn_idx int, text string")
         entries = entries_table(run_extract(tdf))
-        stops = build_stops(entries)
-        st = build_stop_times(entries, stops)
-        rows = st.collect()
-        # 20 entries; Bertoldsbrunnen an/ab folds -> 22 rows per full
-        # trip (23 stops - 1 fold); sparse trips have fewer
+        rows = build_stop_times(entries, build_stops(entries)).collect()
         by_trip = {}
         for r in rows:
             by_trip.setdefault(r["trip_id"], []).append(r)
-        assert len(by_trip) == 20
-        full = max(by_trip.values(), key=len)
-        assert len(full) == 22
-        # first trip wraps midnight: 23.xx -> 0.01 becomes 24:01
-        t0 = sorted(by_trip.values(),
-                    key=lambda rs: rs[0]["trip_id"])[0]
-        times = [r["arrival_time"]
-                 for r in sorted(t0, key=lambda r: r["stop_sequence"])]
-        assert times[0] == "00:17:00"
+        # 4 entries, 8 stops - 1 fold = 7 rows each
+        assert len(by_trip) == 4
+        assert all(len(rs) == 7 for rs in by_trip.values())
+        # the first trip wraps midnight: 0.00 becomes 24:00
+        t0 = sorted(by_trip[min(by_trip)], key=lambda r: r["stop_sequence"])
+        assert [r["arrival_time"] for r in t0] == [
+            "23:58:00", "24:00:00", "24:02:00", "24:06:00", "24:08:00",
+            "24:10:00", "24:12:00"]
+        fold = t0[2]
+        assert (fold["departure_time"], fold["stop_sequence"]) == (
+            "24:04:00", 2)
+        assert t0[3]["stop_sequence"] == 4

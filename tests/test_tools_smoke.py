@@ -52,3 +52,15 @@ def test_scaling_bench_skew_mode():
     assert (last["turns"], last["monster_turns"], last["cpus"]) == (32, 16, 2)
     assert set(last["seconds"]) == {"skew_nosalt", "skew_salt", "uniform"}
     assert last["reassembly"]["hot_conv_key"] > 0
+
+
+def test_scaling_mode_refuses_too_few_cores():
+    """4 cores give lo = (4 // 4) // 4 = 0: the tool exits with an error
+    that names the core count, before any session starts."""
+    out = subprocess.run([sys.executable, "tools/scaling_bench.py"],
+                         cwd=REPO, env=dict(SMALL, SPARK_GRAFT_CPUS="4"),
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode != 0
+    assert out.stdout == ""
+    assert "got 4 cores" in out.stderr
+    assert "SparkContext" not in out.stderr and "log4j" not in out.stderr

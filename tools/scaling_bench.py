@@ -4,9 +4,12 @@
     python tools/scaling_bench.py skew   # skew efficiency
 
 Each prints one JSON line. Scaling runs bench.py's extraction job on the
-same input at local[2] and local[8], a fresh JVM per level: a local[N]
-job keeps ~2N threads busy (N JVM tasks + N Python workers), so 2 -> 8
-stays unsaturated where 8 -> 32 would not on 32 cores.
+same input at local[lo] and local[hi], a fresh JVM per level, with
+hi = $SPARK_GRAFT_CPUS // 4 and lo = hi // 4 (2 and 8 on 32 cores): a
+local[N] job keeps ~2N threads busy (N JVM tasks + N Python workers), so
+lo -> hi stays unsaturated where a level of every core would not. Below
+16 cores lo would be 0, so the scaling mode exits with an error instead
+of printing a ratio that reads low by construction.
 
 Skew: one $SPARK_GRAFT_SKEW_TURNS-turn conversation (default 2048) among
 4-turn ones, one conversation and one row group (the unsplittable scan
@@ -44,8 +47,12 @@ def run_level(cpus: int, sf_dir: str) -> dict:
 
 
 def scaling() -> dict:
+    hi = CPUS // 4
+    lo = hi // 4
+    if lo < 1:
+        sys.exit(f"scaling needs >= 16 cores (hi = cores // 4, "
+                 f"lo = hi // 4); got {CPUS} cores (SPARK_GRAFT_CPUS)")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    lo, hi = 2, 8
     # host CPU drifts over minutes, so the two levels run back to back
     # as a round; the median round is reported, all rounds are kept
     rounds = []
