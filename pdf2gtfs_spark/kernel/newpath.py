@@ -270,16 +270,6 @@ class Typer:
 
     # -- series helpers (celltype.py:436-704) -------------------------------
 
-    def _series(self, r: int, c: int, o: int) -> list[tuple]:
-        if o == H:
-            return [(r, k) for k in range(self.g.n_cols)]
-        return [(k, c) for k in range(self.g.n_rows)]
-
-    def _normal_series_has_time(self, r: int, c: int, o: int) -> bool:
-        """series_contains_type(cell, o.normal, Time) for a member of an
-        o-series: o=H -> check the cell's column, o=V -> its row."""
-        return self.col_has(c, TIME) if o == H else self.row_has(r, TIME)
-
     def _time_mask(self, o: int) -> np.ndarray:
         """Positions of an o-series whose normal series contains a
         strict Time cell: o=H filters columns, o=V filters rows."""

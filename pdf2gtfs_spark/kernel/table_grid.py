@@ -42,14 +42,6 @@ N, S, W, E = 0, 1, 2, 3
 V, H = 0, 1  # orientations: V = columns (N/S), H = rows (W/E)
 
 
-def _olap(a0: float, a1: float, b0: float, b1: float) -> float:
-    """1-D overlap length (bbox.py:102-117)."""
-    hi = a1 if a1 < b1 else b1
-    lo = a0 if a0 > b0 else b0
-    d = hi - lo
-    return d if d > 0.0 else 0.0
-
-
 def _is_olap(a0, a1, b0, b1, rel: float) -> bool:
     """bbox.is_h_overlap/is_v_overlap: overlap >= rel * smaller size."""
     hi = a1 if a1 < b1 else b1

@@ -8,6 +8,13 @@ oracle SQL reads it back with ``read_parquet`` — the parquet carries
 *inputs or independently-derived expectations*, never the Spark query's
 own output, so the DuckDB side remains a genuine recomputation.
 
+A handoff of kernel outputs carries them as the kernel emits them (the
+gtfs/feed oracles share one file of the kernel's entries). Keys derived
+from those outputs — calendar keys, repeat flags — are computed on both
+sides, each engine with its own expression. The handoff adds only the
+trip id (its key columns joined by '/') and the stop-name normalization,
+which DuckDB cannot compute.
+
 Writes are atomic (tmp file + rename) and idempotent: the same bytes
 are produced on every call, so concurrent or repeated materialization
 is safe.

@@ -32,11 +32,11 @@ from pyspark.sql import functions as F
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pdf2gtfs_spark.operators import register
-from pdf2gtfs_spark.operators._aux import aux_glob, aux_path, write_aux_spark
 from pdf2gtfs_spark.operators.gtfs import (
-    _ST_TIME_RE, _md5_id, _repeat_copies, _time_parse_cols, _trip_key,
-    annots_key_col, apply_service_day_offsets, build_calendar,
-    build_stop_times, build_stops, handler_walk,
+    _ST_TIME_RE, ANNOTS_KEY_SQL, DAYS_KEY_SQL, ENTRIES_GLOB, _md5_id,
+    _repeat_copies, _time_parse_cols, _trip_key, annots_key_col,
+    apply_service_day_offsets, build_calendar, build_stop_times,
+    build_stops, days_key_col, handler_walk, materialize_entries,
 )
 from pdf2gtfs_spark.sources import literal_frame
 
@@ -66,15 +66,6 @@ def _trip_keys(entries: DataFrame, cfg: ExtractConfig) -> DataFrame:
     timed = (entries.where("kind = 'time' AND value IS NOT NULL "
                            "AND stop_name IS NOT NULL")
              .withColumn("trip_id", _trip_key()))
-    # entries may carry days/annotations as arrays (pipeline) or as
-    # pre-joined keys (the materialized oracle handoff)
-    if "days_key" not in timed.columns:
-        timed = timed.withColumn(
-            "days_key",
-            F.array_join(F.coalesce(
-                F.col("days"), F.array().cast("array<string>")), ","))
-    if "annots_key" not in timed.columns:
-        timed = timed.withColumn("annots_key", annots_key_col())
     # names_from_entry runs RAW strptime (routes.py:149-152): no
     # space strip (unlike Time.from_string) and strict field ranges —
     # '5. 35' and '5.62' are not route-name anchors (gtfs sweep v4)
@@ -85,8 +76,8 @@ def _trip_keys(entries: DataFrame, cfg: ExtractConfig) -> DataFrame:
                      F.max_by("stop_name", "stop_pos").alias("last_stop"),
                      F.first("route_name", ignorenulls=True)
                      .alias("route_name"),
-                     F.first("days_key").alias("days_key"),
-                     F.first("annots_key").alias("annots_key")))
+                     F.first(days_key_col()).alias("days_key"),
+                     F.first(annots_key_col()).alias("annots_key")))
     return (per_trip
             .select("trip_id",
                     F.coalesce("route_name", F.lit(""))
@@ -236,35 +227,12 @@ def write_feed_zip(feed: dict[str, DataFrame], out_path: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# driver queries (oracles over the shared entries handoff parquet)
+# driver queries (oracles over gtfs.materialize_entries' handoff)
 # ---------------------------------------------------------------------------
 
-_FEED_PARQUET = aux_path("feed_entries.parquet")   # Spark-written dir
-_FEED_GLOB = aux_glob("feed_entries.parquet")      # DuckDB-side glob
-
-
-def _materialize_feed_entries(spark) -> DataFrame:
-    """Extraction -> full entries handoff for the feed oracles."""
-    from pdf2gtfs_spark.operators.gtfs import _synthetic_extracted
-    from pdf2gtfs_spark.plans.pipeline import entries_table
-
-    entries = entries_table(_synthetic_extracted(spark))
-    handoff = (entries
-               .where("stop_name IS NOT NULL OR kind = 'repeat'")
-               .select("conv_id", "turn_idx", "table_id", "entry_id",
-                       "kind", "stop_pos", "stop_name", "route_name",
-                       F.array_join(F.coalesce(
-                           F.col("days"),
-                           F.array().cast("array<string>")), ",")
-                       .alias("days_key"),
-                       annots_key_col().alias("annots_key"),
-                       "value",
-                       F.coalesce("is_connection", F.lit(False))
-                       .alias("is_connection")))
-    # executor-side handoff: write.parquet, never toPandas (VERDICT r2 #2)
-    write_aux_spark("feed_entries.parquet", handoff)
-    return spark.read.parquet(_FEED_PARQUET)
-
+# the rows the feed oracles read; their SQL keeps the same rows (it
+# reads only time rows that carry a stop name)
+_FEED_ROWS = "stop_name IS NOT NULL OR kind = 'repeat'"
 
 _MD5_SQL = "CAST(concat('0x', substr(md5({e}), 1, 15)) AS BIGINT)"
 
@@ -273,8 +241,9 @@ WITH e AS (
   SELECT concat_ws('/', conv_id, CAST(turn_idx AS VARCHAR),
                    CAST(table_id AS VARCHAR),
                    CAST(entry_id AS VARCHAR)) AS trip_key,
-         stop_pos, stop_name, route_name, days_key, annots_key
-  FROM read_parquet('{_FEED_GLOB}')
+         stop_pos, stop_name, route_name, {DAYS_KEY_SQL} AS days_key,
+         {ANNOTS_KEY_SQL} AS annots_key
+  FROM read_parquet('{ENTRIES_GLOB}')
   WHERE kind = 'time' AND value IS NOT NULL AND stop_name IS NOT NULL
     AND regexp_matches(replace(value, ' ', ''), '{_ST_TIME_RE}')
 ), per_trip AS (
@@ -299,19 +268,23 @@ FROM per_trip ORDER BY route_id
 def gtfs_routes_from_entries(spark, sf_dir):
     """Routes from first/last parseable stop (routes.py:138-170); both
     engines derive them from the same materialized entries."""
-    ent = _materialize_feed_entries(spark)
+    ent = materialize_entries(spark).where(_FEED_ROWS)
     return (build_routes(ent)
             .select("route_id", "route_short_name", "route_long_name")
             .orderBy("route_id"))
 
 
 @register("gtfs_calendar_dates_holidays", oracle=f"""
-WITH svc AS (
+WITH keys AS (
+  SELECT {DAYS_KEY_SQL} AS days_key, {ANNOTS_KEY_SQL} AS annots_key
+  FROM read_parquet('{ENTRIES_GLOB}')
+  WHERE kind = 'time' AND stop_name IS NOT NULL
+), svc AS (
   SELECT DISTINCT
     {_MD5_SQL.format(e="concat_ws('|', days_key, annots_key)")}
         AS service_id,
     days_key
-  FROM read_parquet('{_FEED_GLOB}') WHERE kind = 'time'
+  FROM keys
 ), hol AS (SELECT unnest([{", ".join(repr(d) for d in holiday_dates())}])
            AS date)
 SELECT service_id, date,
@@ -321,12 +294,8 @@ FROM svc, hol ORDER BY service_id, date
 """)
 def gtfs_calendar_dates_holidays(spark, sf_dir):
     """Holiday calendar_dates (J11, handler.py:219-237)."""
-    ent = _materialize_feed_entries(spark)
-    cal = (ent.where("kind = 'time'")
-           .select("days_key", "annots_key").distinct()
-           .withColumn("service_id", _md5_id(
-               F.concat_ws("|", "days_key", "annots_key"))))
-    return build_calendar_dates(cal, spark)
+    ent = materialize_entries(spark).where(_FEED_ROWS)
+    return build_calendar_dates(build_calendar(ent), spark)
 
 
 @register("gtfs_feed_pruning", oracle=f"""
@@ -341,7 +310,7 @@ FROM per_trip ORDER BY trip_id
 def gtfs_feed_pruning(spark, sf_dir):
     """remove_unused semantics (J9): only trips that produce stop_times
     survive; route/service ids attach relationally."""
-    ent = _materialize_feed_entries(spark)
+    ent = materialize_entries(spark).where(_FEED_ROWS)
     stops = build_stops(ent)
     st = build_stop_times(ent, stops)
     trips = trip_route_service(ent)

@@ -1,7 +1,8 @@
 """GTFS-shaping relational tail (SURVEY.md §2.4-2.5, §3.1 stage 4).
 
 All ops are pure DataFrame transformations over the extraction output
-(`entries`/`stops` from plans.pipeline):
+in the kernel's own schema (`entries`/`stops` from plans.pipeline);
+every derived key is computed here from its columns:
 
 - stops dedup: first-wins on normalized name with deterministic hash
   ids (replaces the reference's sequential UIDGenerator, utils.py:15-48
@@ -89,41 +90,32 @@ def build_stops(entries: DataFrame,
     "First" is DOCUMENT order (conv, turn, table, stop_pos), matching
     the reference's GTFSStops.add which keeps the first-seen display
     variant while later same-normalized names only mark reuse
-    (stop.py:187-196; pinned by the GTFS differential tests).  Frames
-    built by hand in tests may lack the position columns — falls back
-    to stop_name order there.
+    (stop.py:187-196; pinned by the GTFS differential tests).
 
     ``stops_src`` (the stop-grain frame, pipeline.stops_table) is the
     faithful source: the reference registers EVERY non-connection
     timetable stop (add_timetable_stops), including stops that carry no
-    value in any entry — which the entry-grain frame cannot see.  The
-    entry-grain fallback keeps hand-built frames and the stop_times
-    oracle working (value-less stops never reach stop_times anyway).
+    value in any entry — which the entry-grain frame cannot see.
+    Without it the stops come from the entries (value-less stops never
+    reach stop_times anyway).
     """
     src = stops_src if stops_src is not None else entries
-    order_cols = [c for c in ("conv_id", "turn_idx", "table_id",
-                              "stop_pos") if c in src.columns]
+    order_cols = ["conv_id", "turn_idx", "table_id", "stop_pos"]
     cond = ("stop_name IS NOT NULL" if stops_src is not None
             else "kind = 'time' AND stop_name IS NOT NULL")
+    # add_timetable_stops only registers non-connection stops
+    # (handler.py:132-136, StopList.stops property)
     stops = (src.where(cond)
-             .select("stop_name", *order_cols,
-                     *(["is_connection"]
-                       if "is_connection" in src.columns else [])))
-    if "is_connection" in stops.columns:
-        # add_timetable_stops only registers non-connection stops
-        # (handler.py:132-136, StopList.stops property)
-        stops = stops.where(
-            ~F.coalesce("is_connection", F.lit(False)))
-    stops = stops.withColumn("normalized_name",
-                             normalize_col(F.col("stop_name"), cfg))
+             .where(~F.coalesce("is_connection", F.lit(False)))
+             .select("stop_name", *order_cols)
+             .withColumn("normalized_name",
+                         normalize_col(F.col("stop_name"), cfg)))
     w = Window.partitionBy("normalized_name").orderBy(
         *order_cols, "stop_name")
     return (stops.withColumn("rn", F.row_number().over(w))
             .where("rn = 1")
-            .select(
-                F.conv(F.substring(F.md5("normalized_name"), 1, 15), 16, 10)
-                .cast("bigint").alias("stop_id"),
-                F.col("stop_name"), "normalized_name"))
+            .select(_md5_id(F.col("normalized_name")).alias("stop_id"),
+                    "stop_name", "normalized_name"))
 
 
 def build_stop_times(entries: DataFrame, stops: DataFrame,
@@ -138,15 +130,13 @@ def build_stop_times(entries: DataFrame, stops: DataFrame,
          to one row (first time = arrival, last = departure);
       4. W6: stop_sequence = position of the run's first stop.
     """
+    # reference skips connection stops before emitting stop_times
+    # (gtfs_output/stop_times.py:205-207)
     timed = (entries
              .where("kind = 'time' AND value IS NOT NULL "
                     "AND stop_name IS NOT NULL")
+             .where(~F.coalesce("is_connection", F.lit(False)))
              .withColumn("trip_id", _trip_key()))
-    # reference skips connection stops before emitting stop_times
-    # (gtfs_output/stop_times.py:205-207); entries frames built by hand
-    # in tests may lack the flag, so filter only when present
-    if "is_connection" in timed.columns:
-        timed = timed.where(~F.coalesce("is_connection", F.lit(False)))
     # Time.from_string strips spaces, then strptime enforces field
     # ranges (stop_times.py:32-41): '5.62' is NOT a time (-> 0s)
     is_time, secs = _time_parse_cols(
@@ -354,26 +344,16 @@ def handler_walk(entries: DataFrame, stop_times: DataFrame) -> DataFrame:
 
     Runs per (conv, turn, table) group via applyInPandas — a table has
     at most a few dozen entries, so the sequential recurrence is local
-    and the operator stays partitioned by table key at any scale. Frames
-    may carry ``days_key`` / ``repeat_ok`` precomputed (the oracle
-    handoff) instead of ``days`` / ``repeat_intervals``.
+    and the operator stays partitioned by table key at any scale.
     """
     key_cols = ["conv_id", "turn_idx", "table_id"]
-    ent = entries.where("kind IN ('time', 'repeat')")
-    if "repeat_ok" in ent.columns:
-        repeat_ok = F.col("repeat_ok")
-    else:
-        repeat_ok = ((F.col("kind") == "repeat")
-                     & F.col("repeat_intervals").isNotNull()
-                     & (F.size("repeat_intervals") > 0))
-    if "days_key" in ent.columns:
-        days_key = F.col("days_key")
-    else:
-        days_key = F.array_join(F.coalesce(
-            F.col("days"), F.array().cast("array<string>")), ",")
-    meta = (ent.select(*key_cols, "entry_id", "kind",
-                       days_key.alias("days_key"),
-                       repeat_ok.alias("repeat_ok"))
+    repeat_ok = ((F.col("kind") == "repeat")
+                 & F.col("repeat_intervals").isNotNull()
+                 & (F.size("repeat_intervals") > 0))
+    meta = (entries.where("kind IN ('time', 'repeat')")
+            .select(*key_cols, "entry_id", "kind",
+                    days_key_col().alias("days_key"),
+                    repeat_ok.alias("repeat_ok"))
             .distinct()
             .withColumn("trip_id", _trip_key()))
     inp = meta.join(
@@ -464,6 +444,13 @@ def apply_service_day_offsets(stop_times: DataFrame,
                         gtfs_time_str(F.col("dep_seconds"))))
 
 
+def days_key_col():
+    """Calendar days key: the entry's day tokens joined by ',' ('' when
+    it has none)."""
+    return F.array_join(F.coalesce(
+        F.col("days"), F.array().cast("array<string>")), ",")
+
+
 def annots_key_col(col: str = "annotations"):
     """Collision-proof annotations key. The reference dedups calendar
     entries on the annotation SET (calendar.py:109-123); annotation
@@ -483,9 +470,7 @@ def annots_key_col(col: str = "annotations"):
 def build_calendar(entries: DataFrame) -> DataFrame:
     """A4 calendar dedup on (days, annotations) (calendar.py:109-123)."""
     svc = (entries.where("kind = 'time'")
-           .select(F.array_join(F.coalesce(
-                       F.col("days"), F.array().cast("array<string>")), ",")
-                   .alias("days_key"),
+           .select(days_key_col().alias("days_key"),
                    annots_key_col().alias("annots_key"),
                    "days")
            .distinct())
@@ -497,9 +482,8 @@ def build_calendar(entries: DataFrame) -> DataFrame:
             ["monday", "tuesday", "wednesday", "thursday", "friday",
              "saturday", "sunday"])]
     return (svc.select(
-                F.conv(F.substring(
-                    F.md5(F.concat_ws("|", "days_key", "annots_key")),
-                    1, 15), 16, 10).cast("bigint").alias("service_id"),
+                _md5_id(F.concat_ws("|", "days_key", "annots_key"))
+                .alias("service_id"),
                 "days_key", "annots_key", *day_flags)
             .distinct()
             .orderBy("service_id"))
@@ -514,9 +498,9 @@ def build_calendar(entries: DataFrame) -> DataFrame:
 #   generator (ground truth, computed without the Spark kernel); the
 #   oracle hashes those, the Spark side hashes what the distributed
 #   kernel actually extracted -> hash match == per-turn text equality.
-# - stop_times: the extracted timed entries are materialized once and
-#   BOTH engines run the rollover/fold/sequence window chain on that
-#   same parquet -> checks the relational tail's window semantics.
+# - gtfs/feed tail: the kernel's entries are materialized once
+#   (materialize_entries) and BOTH engines derive every key and run the
+#   tail's windows, walks and joins on that same parquet.
 
 from pdf2gtfs_spark.operators._aux import (aux_glob, aux_path,
                                             write_aux_pandas,
@@ -646,22 +630,52 @@ def extract_skewed_salted(spark, sf_dir):
             .orderBy("conv_id", "turn_idx"))
 
 
-_ST_PARQUET = aux_path("gtfs_entries.parquet")   # Spark-written dir
-_ST_GLOB = aux_glob("gtfs_entries.parquet")      # DuckDB-side glob
+_ENTRIES_PARQUET = aux_path("gtfs_entries.parquet")   # Spark-written dir
+ENTRIES_GLOB = aux_glob("gtfs_entries.parquet")       # DuckDB-side glob
 _ST_TIME_RE = r"^(\d{1,2})\.(\d{1,2})$"
 
+# DuckDB spellings of days_key_col / annots_key_col and handler_walk's
+# repeat_ok. array_to_string gives NULL on an empty list where Spark's
+# array_join gives '', hence the coalesce.
+DAYS_KEY_SQL = "coalesce(array_to_string(days, ','), '')"
+ANNOTS_KEY_SQL = (r"coalesce(array_to_string(list_transform(annotations, "
+                  r"x -> replace(replace(x, '\', '\\'), ',', '\,')), ','), "
+                  r"'')")
+_REPEAT_OK_SQL = ("kind = 'repeat' AND repeat_intervals IS NOT NULL "
+                  "AND len(repeat_intervals) > 0")
 
-@register("gtfs_stop_times_pipeline", oracle=f"""
-WITH e AS (
-  SELECT trip_id, stop_pos, normalized_name,
+
+def materialize_entries(spark) -> DataFrame:
+    """The one handoff of the gtfs/feed oracles: the kernel's entries of
+    the synthetic corpus, unfiltered, plus ``trip_id`` and the
+    ``normalized_name`` that DuckDB cannot compute (normalize_col).
+    Each query filters the re-read frame itself."""
+    from pdf2gtfs_spark.plans.pipeline import entries_table
+
+    handoff = (entries_table(_synthetic_extracted(spark))
+               .withColumn("trip_id", _trip_key())
+               .withColumn("normalized_name",
+                           normalize_col(F.col("stop_name"))))
+    # executor-side handoff: write.parquet, never toPandas — at 100 TB
+    # the entries frame does not fit on the driver (VERDICT r2 #2)
+    write_aux_spark("gtfs_entries.parquet", handoff)
+    return spark.read.parquet(_ENTRIES_PARQUET)
+
+
+# build_stop_times' W7 rollover / W11 fold chain over the emitted
+# (non-connection) stop times; both gtfs oracles below start from it
+_ST_CHAIN_SQL = f"""
+e AS (
+  SELECT conv_id, turn_idx, table_id, trip_id, stop_pos, normalized_name,
          CASE WHEN regexp_matches(replace(value, ' ', ''), '{_ST_TIME_RE}')
               THEN CAST(regexp_extract(replace(value, ' ', ''),
                         '{_ST_TIME_RE}', 1) AS INT) * 3600
                  + CAST(regexp_extract(replace(value, ' ', ''),
                         '{_ST_TIME_RE}', 2) AS INT) * 60
               ELSE 0 END AS day_seconds
-  FROM read_parquet('{_ST_GLOB}')
-  WHERE NOT is_connection
+  FROM read_parquet('{ENTRIES_GLOB}')
+  WHERE kind = 'time' AND value IS NOT NULL AND stop_name IS NOT NULL
+    AND is_connection IS NOT TRUE
 ), flagged AS (
   SELECT *, CASE WHEN day_seconds < lag(day_seconds) OVER w
                  THEN 1 ELSE 0 END AS wrapped,
@@ -675,7 +689,11 @@ WITH e AS (
   FROM flagged
   WINDOW w2 AS (PARTITION BY trip_id ORDER BY stop_pos
                 ROWS UNBOUNDED PRECEDING)
-), folded AS (
+)"""
+
+
+@register("gtfs_stop_times_pipeline", oracle=f"""
+WITH {_ST_CHAIN_SQL}, folded AS (
   SELECT trip_id, run_id, min(normalized_name) AS normalized_name,
          CAST(min(stop_pos) AS INT) AS stop_sequence,
          CAST(min(svc_seconds) AS BIGINT) AS arr_seconds,
@@ -700,26 +718,9 @@ def gtfs_stop_times_pipeline(spark, sf_dir):
     the same materialized entries parquet; Spark reuses the production
     build_stop_times/build_stops operators end to end.
     """
-    from pdf2gtfs_spark.plans.pipeline import entries_table
-
-    entries = entries_table(_synthetic_extracted(spark))
-    handoff = (entries
-               .where("kind = 'time' AND value IS NOT NULL "
-                      "AND stop_name IS NOT NULL")
-               .withColumn("trip_id", _trip_key())
-               .withColumn("normalized_name",
-                           normalize_col(F.col("stop_name")))
-               .select("trip_id", "conv_id", "turn_idx", "table_id",
-                       "entry_id", "kind", "stop_pos", "stop_name",
-                       "normalized_name", "value",
-                       F.coalesce("is_connection", F.lit(False))
-                       .alias("is_connection")))
-    # executor-side handoff: write.parquet, never toPandas — at 100 TB
-    # the entries frame does not fit on the driver (VERDICT r2 #2)
-    write_aux_spark("gtfs_entries.parquet", handoff)
-    ent = spark.read.parquet(_ST_PARQUET)
-    stops = build_stops(ent)
-    st = build_stop_times(ent, stops)
+    ent = materialize_entries(spark).where(
+        "kind = 'time' AND value IS NOT NULL AND stop_name IS NOT NULL")
+    st = build_stop_times(ent, build_stops(ent))
     return (st.select("trip_id",
                       F.col("stop_sequence").cast("int")
                       .alias("stop_sequence"),
@@ -731,9 +732,6 @@ def gtfs_stop_times_pipeline(spark, sf_dir):
             .orderBy("trip_id", "stop_sequence"))
 
 
-_SDO_PARQUET = aux_path("gtfs_offsets_entries.parquet")
-_SDO_GLOB = aux_glob("gtfs_offsets_entries.parquet")
-
 # The walk state is a first-order recurrence over each table's entry
 # sequence, so the oracle recomputes it with a RECURSIVE CTE: `seq`
 # numbers the timed entries, `pairs` precomputes the
@@ -741,32 +739,9 @@ _SDO_GLOB = aux_glob("gtfs_offsets_entries.parquet")
 # a table, and `walk` threads (offset, previous pointer, previous
 # shift) from rn to rn+1 exactly like handler.py:144-217.
 _SDO_SQL = f"""
-WITH RECURSIVE base AS (
-  SELECT * FROM read_parquet('{_SDO_GLOB}')
-), e AS (
-  SELECT conv_id, turn_idx, table_id, trip_id, stop_pos, normalized_name,
-         CASE WHEN regexp_matches(replace(value, ' ', ''), '{_ST_TIME_RE}')
-              THEN CAST(regexp_extract(replace(value, ' ', ''),
-                        '{_ST_TIME_RE}', 1) AS INT) * 3600
-                 + CAST(regexp_extract(replace(value, ' ', ''),
-                        '{_ST_TIME_RE}', 2) AS INT) * 60
-              ELSE 0 END AS day_seconds
-  FROM base
-  WHERE kind = 'time' AND value IS NOT NULL AND stop_name IS NOT NULL
-    AND NOT is_connection
-), flagged AS (
-  SELECT *, CASE WHEN day_seconds < lag(day_seconds) OVER w
-                 THEN 1 ELSE 0 END AS wrapped,
-         CASE WHEN lag(normalized_name) OVER w IS NULL
-               OR lag(normalized_name) OVER w <> normalized_name
-              THEN 1 ELSE 0 END AS new_run
-  FROM e WINDOW w AS (PARTITION BY trip_id ORDER BY stop_pos)
-), rolled AS (
-  SELECT *, day_seconds + 86400 * sum(wrapped) OVER w2 AS svc_seconds,
-         sum(new_run) OVER w2 AS run_id
-  FROM flagged
-  WINDOW w2 AS (PARTITION BY trip_id ORDER BY stop_pos
-                ROWS UNBOUNDED PRECEDING)
+WITH RECURSIVE {_ST_CHAIN_SQL}, base AS (
+  SELECT *, {DAYS_KEY_SQL} AS days_key, {_REPEAT_OK_SQL} AS repeat_ok
+  FROM read_parquet('{ENTRIES_GLOB}') WHERE kind IN ('time', 'repeat')
 ), folded AS (
   SELECT conv_id, turn_idx, table_id, trip_id, run_id,
          min(normalized_name) AS nm,
@@ -885,30 +860,7 @@ def gtfs_service_day_offsets(spark, sf_dir):
     materialized entries; the oracle recomputes the sequential walk
     with a recursive CTE over precomputed first-common-stop pair
     comparisons."""
-    from pdf2gtfs_spark.plans.pipeline import entries_table
-
-    entries = entries_table(_synthetic_extracted(spark))
-    handoff = (entries
-               .where("kind IN ('time', 'repeat')")
-               .withColumn("trip_id", _trip_key())
-               .withColumn("normalized_name",
-                           normalize_col(F.col("stop_name")))
-               .select("conv_id", "turn_idx", "table_id", "entry_id",
-                       "trip_id", "kind",
-                       F.array_join(F.coalesce(
-                           F.col("days"),
-                           F.array().cast("array<string>")), ",")
-                       .alias("days_key"),
-                       ((F.col("kind") == "repeat")
-                        & F.col("repeat_intervals").isNotNull()
-                        & (F.size("repeat_intervals") > 0))
-                       .alias("repeat_ok"),
-                       "stop_pos", "stop_name", "normalized_name",
-                       "value",
-                       F.coalesce("is_connection", F.lit(False))
-                       .alias("is_connection")))
-    write_aux_spark("gtfs_offsets_entries.parquet", handoff)
-    ent = spark.read.parquet(_SDO_PARQUET)
+    ent = materialize_entries(spark).where("kind IN ('time', 'repeat')")
     timed = ent.where("kind = 'time'")
     st = build_stop_times(timed, build_stops(timed))
     offs = service_day_offsets(ent, st)

@@ -87,14 +87,6 @@ def _time_sub_hours(sec_a: int, sec_b: int) -> float:
     return d / 3600
 
 
-def avg_edge_time_hours(diffs_hours: list[float]) -> tuple[int, int, int]:
-    """mean of the nonzero diffs -> Time (handler.py:321-351)."""
-    diffs = [d for d in diffs_hours if d != 0.0]
-    if not diffs:
-        return (0, 0, 0)
-    return _time_from_hours(sum(diffs) / len(diffs))
-
-
 def distance_bounds(avg_time: tuple[int, int, int]
                     ) -> tuple[float, float, float]:
     """finder/stops.py:71-90 (lower/mid/upper in meters)."""

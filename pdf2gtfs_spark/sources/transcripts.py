@@ -37,6 +37,10 @@ from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pdf2gtfs_spark.kernel.payload import encode_grid, encode_tables
 
 REFERENCE_FIXTURE_DIR = Path("/root/reference/test/data")
+# the golden CSVs under REFERENCE_FIXTURE_DIR; vag_1/00_00.csv is left
+# out on purpose: the reference's file is empty (0 bytes), so there is
+# nothing to encode or compare
+GOLDEN_FIXTURES = ("vag_1/01_00.csv", "kvv_s1/01_00.csv")
 TABLE_SEP = "\x1d"  # separates per-table CSVs inside expected strings
 CONV_DOC_SEP = "\n\x1e\n"  # separates turns inside a conversation doc
 TRANSCRIPT_DDL = ("conv_id string, turn_idx int, role string, "
@@ -142,9 +146,7 @@ def load_fixture_grids(cfg: ExtractConfig = DEFAULT_CONFIG
     (once per process): callers such as bench.py run on without the
     reference checkout."""
     out, missing = [], []
-    # vag_1/00_00.csv is intentionally absent: the reference fixture file
-    # is empty (0 bytes), so there is nothing to encode or compare.
-    for rel in ["vag_1/01_00.csv", "kvv_s1/01_00.csv"]:
+    for rel in GOLDEN_FIXTURES:
         p = REFERENCE_FIXTURE_DIR / rel
         if not p.exists():
             missing.append(rel)

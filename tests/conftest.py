@@ -6,6 +6,25 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "requires_reference: reads the reference checkout's "
+        "golden CSVs; skipped, naming the missing files, without them")
+
+
+def pytest_runtest_setup(item):
+    if item.get_closest_marker("requires_reference") is None:
+        return
+    from pdf2gtfs_spark.sources import transcripts
+
+    where = transcripts.REFERENCE_FIXTURE_DIR
+    missing = [rel for rel in transcripts.GOLDEN_FIXTURES
+               if not (where / rel).exists()]
+    if missing:
+        pytest.skip(f"golden fixtures missing under REFERENCE_FIXTURE_DIR "
+                    f"{where}: {', '.join(missing)}")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

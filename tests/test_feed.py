@@ -10,6 +10,7 @@ import dataclasses
 import zipfile
 
 import pytest
+from frames import entries_df
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG
 from pdf2gtfs_spark.operators.feed import (
@@ -24,6 +25,15 @@ GTFS_FILES = {"agency", "stops", "routes", "calendar", "calendar_dates",
               "trips", "stop_times"}
 WEEK = ["monday", "tuesday", "wednesday", "thursday", "friday",
         "saturday", "sunday"]
+
+
+def _time(entry_id, stop_pos, name, value, days=(), route_name=""):
+    """One stop's time of a timed entry in table ("c", 0, 0)."""
+    return dict(conv_id="c", turn_idx=0, table_id=0, entry_id=entry_id,
+                kind="time", header_text="", route_name=route_name,
+                annotations=[], days=list(days), stop_pos=stop_pos,
+                stop_row_idx=stop_pos, stop_name=name, stop_annot="",
+                is_connection=False, value=value)
 
 
 @pytest.fixture(scope="module")
@@ -83,25 +93,12 @@ class TestFeed:
             assert t["service_id"] in service_ids
 
     def test_pruning_drops_timeless_trips(self, spark):
-        import pandas as pd
         rows = [
-            ("c", 0, 0, 0, "time", "", "", [], ["0"], None, 0, 0,
-             "Stop Alpha Long", "", False, "10.00"),
+            _time(0, 0, "Stop Alpha Long", "10.00", days=["0"]),
             # entry 1 has an unparseable value only -> no stop_times
-            ("c", 0, 0, 1, "time", "", "", [], ["0"], None, 0, 0,
-             "Stop Alpha Long", "", False, "xx"),
+            _time(1, 0, "Stop Alpha Long", "xx", days=["0"]),
         ]
-        cols = ["conv_id", "turn_idx", "table_id", "entry_id", "kind",
-                "header_text", "route_name", "annotations", "days",
-                "repeat_intervals", "stop_pos", "stop_row_idx",
-                "stop_name", "stop_annot", "is_connection", "value"]
-        schema = ("conv_id string, turn_idx int, table_id int, "
-                  "entry_id int, kind string, header_text string, "
-                  "route_name string, annotations array<string>, "
-                  "days array<string>, repeat_intervals array<int>, "
-                  "stop_pos int, stop_row_idx int, stop_name string, "
-                  "stop_annot string, is_connection boolean, value string")
-        e = spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema)
+        e = entries_df(spark, rows)
         feed = build_feed(e, spark)
         trips = feed["trips"].collect()
         # the unparseable trip still has a stop_times row (day_seconds
@@ -127,26 +124,12 @@ class TestFeed:
             assert len(st) == expected.n_time_cells.sum() + 1
 
     def test_routes_first_last_parseable(self, spark):
-        import pandas as pd
-        cols = ["conv_id", "turn_idx", "table_id", "entry_id", "kind",
-                "header_text", "route_name", "annotations", "days",
-                "repeat_intervals", "stop_pos", "stop_row_idx",
-                "stop_name", "stop_annot", "is_connection", "value"]
         rows = [
-            ("c", 0, 0, 0, "time", "", "S1", [], [], None, 0, 0,
-             "Alpha", "", False, "zz"),        # unparseable -> skipped
-            ("c", 0, 0, 0, "time", "", "S1", [], [], None, 1, 1,
-             "Beta", "", False, "10.00"),
-            ("c", 0, 0, 0, "time", "", "S1", [], [], None, 2, 2,
-             "Gamma", "", False, "10.10"),
+            _time(0, 0, "Alpha", "zz", route_name="S1"),  # unparseable
+            _time(0, 1, "Beta", "10.00", route_name="S1"),
+            _time(0, 2, "Gamma", "10.10", route_name="S1"),
         ]
-        schema = ("conv_id string, turn_idx int, table_id int, "
-                  "entry_id int, kind string, header_text string, "
-                  "route_name string, annotations array<string>, "
-                  "days array<string>, repeat_intervals array<int>, "
-                  "stop_pos int, stop_row_idx int, stop_name string, "
-                  "stop_annot string, is_connection boolean, value string")
-        e = spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema)
+        e = entries_df(spark, rows)
         r = build_routes(e).collect()
         assert len(r) == 1
         assert r[0]["route_long_name"] == "Beta-Gamma"

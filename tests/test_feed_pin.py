@@ -87,7 +87,7 @@ def _days_change_cells(y0: float, starts: list[int]):
 
 
 def _legacy_payloads() -> list[tuple[str, str]]:
-    from test_newpath import _block, _payload
+    from test_newpath import _block
     from test_ref_differential import (
         TestAdversarialLayouts, TestSeededRandomLayouts,
     )
@@ -96,27 +96,27 @@ def _legacy_payloads() -> list[tuple[str, str]]:
     out = []
     for seed in [*range(9000, 9020), 70000]:
         cells = TestAdversarialLayouts._layout(random.Random(seed))
-        out.append((f"v2_{seed}", _payload([c[:3] for c in cells])))
+        out.append((f"v2_{seed}", cells_to_payload([c[:3] for c in cells])))
     for seed in range(5000, 5010):
         cells = _gen_layout(random.Random(seed))
-        out.append((f"gen3_{seed}", _payload(cells)))
+        out.append((f"gen3_{seed}", cells_to_payload(cells)))
     for seed in range(1000, 1010):
         cells = TestSeededRandomLayouts._layout(None, random.Random(seed))
-        out.append((f"seeded_{seed}", _payload([c[:3] for c in cells])))
+        out.append((f"seeded_{seed}", cells_to_payload([c[:3] for c in cells])))
     for i, starts in enumerate(CHAINS):
         out.append((f"chain_{i}",
-                    _payload(TestServiceDayOffsets._chain(list(starts)))))
+                    cells_to_payload(TestServiceDayOffsets._chain(list(starts)))))
     # stacked sandwiches: repeats between columns 0|1 and 1|2
     cells, xs = _block(100.0, n_stops=8, n_trips=5)
     cells += _repeat_col(xs[0] + 5 * CHAR_W, 100.0, 5)
     cells += _repeat_col(xs[1] + 5 * CHAR_W, 100.0, 7)
     cells.append(("Sonntag", xs[0], 86.0))
-    out.append(("stacked", _payload(cells)))
+    out.append(("stacked", cells_to_payload(cells)))
     # an interval-less repeat (two distinct intervals) before a real one
     cells, xs = _block(100.0, n_stops=8, n_trips=5)
     cells += _repeat_col(xs[0] + 5 * CHAR_W, 100.0, 15, 30)
     cells += _repeat_col(xs[2] + 5 * CHAR_W, 100.0, 6)
-    out.append(("no_intervals", _payload(cells)))
+    out.append(("no_intervals", cells_to_payload(cells)))
     return out
 
 

@@ -5,38 +5,30 @@ Oracles: reference semantics in gtfs_output/stop_times.py (Time, W6,
 W7, W11, add_repeat) exercised on hand-built entries frames.
 """
 
-import pandas as pd
-import pytest
+from frames import entries_df
 
 from pdf2gtfs_spark.operators.feed import trip_route_service
 from pdf2gtfs_spark.operators.gtfs import (
     build_calendar, build_stop_times, build_stops, expand_repeats,
 )
 
-ENTRY_COLS = ["conv_id", "turn_idx", "table_id", "entry_id", "kind",
-              "header_text", "route_name", "annotations", "days",
-              "repeat_intervals", "stop_pos", "stop_row_idx",
-              "stop_name", "stop_annot", "value"]
-
-
-def _entries_df(spark, rows):
-    pdf = pd.DataFrame(rows, columns=ENTRY_COLS)
-    schema = ("conv_id string, turn_idx int, table_id int, entry_id int, "
-              "kind string, header_text string, route_name string, "
-              "annotations array<string>, days array<string>, "
-              "repeat_intervals array<int>, stop_pos int, "
-              "stop_row_idx int, stop_name string, stop_annot string, "
-              "value string")
-    return spark.createDataFrame(pdf, schema)
-
-
 WEEKDAYS = ["0", "1", "2", "3", "4"]
 
 
-def _mk(entry_id, stop_pos, name, value, kind="time", intervals=None,
-        days=WEEKDAYS):
-    return ("c", 0, 0, entry_id, kind, "Montag - Freitag", "",
-            [], days, intervals, stop_pos, stop_pos, name, "", value)
+def _mk(entry_id, stop_pos, name, value, days=WEEKDAYS):
+    return dict(conv_id="c", turn_idx=0, table_id=0, entry_id=entry_id,
+                kind="time", header_text="Montag - Freitag", route_name="",
+                annotations=[], days=days, stop_pos=stop_pos,
+                stop_row_idx=stop_pos, stop_name=name, stop_annot="",
+                value=value)
+
+
+def _rep(entry_id, intervals):
+    """A repeat column ('alle ...') between two timed entries."""
+    return dict(conv_id="c", turn_idx=0, table_id=0, entry_id=entry_id,
+                kind="repeat", header_text="", route_name="",
+                annotations=[], days=[], repeat_intervals=intervals,
+                value="alle")
 
 
 class TestStopTimes:
@@ -48,7 +40,7 @@ class TestStopTimes:
         rows = [_mk(0, 0, "Stop Alpha Long", "5.62"),
                 _mk(0, 1, "Stop Beta Long", "26.10"),
                 _mk(0, 2, "Stop Gamma Long", "5. 35")]
-        e = _entries_df(spark, rows)
+        e = entries_df(spark, rows)
         st = {r["stop_sequence"]: r["arrival_time"]
               for r in build_stop_times(e, build_stops(e)).collect()}
         assert st[0] == "00:00:00"
@@ -63,7 +55,7 @@ class TestStopTimes:
         rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
                 _mk(0, 1, "Stop Beta Long", "8.10"),
                 _mk(0, 2, "Stop Gamma Long", "8. 20")]
-        e = _entries_df(spark, rows)
+        e = entries_df(spark, rows)
         routes = build_routes(e).collect()
         assert [r["route_long_name"] for r in routes] == [
             "Stop Alpha Long-Stop Beta Long"]
@@ -74,7 +66,7 @@ class TestStopTimes:
                 _mk(0, 1, "Stop Beta Long", "23.59"),
                 _mk(0, 2, "Stop Gamma Long", "0.17"),
                 _mk(0, 3, "Stop Delta Long", "0.30")]
-        e = _entries_df(spark, rows)
+        e = entries_df(spark, rows)
         st = build_stop_times(e, build_stops(e)).collect()
         assert [r["arrival_time"] for r in st] == [
             "23:47:00", "23:59:00", "24:17:00", "24:30:00"]
@@ -83,7 +75,7 @@ class TestStopTimes:
         rows = [_mk(0, 0, "Stop Alpha Long", "23.00"),
                 _mk(0, 1, "Stop Beta Long", "1.00"),
                 _mk(0, 2, "Stop Gamma Long", "0.30")]
-        e = _entries_df(spark, rows)
+        e = entries_df(spark, rows)
         st = build_stop_times(e, build_stops(e)).collect()
         # second wrap: 0.30 < 1.00 -> +24h again
         assert [r["arrival_time"] for r in st] == [
@@ -96,7 +88,7 @@ class TestStopTimes:
                 _mk(0, 1, "Bertoldsbrunnen Xyz", "10.29"),
                 _mk(0, 2, "Bertoldsbrunnen Xyz", "10.31"),
                 _mk(0, 3, "Stop Omega Long", "10.45")]
-        e = _entries_df(spark, rows)
+        e = entries_df(spark, rows)
         st = build_stop_times(e, build_stops(e)).collect()
         assert len(st) == 3
         fold = st[1]
@@ -108,7 +100,7 @@ class TestStopTimes:
     def test_stop_id_deterministic_across_trips(self, spark):
         rows = [_mk(0, 0, "Stop Alpha Long", "10.00"),
                 _mk(1, 0, "Stop Alpha Long", "11.00")]
-        e = _entries_df(spark, rows)
+        e = entries_df(spark, rows)
         st = build_stop_times(e, build_stops(e)).collect()
         assert st[0]["stop_id"] == st[1]["stop_id"]
 
@@ -122,8 +114,7 @@ class TestRepeatExpansion:
         nxt = 2 + len(later)
         rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
                 _mk(0, 1, "Stop Beta Long", "8.10"),
-                *(("c", 0, 0, 1 + i, "repeat", "", "", [], [], iv,
-                   None, None, None, None, "alle")
+                *(_rep(1 + i, iv)
                   for i, iv in enumerate((intervals, *later))),
                 _mk(nxt, 0, "Stop Alpha Long",
                     f"{8 + gap_minutes // 60}.{gap_minutes % 60:02}",
@@ -131,7 +122,7 @@ class TestRepeatExpansion:
                 _mk(nxt, 1, "Stop Beta Long",
                     f"{8 + (gap_minutes + 10) // 60}."
                     f"{(gap_minutes + 10) % 60:02}", days=next_days)]
-        e = _entries_df(spark, rows)
+        e = entries_df(spark, rows)
         stops = build_stops(e)
         st = build_stop_times(e, stops)
         return e, st
@@ -202,15 +193,13 @@ class TestRepeatExpansion:
         # wrongly anchored rep3 on time2).
         rows = [_mk(0, 0, "Stop Alpha Long", "8.00"),
                 _mk(0, 1, "Stop Beta Long", "8.10"),
-                ("c", 0, 0, 1, "repeat", "", "", [], [], [25],
-                 None, None, None, None, "alle"),
+                _rep(1, [25]),
                 _mk(2, 0, "Stop Alpha Long", "8.40"),
                 _mk(2, 1, "Stop Beta Long", "8.55"),   # +15 offsets
-                ("c", 0, 0, 3, "repeat", "", "", [], [], [20],
-                 None, None, None, None, "alle"),
+                _rep(3, [20]),
                 _mk(4, 0, "Stop Alpha Long", "9.10"),
                 _mk(4, 1, "Stop Beta Long", "9.20")]
-        e = _entries_df(spark, rows)
+        e = entries_df(spark, rows)
         st = build_stop_times(e, build_stops(e))
         rep = expand_repeats(e, st).collect()
         trips = {}
@@ -237,7 +226,7 @@ class TestCalendarAndTrips:
     def test_calendar_dedup(self, spark):
         rows = [_mk(0, 0, "Stop Alpha Long", "10.00"),
                 _mk(1, 0, "Stop Alpha Long", "11.00")]
-        e = _entries_df(spark, rows)
+        e = entries_df(spark, rows)
         cal = build_calendar(e).collect()
         assert len(cal) == 1
         c = cal[0]
@@ -246,7 +235,7 @@ class TestCalendarAndTrips:
     def test_trips_per_entry(self, spark):
         rows = [_mk(0, 0, "Stop Alpha Long", "10.00"),
                 _mk(1, 0, "Stop Alpha Long", "11.00")]
-        e = _entries_df(spark, rows)
+        e = entries_df(spark, rows)
         assert trip_route_service(e).count() == 2
 
 
@@ -288,3 +277,31 @@ class TestEndToEndStopTimes:
         assert (fold["departure_time"], fold["stop_sequence"]) == (
             "24:04:00", 2)
         assert t0[3]["stop_sequence"] == 4
+
+
+class TestOracleKeySpellings:
+    def test_duckdb_keys_match_spark(self, spark):
+        """The oracles' DuckDB spellings of the calendar keys equal
+        days_key_col / annots_key_col on NULL and empty lists and on
+        tokens holding ',' or '\\'."""
+        import duckdb
+        import pyarrow as pa
+
+        from pdf2gtfs_spark.operators.gtfs import (
+            ANNOTS_KEY_SQL, DAYS_KEY_SQL, annots_key_col, days_key_col,
+        )
+
+        lists = [(None, None), ([], []), (["0", "h"], ["a"]),
+                 (["5"], ["a,b", "c\\d", "e\\,f", ""])]
+        e = entries_df(spark, [dict(days=d, annotations=a)
+                                for d, a in lists])
+        want = [(r[0], r[1]) for r in e.select(
+            days_key_col(), annots_key_col()).collect()]
+        t = pa.table({"days": pa.array([d for d, _ in lists],
+                                        pa.list_(pa.string())),
+                      "annotations": pa.array([a for _, a in lists],
+                                              pa.list_(pa.string()))})
+        got = duckdb.sql(f"SELECT {DAYS_KEY_SQL}, {ANNOTS_KEY_SQL} "
+                         "FROM t").fetchall()
+        assert got == want
+        assert want[3][1] == "a\\,b,c\\\\d,e\\\\\\,f,"

@@ -311,6 +311,7 @@ class TestGoldenFixtures:
         assert "vag_1/01_00.csv" in str(w[0].message)
         assert "kvv_s1" not in str(w[0].message)
 
+    @pytest.mark.requires_reference
     @pytest.mark.parametrize("idx", [0, 1])
     def test_fixture_csv_byte_equality(self, idx):
         turns = fixture_turns()
@@ -320,6 +321,7 @@ class TestGoldenFixtures:
         assert len(res.tables) == 1, name
         assert res.tables[0].csv_text == expected, name
 
+    @pytest.mark.requires_reference
     def test_vag_structure(self):
         _, payload, _ = fixture_turns()[0]
         res = extract_turn(payload)
@@ -337,6 +339,7 @@ class TestGoldenFixtures:
         assert t.entries["entry_id"].nunique() == 20
         assert t.entries["days"].iloc[0] == ["0", "1", "2", "3", "4"]
 
+    @pytest.mark.requires_reference
     def test_kvv_structure(self):
         _, payload, _ = fixture_turns()[1]
         res = extract_turn(payload)

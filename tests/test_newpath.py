@@ -12,7 +12,6 @@ geometry instead, with the reference's counted outcomes as the model.
 import dataclasses
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG
@@ -22,12 +21,13 @@ from pdf2gtfs_spark.kernel.celltypes import (
     TypeMatchers, is_legend_text, is_repeat_value_text,
 )
 from pdf2gtfs_spark.kernel.extract import _Fields, extract_turn
-from pdf2gtfs_spark.kernel.payload import (
-    CHAR_COLUMNS, CHAR_H, CHAR_W, PageBox, encode_chars,
-)
+from pdf2gtfs_spark.kernel.payload import CHAR_H, CHAR_W, encode_grid
 from pdf2gtfs_spark.kernel.table_grid import CellStore, Grid, H, V
 from pdf2gtfs_spark.kernel.newpath import Typer, find_stops
-from pdf2gtfs_spark.sources.transcripts import fixture_turns
+from pdf2gtfs_spark.sources.transcripts import (
+    cells_to_payload, expected_csv_for_grid, fixture_turns, synth_grid,
+    vag_like_block,
+)
 
 NEW_CFG = dataclasses.replace(DEFAULT_CONFIG, extraction_path="new")
 
@@ -200,20 +200,6 @@ def _block(times_y0, n_stops=8, n_trips=4, x_stops=40.0):
     return cells, x_times
 
 
-def _payload(cells):
-    chars = []
-    for text, x0, y0 in cells:
-        x = x0
-        for chx in text:
-            chars.append((round(x, 2), y0, round(x + CHAR_W, 2),
-                          y0 + CHAR_H, chx))
-            x += CHAR_W
-    df = pd.DataFrame(chars, columns=CHAR_COLUMNS)
-    page = PageBox(0, 0, float(df["x1"].max() + 40),
-                   float(df["y1"].max() + 40))
-    return encode_chars(page, df)
-
-
 class TestVagLikeLayout:
     """Structural pins mirroring the reference's test_table.py outcomes
     on equivalent synthetic geometry."""
@@ -221,7 +207,7 @@ class TestVagLikeLayout:
     def test_single_block_structure(self):
         cells, xs = _block(100.0)
         cells.append(("Sonntag", xs[0], 86.0))       # days above times
-        res = extract_turn(_payload(cells), NEW_CFG)
+        res = extract_turn(cells_to_payload(cells), NEW_CFG)
         assert len(res.tables) == 1
         t = res.tables[0]
         counts = t.cells["col_type"].value_counts().to_dict()
@@ -239,7 +225,7 @@ class TestVagLikeLayout:
         cells.append(("alle", x_rep, 120.0))
         cells.append(("15", x_rep, 130.0))
         cells.append(("Min.", x_rep, 140.0))
-        res = extract_turn(_payload(cells), NEW_CFG)
+        res = extract_turn(cells_to_payload(cells), NEW_CFG)
         assert len(res.tables) == 1
         t = res.tables[0]
         types = t.cells["col_type"].value_counts().to_dict()
@@ -259,7 +245,7 @@ class TestVagLikeLayout:
         cells.append(("Sonn-", xs2[0], 206.0))
         cells.append(("und", xs2[1], 206.0))
         cells.append(("Feiertag", xs2[2], 206.0))
-        res = extract_turn(_payload(cells), NEW_CFG)
+        res = extract_turn(cells_to_payload(cells), NEW_CFG)
         assert len(res.tables) == 2
         t1, t2 = res.tables
         d1 = t1.entries.groupby("entry_id")["days"].first()
@@ -270,24 +256,45 @@ class TestVagLikeLayout:
         texts2 = set(t2.cells["text"])
         assert "Sonn- und Feiertag" in texts2
 
-    def test_fixture_counts_match_reference(self):
-        # vag page 1: 23 stops x 20 entries (test/test_reader.py:91-101)
-        _, payload, _ = fixture_turns()[0]
-        res = extract_turn(payload, NEW_CFG)
+    def test_vag_page_sized_block_counts(self):
+        # the size of vag page 1 (23 stops x 20 entries,
+        # test/test_reader.py:91-101) as one vag_like_block: its counts
+        # follow from the construction, one "ab" and one "an" annotation
+        n_stops, n_trips = 23, 20
+        cells, _ = vag_like_block(100.0, n_stops=n_stops, n_trips=n_trips)
+        res = extract_turn(cells_to_payload(cells), NEW_CFG)
         assert len(res.tables) == 1
         t = res.tables[0]
-        assert len(t.stops) == 23
-        assert t.entries["entry_id"].nunique() == 20
+        assert len(t.stops) == n_stops
+        assert t.entries["entry_id"].nunique() == n_trips
         counts = t.cells["col_type"].value_counts().to_dict()
-        assert counts["Stop"] == 23
-        assert counts["StopAnnot"] == 4
+        assert counts["Stop"] == n_stops
+        assert counts["StopAnnot"] == 2
+        assert counts["Time"] == n_stops * n_trips
 
     def test_legacy_path_untouched(self):
-        name, payload, expected = fixture_turns()[0]
-        res = extract_turn(payload)  # default legacy config
-        assert res.tables[0].csv_text == expected
+        grid, hdr = synth_grid(np.random.default_rng(7))
+        res = extract_turn(encode_grid(grid, hdr))  # default legacy config
+        assert len(res.tables) == 1
+        assert res.tables[0].csv_text == expected_csv_for_grid(grid, hdr)
 
     def test_newpath_csv_snapshot_stable(self):
+        """The new path's CSV of a vag-page-sized block under a days
+        header is the layout's own grid, byte for byte: the expected
+        CSV comes from the construction, not from a recorded run."""
+        cells, xs = vag_like_block(100.0, n_stops=23, n_trips=20)
+        cells.append(("Montag - Freitag", xs[0], 86.0))
+        cols = sorted({x for _, x, _ in cells})
+        rows = sorted({y for _, _, y in cells})
+        grid = [[""] * len(cols) for _ in rows]
+        for text, x, y in cells:
+            grid[rows.index(y)][cols.index(x)] = text
+        res = extract_turn(cells_to_payload(cells), NEW_CFG)
+        assert [t.csv_text for t in res.tables] == [
+            expected_csv_for_grid(grid, [0])]
+
+    @pytest.mark.requires_reference
+    def test_newpath_golden_csv_hashes(self):
         """Regression pin: the new path's CSV output on the golden
         fixture payloads is deterministic and must not drift silently.
 
@@ -301,7 +308,9 @@ class TestVagLikeLayout:
             "vag_1/01_00.csv": "8b57415238235a262ac4882fcc26752b",
             "kvv_s1/01_00.csv": "1793dd2227da60a154ee2ee9f13e58e8",
         }
-        for name, payload, _ in fixture_turns():
+        turns = fixture_turns()
+        assert [name for name, _, _ in turns] == list(expected)
+        for name, payload, _ in turns:
             res = extract_turn(payload, NEW_CFG)
             h = hashlib.md5("\x1d".join(
                 t.csv_text for t in res.tables).encode()).hexdigest()
@@ -322,7 +331,7 @@ class TestVagLikeLayout:
             for k, x in enumerate(xs):
                 h, m = divmod((6 * 60 + 30 * r + 2 * k) % (24 * 60), 60)
                 cells.append((f"{h}.{m:02}", x, 112.0 + r * 10.0))
-        res = extract_turn(_payload(cells), NEW_CFG)
+        res = extract_turn(cells_to_payload(cells), NEW_CFG)
         assert len(res.tables) == 1
         t = res.tables[0]
         assert len(t.stops) == n_stops
@@ -416,7 +425,7 @@ class TestMergeAndDuplicateDays:
         cells.append(("Samstag", xs1[0], 86.0))
         cells.append(("Samstag", xs2[0], 206.0))   # kept (first)
         cells.append(("Sonntag", xs2[0], 292.0))   # below block 2: dup
-        res = extract_turn(_payload(cells), NEW_CFG)
+        res = extract_turn(cells_to_payload(cells), NEW_CFG)
         assert len(res.tables) == 2
         t2 = res.tables[1]
         days_cells = t2.cells[t2.cells["col_type"] == "Days"]

@@ -33,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG  # noqa: E402
 from pdf2gtfs_spark.kernel.extract import extract_turn  # noqa: E402
+from pdf2gtfs_spark.sources.transcripts import cells_to_payload  # noqa: E402
 
 DIGEST_FILE = Path(__file__).parent / "data" / "output_corpus.txt"
 
@@ -50,11 +51,10 @@ SEEDS["v4"].append(60268)
 def corpus_payload(family: str, seed: int) -> str:
     """The family's payload for one seed (diff_sweep ``_fields_for``)."""
     import test_ref_differential as mod
-    from test_newpath import _payload
 
     rng = random.Random(seed)
     if family == "v2":
-        return _payload(mod.TestAdversarialLayouts._layout(rng))
+        return cells_to_payload(mod.TestAdversarialLayouts._layout(rng))
     if family == "v3":
         cls = mod.TestAdversarialLayoutsV3
         return cls._payload_sized(cls._layout(rng))
@@ -62,7 +62,7 @@ def corpus_payload(family: str, seed: int) -> str:
         cls = mod.TestAdversarialLayoutsV4
         return cls._payload_cid(cls._layout(rng), rng)
     if family == "v5":
-        return _payload(mod.TestAdversarialLayoutsV5._layout(rng))
+        return cells_to_payload(mod.TestAdversarialLayoutsV5._layout(rng))
     raise ValueError(f"unknown family {family!r}")
 
 

@@ -59,7 +59,7 @@ def main(sf_dir: str, only: list[str]) -> int:
             continue
         if name not in oq:
             print(f"rows-only {name}: {len(sdf)} rows "
-                  f"({time.time() - t0:.1f}s)")
+                  f"hash {value_hash(sdf)} ({time.time() - t0:.1f}s)")
             if len(sdf) == 0:
                 print(f"  WARN {name}: zero rows")
             continue
@@ -87,7 +87,7 @@ def main(sf_dir: str, only: list[str]) -> int:
                 print(diff.head(6).to_string())
         else:
             print(f"OK   {name}: {len(sdf)} rows "
-                  f"({time.time() - t0:.1f}s)")
+                  f"hash {value_hash(sdf)} ({time.time() - t0:.1f}s)")
     spark.stop()
     return failures
 

@@ -33,6 +33,8 @@ _REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO))
 sys.path.insert(0, str(_REPO / "tests"))
 
+from pdf2gtfs_spark.sources.transcripts import cells_to_payload  # noqa: E402
+
 _mod = None          # test_ref_differential, imported per worker
 _merge = False       # run with merge_split_tables=True (both engines)
 _seed_timeout = 60   # per-seed wall clock before classifying 'timeout'
@@ -57,9 +59,8 @@ def _init(merge: bool = False):
 def _fields_for(family: str, seed: int):
     rng = random.Random(seed)
     if family == "v2":
-        from test_newpath import _payload
         cls = _mod.TestAdversarialLayouts
-        payload = _payload(cls._layout(rng))
+        payload = cells_to_payload(cls._layout(rng))
     elif family == "v3":
         cls = _mod.TestAdversarialLayoutsV3
         payload = cls._payload_sized(cls._layout(rng))
@@ -67,9 +68,8 @@ def _fields_for(family: str, seed: int):
         cls = _mod.TestAdversarialLayoutsV4
         payload = cls._payload_cid(cls._layout(rng), rng)
     elif family == "v5":
-        from test_newpath import _payload
         cls = _mod.TestAdversarialLayoutsV5
-        payload = _payload(cls._layout(rng))
+        payload = cells_to_payload(cls._layout(rng))
     else:
         raise SystemExit(f"unknown family {family!r}")
     return payload
