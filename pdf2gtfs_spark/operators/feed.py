@@ -6,6 +6,10 @@ Spark-first shapes:
   groupBy(trip) + min_by/max_by — one shuffle at trip grain, whose rows
   also carry each trip's service, so routes.txt and trips.txt project
   from the same aggregation;
+- the handler loop's service-day shifts and repeat copies
+  (handler.py:144-217): gtfs.service_day_offsets and
+  gtfs.expand_repeats, window columns and one fold per table — no
+  feed frame runs a Python UDF;
 - trips/stop_times pruning (handler.py:259-264, trips.py:66-72):
   left_semi joins (J9), never collected;
 - holiday calendar_dates (handler.py:219-237): broadcast cross join of
@@ -34,9 +38,9 @@ from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pdf2gtfs_spark.operators import register
 from pdf2gtfs_spark.operators.gtfs import (
     _ST_TIME_RE, ANNOTS_KEY_SQL, DAYS_KEY_SQL, ENTRIES_GLOB, _md5_id,
-    _repeat_copies, _time_parse_cols, _trip_key, annots_key_col,
-    apply_service_day_offsets, build_calendar, build_stop_times,
-    build_stops, days_key_col, handler_walk, materialize_entries,
+    _time_parse_cols, _trip_key, annots_key_col, apply_service_day_offsets,
+    build_calendar, build_stop_times, build_stops, days_key_col,
+    expand_repeats, materialize_entries, service_day_offsets,
 )
 from pdf2gtfs_spark.sources import literal_frame
 
@@ -153,12 +157,9 @@ def build_feed(entries: DataFrame, spark: SparkSession,
     st = build_stop_times(entries, stops, cfg)
     # cross-entry service-day offsets precede repeat expansion: the
     # reference duplicates the already-shifted previous trip and
-    # compares against the already-shifted next (handler.py:144-217);
-    # one walk yields both the offsets and the repeat sandwiches
-    walk = handler_walk(entries, st)
-    st = apply_service_day_offsets(
-        st, walk.select("trip_id", "shift_seconds"))
-    rep = _repeat_copies(entries, walk, st, cfg)
+    # compares against the already-shifted next (handler.py:144-217)
+    st = apply_service_day_offsets(st, service_day_offsets(entries, st))
+    rep = expand_repeats(entries, st, cfg)
     stop_times = st.select(
         "trip_id", "stop_sequence", "arrival_time", "departure_time",
         "stop_id").unionByName(rep.select(

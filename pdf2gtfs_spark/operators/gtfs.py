@@ -11,14 +11,16 @@ every derived key is computed here from its columns:
 - stop_times: W6 sequence numbering, W7 24h service-day rollover
   (stop_times.py:199-213), W11 consecutive-same-stop arrival/departure
   fold (stop_times.py:215-221), X1 time parsing with >24h semantics
+- the reference's per-table handler loop (handler.py:144-217): its
+  repeat anchors as window columns (``_anchors``), its service-day
+  shift as one fold per table (``service_day_offsets``), both over one
+  first-common-stop comparison (``_first_common``)
 - repeat expansion: sequence+explode between anchor trips
   (stop_times.py:247-264), cycle/mean strategies (X10, A10)
 - calendar: dedup on (days, annotations) (calendar.py:109-123)
 
-Scale: every op is a window or hash-shuffle on (conv_id-derived) keys;
-no driver loops. One grouped pandas UDF remains: ``handler_walk``, the
-reference's sequential per-table handler loop (service-day shifts and
-repeat anchors), run per (conv, turn, table) group.
+Scale: every op is a window, a higher-order function or a hash-shuffle
+on (conv_id-derived) keys; no driver loops and no Python UDF.
 """
 
 from __future__ import annotations
@@ -186,24 +188,14 @@ def expand_repeats(entries: DataFrame, stop_times: DataFrame,
                    cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     """Repeat expansion (stop_times.py:247-264) as sequence+explode.
 
-    For each repeat column sandwiched between two timed entries, emit
-    shifted copies of the previous trip until the next trip's start is
-    reached. Shift of the k-th copy under the cycle strategy:
+    For each repeat column sandwiched between two timed entries
+    (``_anchors``), emit shifted copies of the previous trip until the
+    next trip's start is reached. Shift of the k-th copy under the
+    cycle strategy:
         shift(k) = (k // len) * sum(deltas) + prefix[k % len]
     computed with element_at over a per-entry cumulative-sum array.
-    The sandwiches come from ``handler_walk``; they depend only on the
-    entries' kind, days and intervals, never on stop times.
     """
-    return _repeat_copies(entries, handler_walk(entries, stop_times),
-                          stop_times, cfg)
-
-
-def _repeat_copies(entries: DataFrame, walk: DataFrame,
-                   stop_times: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    """expand_repeats over the sandwiches of a ``handler_walk`` frame."""
-    reps = (entries.where(
-                "kind = 'repeat' AND repeat_intervals IS NOT NULL "
-                "AND size(repeat_intervals) > 0")
+    reps = (entries.where(_REPEAT_OK)
             .select(_trip_key().alias("repeat_trip"), "repeat_intervals")
             .distinct())
     if cfg.repeat_strategy == "mean":
@@ -215,31 +207,17 @@ def _repeat_copies(entries: DataFrame, walk: DataFrame,
     else:
         reps = reps.withColumn(
             "deltas", F.col("repeat_intervals").cast("array<double>"))
-    anchored = (reps.join(walk.withColumnRenamed("trip_id", "next_trip"),
-                          "repeat_trip")
-                .select("deltas", "prev_trip", "next_trip"))
-    # The reference's stopping rule compares the two trips at the FIRST
-    # stop (in the previous trip's sequence order) that both trips
-    # share (stop_times.py:272-279 __lt__ walks previous' entries and
-    # compares at the first stop_id found in next), so the gap is
+    # The reference's stopping rule compares each copy with the next
+    # trip at their first common stop (_first_common), so the gap is
     # measured there — not at each trip's own first stop.  Trips with
     # no common stop make the reference assert/loop; they are dropped
-    # here (gap is null -> inner join removes the pair).
-    p = stop_times.select(F.col("trip_id").alias("prev_trip"),
-                          F.col("stop_sequence").alias("p_seq"),
-                          F.col("arr_seconds").alias("p_arr"),
-                          "stop_id")
-    nx = stop_times.select(F.col("trip_id").alias("next_trip"),
-                           F.col("arr_seconds").alias("n_arr"),
-                           "stop_id")
-    gaps = (anchored.select("prev_trip", "next_trip").distinct()
-            .join(p, "prev_trip")
-            .join(nx, ["next_trip", "stop_id"])
-            .groupBy("prev_trip", "next_trip")
-            .agg(F.min_by(F.col("n_arr") - F.col("p_arr"), "p_seq")
-                 .alias("gap")))
-    anchored = (anchored
-                .join(gaps, ["prev_trip", "next_trip"])
+    # here (gap is null).
+    anchored = (_first_common(reps.join(_anchors(entries), "repeat_trip")
+                              .select("deltas", "prev_trip", "trip_id"),
+                              stop_times)
+                .select("deltas", "prev_trip",
+                        F.col("trip_id").alias("next_trip"),
+                        (F.col("n_arr") - F.col("p_arr")).alias("gap"))
                 .where(F.col("gap") > 0))
     # cumulative-sum array of one delta cycle
     anchored = (anchored
@@ -296,134 +274,145 @@ def _repeat_copies(entries: DataFrame, walk: DataFrame,
     return out
 
 
+_TABLE_KEY = ["conv_id", "turn_idx", "table_id"]
+_REPEAT_OK = ("kind = 'repeat' AND repeat_intervals IS NOT NULL "
+              "AND size(repeat_intervals) > 0")
+
+
+def _anchors(entries: DataFrame) -> DataFrame:
+    """The pointers of the reference's per-table handler loop
+    (handler.py:175-216), one row per timed entry: the table key,
+    ``entry_id``, ``trip_id``, ``new_days``, ``pending``, ``prev_trip``
+    and ``repeat_trip``. They depend only on kind, days and intervals,
+    so they are window columns over each table's entries in
+    ``entry_id`` order:
+
+    - ``pending`` is the repeat just before the entry when that repeat
+      has intervals. A repeat without intervals clears the pending one
+      and a later repeat replaces an earlier (handler.py:182-184).
+    - A timed entry is an anchor (it becomes ``previous``) when nothing
+      is pending: ``previous`` advances only then, so stacked
+      sandwiches (time, repeat, time, repeat, time) all anchor on the
+      entry before the FIRST repeat (sweep seed 97194).
+    - A days segment is a run of consecutive timed entries with the
+      same days; ``new_days`` marks its first entry, where the chain
+      resets (offset 0, previous None). Annotations are not part of
+      same_days (calendar.py:109-115).
+    - ``prev_trip`` is the last anchor before the entry in its segment.
+    - ``repeat_trip`` is ``pending``, set only when ``prev_trip`` is: a
+      repeat with previous None is skipped (handler.py:205-210).
+    """
+    w = Window.partitionBy(*_TABLE_KEY).orderBy("entry_id")
+    timed = (entries.where("kind IN ('time', 'repeat')")
+             .select(*_TABLE_KEY, "entry_id", "kind",
+                     days_key_col().alias("days_key"),
+                     F.expr(_REPEAT_OK).alias("repeat_ok"))
+             .distinct()
+             .withColumn("trip_id", _trip_key())
+             .withColumn("pending", F.when(F.lag("repeat_ok").over(w),
+                                           F.lag("trip_id").over(w)))
+             .where("kind = 'time'")
+             .withColumn("new_days", F.coalesce(
+                 F.lag("days_key").over(w) != F.col("days_key"),
+                 F.lit(True)))
+             .withColumn("segment", F.sum(F.col("new_days").cast("int"))
+                         .over(w.rowsBetween(Window.unboundedPreceding, 0))))
+    before = (Window.partitionBy(*_TABLE_KEY, "segment").orderBy("entry_id")
+              .rowsBetween(Window.unboundedPreceding, -1))
+    prev = F.last(F.when(F.col("pending").isNull(), F.col("trip_id")),
+                  ignorenulls=True).over(before)
+    return (timed.withColumn("prev_trip", prev)
+            .withColumn("repeat_trip",
+                        F.when(F.col("prev_trip").isNotNull(),
+                               F.col("pending")))
+            .select(*_TABLE_KEY, "entry_id", "trip_id", "new_days",
+                    "pending", "prev_trip", "repeat_trip"))
+
+
+def _first_common(pairs: DataFrame, stop_times: DataFrame) -> DataFrame:
+    """The reference's trip comparison (StopTimes.__lt__,
+    stop_times.py:265-279) for each row of ``pairs``, which names a
+    ``prev_trip`` and a ``trip_id``: both trips' arrivals at the first
+    stop, in the previous trip's order, that the other trip also
+    serves. A trip's arrival at a stop is its FIRST row there
+    (_get_entry_from_stop_id), on both trips, so a trip that visits a
+    stop twice (a cyclic route, or a multi-block collapse) is compared
+    at its first visit.
+
+    Adds ``compared`` (the previous trip has stop times), ``p_arr`` and
+    ``n_arr``; the arrivals are NULL when the two trips share no stop.
+    """
+    first = (stop_times.groupBy("trip_id", "stop_id")
+             .agg(F.min(F.struct("stop_sequence", "arr_seconds"))
+                  .alias("f")))
+    prev = first.select(F.col("trip_id").alias("prev_trip"), "stop_id",
+                        F.col("f.stop_sequence").alias("p_seq"),
+                        F.col("f.arr_seconds").alias("p_arr"))
+    nxt = first.select("trip_id", "stop_id",
+                       F.col("f.arr_seconds").alias("n_arr"))
+    common = F.min(F.when(F.col("n_arr").isNotNull(),
+                          F.struct("p_seq", "p_arr", "n_arr")))
+    return (pairs.join(prev, "prev_trip", "left")
+            .join(nxt, ["trip_id", "stop_id"], "left")
+            .groupBy(*pairs.columns)
+            .agg((F.count("p_seq") > 0).alias("compared"),
+                 common.alias("c"))
+            .select(*pairs.columns, "compared", "c.p_arr", "c.n_arr"))
+
+
 def service_day_offsets(entries: DataFrame, stop_times: DataFrame,
                         cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """(trip_id, shift_seconds): the service-day offset chain of
-    ``handler_walk``."""
-    return handler_walk(entries, stop_times).select("trip_id",
-                                                    "shift_seconds")
-
-
-def handler_walk(entries: DataFrame, stop_times: DataFrame) -> DataFrame:
-    """The reference's per-table handler loop (handler.py:144-217) as
-    one walk over each table's entries, one row per timed entry:
-    ``(trip_id, shift_seconds, repeat_trip, prev_trip)``.
-
-    ``shift_seconds`` is the service-day offset, mirrored bug-for-bug:
+    """(trip_id, shift_seconds): the reference's service-day offset
+    chain (handler.py:144-217), one fold per table over its timed
+    entries in ``entry_id`` order with an (offset, anchor_shift) state,
+    where anchor_shift is the shift of the last anchor (``_anchors``).
+    Mirrored bug-for-bug:
 
     - new_day() tests ``previous > current`` where __gt__ is
       ``not __lt__ and not __eq__`` (stop_times.py:285-286) and __lt__
-      compares arrivals at the FIRST stop (in the previous trip's
-      order) shared with the current trip — so a tie OR a disjoint
-      stop set also triggers the +24h shift;
+      compares arrivals at the first common stop (``_first_common``),
+      the previous trip's shifted, the current one's at the running
+      offset — so a tie OR a disjoint stop set also triggers the +24h
+      shift;
+    - an EMPTY previous StopTimes (every stop a connection) is FALSY
+      (BaseContainer.__len__, gtfs_output/__init__.py:141), so
+      ``previous and previous > current`` (handler.py:173)
+      short-circuits and no shift fires (GTFS sweep seed 70000);
     - the accumulated ``service_day_offset`` is passed to add_multiple
       as ``Time(offset)`` — i.e. as HOURS, not days (handler.py:152,
       stop_times.py:202): the n-th day-crossing column is shifted by
-      24h + (n-1)h on top of earlier offsets.
-
-    ``repeat_trip`` / ``prev_trip`` are set when the entry closes a
-    repeat sandwich: the pending repeat and the left anchor, whose
-    shifted copies expand_repeats emits up to this (right) anchor.
-    Both follow the reference's ``previous`` pointer EXACTLY
-    (handler.py:175-216):
-
-    - ``previous`` advances ONLY when a timed entry is processed with
-      NO pending repeat, so stacked repeat sandwiches (time, repeat,
-      time, repeat, time) all anchor on the entry before the FIRST
-      repeat — a nearest-neighbor lag() anchored each repeat on its
-      left neighbor and diverged on multi-repeat tables (sweep seed
-      97194) — and the next shift comparison still uses the left
-      anchor;
-    - the chain resets (offset=0, previous=None) when the entry's
-      calendar DAYS differ from the previous entry's — annotations are
-      not part of same_days (calendar.py:109-115); a repeat with
-      previous=None is skipped (handler.py:205-210);
-    - a repeat entry WITHOUT intervals CLEARS the pending repeat, and a
-      later repeat replaces an earlier pending one
-      (handler.py:182-184).
-
-    Runs per (conv, turn, table) group via applyInPandas — a table has
-    at most a few dozen entries, so the sequential recurrence is local
-    and the operator stays partitioned by table key at any scale.
+      24h + (n-1)h on top of earlier offsets;
+    - a new days segment resets the offset.
     """
-    key_cols = ["conv_id", "turn_idx", "table_id"]
-    repeat_ok = ((F.col("kind") == "repeat")
-                 & F.col("repeat_intervals").isNotNull()
-                 & (F.size("repeat_intervals") > 0))
-    meta = (entries.where("kind IN ('time', 'repeat')")
-            .select(*key_cols, "entry_id", "kind",
-                    days_key_col().alias("days_key"),
-                    repeat_ok.alias("repeat_ok"))
-            .distinct()
-            .withColumn("trip_id", _trip_key()))
-    inp = meta.join(
-        stop_times.select("trip_id", "stop_sequence", "arr_seconds",
-                          "stop_id"),
-        "trip_id", "left")
+    steps = (_first_common(_anchors(entries), stop_times)
+             .groupBy(*_TABLE_KEY)
+             .agg(F.array_sort(F.collect_list(F.struct(
+                 "entry_id", "trip_id", "new_days", "pending", "compared",
+                 "p_arr", "n_arr"))).alias("steps")))
 
-    def walk(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pandas as pd
+    def step(acc, x):
+        offset = F.when(x["new_days"], 0).otherwise(acc["offset"])
+        fire = x["compared"] & (
+            x["n_arr"].isNull()
+            | ~(x["p_arr"] + acc["anchor_shift"]
+                < x["n_arr"] + 3600 * offset))
+        shift = (3600 * offset
+                 + F.when(fire, 86400).otherwise(0)).cast("bigint")
+        return F.struct(
+            (offset + fire.cast("int")).alias("offset"),
+            F.when(x["pending"].isNull(), shift)
+            .otherwise(acc["anchor_shift"]).alias("anchor_shift"),
+            F.concat(acc["shifts"], F.array(F.struct(
+                x["trip_id"].alias("trip_id"),
+                shift.alias("shift_seconds")))).alias("shifts"))
 
-        rows = []
-        prev = None              # (stop order, {stop: arr}, shift, trip)
-        prev_days = None
-        offset = 0
-        pending = None           # trip key of the pending repeat
-        groups = {eid: g for eid, g in pdf.groupby("entry_id")}
-        for eid in sorted(groups):
-            g = groups[eid]
-            r0 = g.iloc[0]
-            if r0["kind"] == "repeat":
-                pending = r0["trip_id"] if r0["repeat_ok"] else None
-                continue
-            g = g[g["stop_sequence"].notna()].sort_values("stop_sequence")
-            # a stop may appear at several non-consecutive sequences
-            # (multi-block collapse); __lt__/_get_entry_from_stop_id
-            # always resolve the FIRST entry per stop_id
-            # (stop_times.py:265-279), so keep first-wins arrivals
-            order, arr = [], {}
-            for sid, a in zip(g["stop_id"], g["arr_seconds"]):
-                if sid not in arr:
-                    order.append(sid)
-                    arr[sid] = a
-            days = r0["days_key"]
-            if prev_days is not None and days != prev_days:
-                offset = 0
-                prev = None
-            delta0 = 3600 * offset
-            flag = False
-            if prev is not None and prev[0]:
-                # an EMPTY previous StopTimes (every stop a connection)
-                # is FALSY (BaseContainer.__len__, gtfs_output/
-                # __init__.py:141), so `previous and previous > current`
-                # (handler.py:173) short-circuits and the rollover is
-                # DISABLED for the next entry — even though a fired
-                # comparison would return True (GTFS sweep seed 70000)
-                p_order, p_arr, p_shift, _ = prev
-                # disjoint stop sets -> __lt__ exhausts -> False
-                # -> __gt__ True -> the shift fires
-                common = next((s for s in p_order if s in arr), None)
-                if common is None:
-                    flag = True
-                else:
-                    flag = not (p_arr[common] + p_shift
-                                < arr[common] + delta0)
-            shift = delta0 + (86400 if flag else 0)
-            if flag:
-                offset += 1
-            closes = pending is not None and prev is not None
-            rows.append((r0["trip_id"], shift, pending if closes else None,
-                         prev[3] if closes else None))
-            prev_days = days
-            if pending is None:
-                prev = (order, arr, shift, r0["trip_id"])
-            pending = None
-        return pd.DataFrame(rows, columns=[
-            "trip_id", "shift_seconds", "repeat_trip", "prev_trip"])
-
-    return (inp.groupBy(*key_cols)
-            .applyInPandas(walk, "trip_id string, shift_seconds long, "
-                                 "repeat_trip string, prev_trip string"))
+    zero = F.struct(
+        F.lit(0).alias("offset"),
+        F.lit(0).cast("bigint").alias("anchor_shift"),
+        F.array().cast("array<struct<trip_id:string,shift_seconds:bigint>>")
+        .alias("shifts"))
+    return steps.select(F.inline(F.aggregate("steps", zero, step,
+                                             lambda acc: acc["shifts"])))
 
 
 def apply_service_day_offsets(stop_times: DataFrame,
@@ -500,7 +489,7 @@ def build_calendar(entries: DataFrame) -> DataFrame:
 #   kernel actually extracted -> hash match == per-turn text equality.
 # - gtfs/feed tail: the kernel's entries are materialized once
 #   (materialize_entries) and BOTH engines derive every key and run the
-#   tail's windows, walks and joins on that same parquet.
+#   tail's windows, folds and joins on that same parquet.
 
 from pdf2gtfs_spark.operators._aux import (aux_glob, aux_path,
                                             write_aux_pandas,
@@ -579,7 +568,7 @@ def extract_cells_newpath(spark, sf_dir):
     ent = entries_table(extracted).where("kind = 'time'")
     n_entries = (ent.groupBy(keys)
                  .agg(F.countDistinct("entry_id").alias("n_entries"),
-                      F.min(F.array_join("days", ",")).alias("days_key")))
+                      F.min(days_key_col()).alias("days_key")))
     n_time = (cells_table(extracted).where("col_type = 'Time'")
               .groupBy(keys).agg(F.count("*").alias("n_time_cells")))
     return (n_stops.join(n_entries, keys).join(n_time, keys)
@@ -634,9 +623,9 @@ _ENTRIES_PARQUET = aux_path("gtfs_entries.parquet")   # Spark-written dir
 ENTRIES_GLOB = aux_glob("gtfs_entries.parquet")       # DuckDB-side glob
 _ST_TIME_RE = r"^(\d{1,2})\.(\d{1,2})$"
 
-# DuckDB spellings of days_key_col / annots_key_col and handler_walk's
-# repeat_ok. array_to_string gives NULL on an empty list where Spark's
-# array_join gives '', hence the coalesce.
+# DuckDB spellings of days_key_col / annots_key_col and _REPEAT_OK.
+# array_to_string gives NULL on an empty list where Spark's array_join
+# gives '', hence the coalesce.
 DAYS_KEY_SQL = "coalesce(array_to_string(days, ','), '')"
 ANNOTS_KEY_SQL = (r"coalesce(array_to_string(list_transform(annotations, "
                   r"x -> replace(replace(x, '\', '\\'), ',', '\,')), ','), "

@@ -48,7 +48,6 @@ from math import inf, log
 import numpy as np
 import pandas as pd
 
-from pdf2gtfs_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pdf2gtfs_spark.functions.normalize import normalize_name
 from pdf2gtfs_spark.operators import register
 

@@ -15,26 +15,23 @@ max-bucket filter, mirroring what MinHashLSH implementations do.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pdf2gtfs_spark.operators import read_scaled, register
 
 # Candidate-pruning caps (no-silent-caps convention, VERDICT r4 #3):
-# env-overridable so a production run tunes them per corpus, and the
-# registered `dedup_cap_metrics` query reports exactly what they drop
-# (groups + rows), so truncation is visible in driver artifacts.
+# the registered `dedup_cap_metrics` query reports exactly what they
+# drop (groups + rows), so truncation is visible in driver artifacts.
 # - JACCARD_DF_CAP: shingles appearing in more than this many docs are
 #   excluded from the inverted-index join (hot-key blowup bound).
 # - LSH_BUCKET_CAP: LSH band buckets holding more than this many docs
 #   are dropped whole (degenerate/boilerplate clusters; sf1 sweep
 #   found one 18,337-doc bucket -> 261M candidate pairs).
-# Oracle SQL strings interpolate these at import, so an env override
-# applies consistently to both engines.
-JACCARD_DF_CAP = int(os.environ.get("SPARK_GRAFT_JACCARD_DF_CAP", "64"))
-LSH_BUCKET_CAP = int(os.environ.get("SPARK_GRAFT_LSH_BUCKET_CAP", "512"))
+# Oracle SQL strings interpolate these, so both engines apply the same
+# caps; cap_drop_metrics takes others for tests.
+JACCARD_DF_CAP = 64
+LSH_BUCKET_CAP = 512
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,17 +1,13 @@
-"""GTFS feed CSV sink/source (SURVEY.md §2.1 S5-S7).
+"""GTFS feed CSV source (SURVEY.md §2.1 S6).
 
-- ``write_gtfs_feed``: one CSV per GTFS table written distributed
-  (coalesced per table — GTFS files are small relative to the input),
-  then zipped driver-side into feed.zip, mirroring the reference's
-  writer+zip (gtfs_output/__init__.py:106-121, handler.py:266-310).
-- ``read_gtfs_feed``: header-aware all-string reads like the
-  reference's ``pd.read_csv(dtype=str, keep_default_na=False)``
-  (gtfs_output/__init__.py:59-69).
+``read_gtfs_feed``: header-aware all-string reads like the reference's
+``pd.read_csv(dtype=str, keep_default_na=False)``
+(gtfs_output/__init__.py:59-69). The feed's writer is
+``operators.feed.write_feed_zip``.
 """
 
 from __future__ import annotations
 
-import zipfile
 from pathlib import Path
 
 GTFS_SCHEMAS = {
@@ -33,37 +29,6 @@ GTFS_SCHEMAS = {
     "calendar_dates": "service_id string, date string, "
                       "exception_type string",
 }
-
-
-def write_gtfs_feed(dfs: dict, out_dir: str,
-                    zip_name: str = "feed.zip") -> str:
-    """Write each table as <name>.txt (GTFS CSV) + zip the feed.
-
-    ``dfs``: {table_name: DataFrame}. Tables are coalesced to a single
-    file each — GTFS output is dimension-sized next to the input, so a
-    single writer task per table is the right plan even at 100 TB
-    input scale.
-    """
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    txt_paths = []
-    for name, df in dfs.items():
-        tmp = out / f"_{name}_csv"
-        (df.coalesce(1).write.mode("overwrite")
-         .option("header", True).option("emptyValue", "")
-         .csv(str(tmp)))
-        part = next(Path(tmp).glob("part-*.csv"))
-        target = out / f"{name}.txt"
-        part.replace(target)
-        for leftover in Path(tmp).glob("*"):
-            leftover.unlink()
-        Path(tmp).rmdir()
-        txt_paths.append(target)
-    zip_path = out / zip_name
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for p in sorted(txt_paths):
-            zf.write(p, arcname=p.name)
-    return str(zip_path)
 
 
 def read_gtfs_feed(spark, feed_dir: str) -> dict:

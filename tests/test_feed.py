@@ -7,10 +7,12 @@ corpus construction.
 """
 
 import dataclasses
+import re
 import zipfile
 
 import pytest
 from frames import entries_df
+from pyspark.sql import functions as F
 
 from pdf2gtfs_spark.config import DEFAULT_CONFIG
 from pdf2gtfs_spark.operators.feed import (
@@ -23,6 +25,9 @@ from pdf2gtfs_spark.sources.transcripts import (
 
 GTFS_FILES = {"agency", "stops", "routes", "calendar", "calendar_dates",
               "trips", "stop_times"}
+# class names of the plan nodes and expressions that run Python
+PYTHON_NODES = ("PythonUDF", "FlatMapGroupsInPandas", "MapInPandas",
+                "MapInArrow", "ArrowEvalPython", "BatchEvalPython")
 WEEK = ["monday", "tuesday", "wednesday", "thursday", "friday",
         "saturday", "sunday"]
 
@@ -34,6 +39,15 @@ def _time(entry_id, stop_pos, name, value, days=(), route_name=""):
                 annotations=[], days=list(days), stop_pos=stop_pos,
                 stop_row_idx=stop_pos, stop_name=name, stop_annot="",
                 is_connection=False, value=value)
+
+
+def _python_nodes(df) -> set[str]:
+    """The Python-run node and expression classes in the frame's
+    optimized logical plan and its physical plan."""
+    qe = df._jdf.queryExecution()
+    js = qe.optimizedPlan().toJSON() + qe.sparkPlan().toJSON()
+    return {c for c in re.findall(r'"class":"[\w.$]*\.(\w+)"', js)
+            if any(p in c for p in PYTHON_NODES)}
 
 
 @pytest.fixture(scope="module")
@@ -122,6 +136,25 @@ class TestFeed:
             # distinct stop names per block -> no fold: one row per
             # time cell, plus the header
             assert len(st) == expected.n_time_cells.sum() + 1
+
+    def test_feed_plans_run_no_python(self, spark):
+        """No feed frame evaluates Python: the handler loop's anchors,
+        shifts and repeat copies are Catalyst expressions."""
+        rows = [*(_time(e, s, name, f"{h}.{10 * s:02}", days=days)
+                  for e, h, days in ((0, 8, ["0"]), (2, 9, ["0"]),
+                                     (3, 7, ["5"]))
+                  for s, name in enumerate(["Alpha", "Beta", "Gamma"])),
+                dict(conv_id="c", turn_idx=0, table_id=0, entry_id=1,
+                     kind="repeat", repeat_intervals=[20], value="alle")]
+        e = entries_df(spark, rows)
+        # the check sees a Python UDF where there is one
+        assert "PythonUDF" in _python_nodes(
+            e.select(F.udf(lambda v: v)("value")))
+        feed = build_feed(e, spark)
+        assert {name: _python_nodes(df) for name, df in feed.items()} == {
+            name: set() for name in GTFS_FILES}
+        # copies at 8:20 and 8:40 between the 8:00 and 9:00 trips
+        assert feed["stop_times"].count() == 5 * 3
 
     def test_routes_first_last_parseable(self, spark):
         rows = [

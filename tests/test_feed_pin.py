@@ -86,8 +86,15 @@ def _days_change_cells(y0: float, starts: list[int]):
     return cells, xs
 
 
+def _musterstr_block() -> tuple[list, list[float]]:
+    """An 8-stop, 5-trip ``vag_like_block`` with the stop names the feed
+    was pinned with ("Musterstr Halt <s>"); returns (cells, xs)."""
+    cells, xs = vag_like_block(100.0, n_stops=8, n_trips=5)
+    return [(f"Musterstr Halt {round(y - 100.0) // 10}" if x == 40.0 else t,
+             x, y) for t, x, y in cells], xs
+
+
 def _legacy_payloads() -> list[tuple[str, str]]:
-    from test_newpath import _block
     from test_ref_differential import (
         TestAdversarialLayouts, TestSeededRandomLayouts,
     )
@@ -107,13 +114,13 @@ def _legacy_payloads() -> list[tuple[str, str]]:
         out.append((f"chain_{i}",
                     cells_to_payload(TestServiceDayOffsets._chain(list(starts)))))
     # stacked sandwiches: repeats between columns 0|1 and 1|2
-    cells, xs = _block(100.0, n_stops=8, n_trips=5)
+    cells, xs = _musterstr_block()
     cells += _repeat_col(xs[0] + 5 * CHAR_W, 100.0, 5)
     cells += _repeat_col(xs[1] + 5 * CHAR_W, 100.0, 7)
     cells.append(("Sonntag", xs[0], 86.0))
     out.append(("stacked", cells_to_payload(cells)))
     # an interval-less repeat (two distinct intervals) before a real one
-    cells, xs = _block(100.0, n_stops=8, n_trips=5)
+    cells, xs = _musterstr_block()
     cells += _repeat_col(xs[0] + 5 * CHAR_W, 100.0, 15, 30)
     cells += _repeat_col(xs[2] + 5 * CHAR_W, 100.0, 6)
     out.append(("no_intervals", cells_to_payload(cells)))

@@ -6,6 +6,7 @@ W7, W11, add_repeat) exercised on hand-built entries frames.
 """
 
 from frames import entries_df
+from pyspark.sql import functions as F
 
 from pdf2gtfs_spark.operators.feed import trip_route_service
 from pdf2gtfs_spark.operators.gtfs import (
@@ -220,6 +221,44 @@ class TestRepeatExpansion:
             8 * 3600 + 25 * 60,   # rep1 k=1
             8 * 3600 + 40 * 60,   # rep3 k=2
             9 * 3600]             # rep3 k=3 (9:00 < 9:10)
+
+
+    def test_cyclic_route_gap_at_first_visit(self, spark):
+        # a cyclic route returns to its first stop. The reference
+        # compares a copy with the next trip at their first common stop
+        # and resolves each trip's FIRST entry there
+        # (_get_entry_from_stop_id, stop_times.py:265-279): the gap is
+        # 9:00 - 8:00, not 9:30 - 8:00 at the next trip's return, so
+        # alle 20 gives 8:20 and 8:40 (the 9:00 tie is dropped)
+        loop = ["Stop Alpha Long", "Stop Beta Long", "Stop Gamma Long",
+                "Stop Alpha Long"]
+        rows = [*(_mk(0, s, n, f"8.{10 * s:02}")
+                  for s, n in enumerate(loop)),
+                _rep(1, [20]),
+                *(_mk(2, s, n, f"9.{10 * s:02}")
+                  for s, n in enumerate(loop))]
+        e = entries_df(spark, rows)
+        st = build_stop_times(e, build_stops(e))
+        # the rule holds whatever order the rows reach the comparison
+        # in: sort-merge joins over stop times ranged latest-first put
+        # the return visit first
+        conf = {"spark.sql.adaptive.enabled": "false",
+                "spark.sql.autoBroadcastJoinThreshold": "-1"}
+        saved = {k: spark.conf.get(k) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            rep = expand_repeats(
+                e, st.repartitionByRange(2, F.desc("arr_seconds"))
+            ).collect()
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+        starts = sorted(r["arrival_time"] for r in rep
+                        if r["stop_sequence"] == 0)
+        assert starts == ["08:20:00", "08:40:00"]
+        # each copy is the whole loop, its return included
+        assert len(rep) == 2 * len(loop)
 
 
 class TestCalendarAndTrips:

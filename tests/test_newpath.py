@@ -17,12 +17,12 @@ import pytest
 from pdf2gtfs_spark.config import DEFAULT_CONFIG
 from pdf2gtfs_spark.kernel import celltypes as ct
 from pdf2gtfs_spark.kernel.celltypes import (
-    DAYS, EMPTY, OTHER, REPEAT_IDENT, REPEAT_VALUE, STOP, STOP_ANNOT, TIME,
-    TypeMatchers, is_legend_text, is_repeat_value_text,
+    EMPTY, OTHER, REPEAT_IDENT, REPEAT_VALUE, STOP_ANNOT, TIME, TypeMatchers,
+    is_legend_text, is_repeat_value_text,
 )
 from pdf2gtfs_spark.kernel.extract import _Fields, extract_turn
 from pdf2gtfs_spark.kernel.payload import CHAR_H, CHAR_W, encode_grid
-from pdf2gtfs_spark.kernel.table_grid import CellStore, Grid, H, V
+from pdf2gtfs_spark.kernel.table_grid import CellStore, Grid
 from pdf2gtfs_spark.kernel.newpath import Typer, find_stops
 from pdf2gtfs_spark.sources.transcripts import (
     cells_to_payload, expected_csv_for_grid, fixture_turns, synth_grid,
@@ -179,33 +179,12 @@ class TestGridPredicates:
         assert not ty.is_between(r, c, TIME)
 
 
-def _block(times_y0, n_stops=8, n_trips=4, x_stops=40.0):
-    """One vag-like block: stop col, an/ab col, n_trips time cols.
-    Returns (cells, time_cols_x) with cells = [(text, x0, y0)].
-    Stop names are <= 17 chars so columns never touch."""
-    cells = []
-    x_annot = x_stops + 20 * CHAR_W     # stops end at x_stops + 85
-    x_times = [x_annot + 4 * CHAR_W + k * 10 * CHAR_W
-               for k in range(n_trips)]
-    for s in range(n_stops):
-        y = times_y0 + s * 10.0
-        cells.append((f"Musterstr Halt {s}", x_stops, y))
-        if s == 0:
-            cells.append(("ab", x_annot, y))
-        if s == n_stops - 1:
-            cells.append(("an", x_annot, y))
-        for k, x in enumerate(x_times):
-            h, m = divmod((6 * 60 + 20 * k + 2 * s) % (24 * 60), 60)
-            cells.append((f"{h}.{m:02}", x, y))
-    return cells, x_times
-
-
 class TestVagLikeLayout:
     """Structural pins mirroring the reference's test_table.py outcomes
     on equivalent synthetic geometry."""
 
     def test_single_block_structure(self):
-        cells, xs = _block(100.0)
+        cells, xs = vag_like_block(100.0)
         cells.append(("Sonntag", xs[0], 86.0))       # days above times
         res = extract_turn(cells_to_payload(cells), NEW_CFG)
         assert len(res.tables) == 1
@@ -220,7 +199,7 @@ class TestVagLikeLayout:
         assert all(list(d) == ["6"] for d in days)
 
     def test_repeat_column_inserted(self):
-        cells, xs = _block(100.0)
+        cells, xs = vag_like_block(100.0)
         x_rep = xs[1] + 5 * CHAR_W      # between col 1 and col 2
         cells.append(("alle", x_rep, 120.0))
         cells.append(("15", x_rep, 130.0))
@@ -236,8 +215,8 @@ class TestVagLikeLayout:
         assert reps["repeat_intervals"].iloc[0] == [15]
 
     def test_stacked_blocks_split_and_reacquire_days(self):
-        b1, xs1 = _block(100.0, n_stops=8)
-        b2, xs2 = _block(220.0, n_stops=8)
+        b1, xs1 = vag_like_block(100.0, n_stops=8)
+        b2, xs2 = vag_like_block(220.0, n_stops=8)
         cells = b1 + b2
         cells.append(("Montag - Freitag", xs1[0], 86.0))
         # split days header for block 2 (W10 + O5 chain); each word
@@ -322,10 +301,11 @@ class TestVagLikeLayout:
         cells = []
         n_stops, n_trips = 6, 5
         xs = [40.0 + k * 18 * CHAR_W for k in range(n_stops)]
-        for k, x in enumerate(xs):
+        block, _ = vag_like_block(0.0, n_stops=n_stops, n_trips=0)
+        names = [text for text, x, _ in block if x == 40.0]
+        for name, x in zip(names, xs):
             # centered over the time column so the edge stop still
             # 50%-overlaps the table's x-range (bounds.py:196)
-            name = f"Musterstr Halt {k}"
             cells.append((name, x - (len(name) * CHAR_W - 20) / 2, 100.0))
         for r in range(n_trips):
             for k, x in enumerate(xs):
@@ -354,7 +334,7 @@ class TestStoplessTimeRowCollapse:
             find_stops, tables_from_fields,
         )
 
-        cells, xs = _block(100.0, n_stops=6, n_trips=3)
+        cells, xs = vag_like_block(100.0, n_stops=6, n_trips=3)
         rows = [{"text": t, "x0": x0, "y0": y0,
                  "x1": x0 + CHAR_W * max(1, len(t)), "y1": y0 + CHAR_H}
                 for t, x0, y0 in cells]
@@ -396,8 +376,8 @@ class TestMergeAndDuplicateDays:
         from pdf2gtfs_spark.kernel.newpath import (
             TypedTable, merge_tables,
         )
-        b1, xs1 = _block(100.0, n_stops=6, n_trips=3)
-        b2, _ = _block(100.0, n_stops=6, n_trips=3, x_stops=500.0)
+        b1, xs1 = vag_like_block(100.0, n_stops=6, n_trips=3)
+        b2, _ = vag_like_block(100.0, n_stops=6, n_trips=3, x_stops=500.0)
         rows = []
         for text, x0, y0 in b1 + b2:
             rows.append({"text": text, "x0": x0, "y0": y0,
@@ -419,8 +399,8 @@ class TestMergeAndDuplicateDays:
     def test_remove_duplicate_days_keeps_ref_side(self):
         # table 2 has two days rows; the ref table's days position
         # (first half of its column) selects the first one
-        b1, xs1 = _block(100.0, n_stops=6, n_trips=3)
-        b2, xs2 = _block(220.0, n_stops=6, n_trips=3)
+        b1, xs1 = vag_like_block(100.0, n_stops=6, n_trips=3)
+        b2, xs2 = vag_like_block(220.0, n_stops=6, n_trips=3)
         cells = b1 + b2
         cells.append(("Samstag", xs1[0], 86.0))
         cells.append(("Samstag", xs2[0], 206.0))   # kept (first)

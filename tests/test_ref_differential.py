@@ -29,7 +29,9 @@ from pdf2gtfs_spark.kernel.extract import (
 )
 from pdf2gtfs_spark.kernel.newpath import tables_from_fields
 from pdf2gtfs_spark.kernel.payload import decode_payload_arrays
-from pdf2gtfs_spark.sources.transcripts import fixture_turns
+from pdf2gtfs_spark.sources.transcripts import (
+    cells_to_payload, fixture_turns, vag_like_block,
+)
 
 from refcompat import load_reference, reference_available
 
@@ -222,37 +224,33 @@ class TestFixtureCorpus:
 
 class TestSyntheticLayouts:
     def test_single_block_with_days(self, tmp_path):
-        from test_newpath import _block, _payload
-        cells, xs = _block(100.0)
+        cells, xs = vag_like_block(100.0)
         cells.append(("Sonntag", xs[0], 86.0))
-        assert_equivalent(payload_fields(_payload(cells)), tmp_path,
+        assert_equivalent(payload_fields(cells_to_payload(cells)), tmp_path,
                           "single_block")
 
     def test_repeat_column(self, tmp_path):
-        from test_newpath import _block, _payload
         from pdf2gtfs_spark.kernel.payload import CHAR_W
-        cells, xs = _block(100.0)
+        cells, xs = vag_like_block(100.0)
         x_rep = xs[1] + 5 * CHAR_W
         cells.append(("alle", x_rep, 120.0))
         cells.append(("15", x_rep, 130.0))
         cells.append(("Min.", x_rep, 140.0))
-        assert_equivalent(payload_fields(_payload(cells)), tmp_path,
+        assert_equivalent(payload_fields(cells_to_payload(cells)), tmp_path,
                           "repeat_column")
 
     def test_stacked_blocks_split_days(self, tmp_path):
-        from test_newpath import _block, _payload
-        b1, xs1 = _block(100.0, n_stops=8)
-        b2, xs2 = _block(220.0, n_stops=8)
+        b1, xs1 = vag_like_block(100.0, n_stops=8)
+        b2, xs2 = vag_like_block(220.0, n_stops=8)
         cells = b1 + b2
         cells.append(("Montag - Freitag", xs1[0], 86.0))
         cells.append(("Sonn-", xs2[0], 206.0))
         cells.append(("und", xs2[1], 206.0))
         cells.append(("Feiertag", xs2[2], 206.0))
-        assert_equivalent(payload_fields(_payload(cells)), tmp_path,
+        assert_equivalent(payload_fields(cells_to_payload(cells)), tmp_path,
                           "stacked")
 
     def test_transposed(self, tmp_path):
-        from test_newpath import _payload
         from pdf2gtfs_spark.kernel.payload import CHAR_W
         cells = []
         n_stops, n_trips = 6, 5
@@ -264,7 +262,7 @@ class TestSyntheticLayouts:
             for k, x in enumerate(xs):
                 h, m = divmod((7 * 60 + 15 * r + 3 * k) % (24 * 60), 60)
                 cells.append((f"{h}.{m:02}", x, 112.0 + r * 10.0))
-        assert_equivalent(payload_fields(_payload(cells)), tmp_path,
+        assert_equivalent(payload_fields(cells_to_payload(cells)), tmp_path,
                           "transposed")
 
 
@@ -273,31 +271,28 @@ class TestDaysBranches:
     (table.py:810-856 remove_duplicate_days)."""
 
     def test_footer_days(self, tmp_path):
-        from test_newpath import _block, _payload
-        cells, xs = _block(100.0, n_stops=6)
+        cells, xs = vag_like_block(100.0, n_stops=6)
         cells.append(("Samstag", xs[0], 100.0 + 6 * 10.0 + 4.0))
-        assert_equivalent(payload_fields(_payload(cells)), tmp_path,
+        assert_equivalent(payload_fields(cells_to_payload(cells)), tmp_path,
                           "footer_days")
 
     def test_second_block_without_days(self, tmp_path):
         # ref table has days, second table none -> days are duplicated
         # from the ref table and re-expanded
-        from test_newpath import _block, _payload
-        b1, xs1 = _block(100.0, n_stops=6)
-        b2, _ = _block(200.0, n_stops=6)
+        b1, xs1 = vag_like_block(100.0, n_stops=6)
+        b2, _ = vag_like_block(200.0, n_stops=6)
         cells = b1 + b2
         cells.append(("Sonntag", xs1[0], 86.0))
-        assert_equivalent(payload_fields(_payload(cells)), tmp_path,
+        assert_equivalent(payload_fields(cells_to_payload(cells)), tmp_path,
                           "no_days_second")
 
     def test_header_and_footer_days(self, tmp_path):
         # two Days rows in one table -> only one survives, chosen by
         # the ref table's days position (first half vs last half)
-        from test_newpath import _block, _payload
-        cells, xs = _block(100.0, n_stops=6)
+        cells, xs = vag_like_block(100.0, n_stops=6)
         cells.append(("Samstag", xs[0], 86.0))
         cells.append(("Sonntag", xs[0], 100.0 + 6 * 10.0 + 4.0))
-        assert_equivalent(payload_fields(_payload(cells)), tmp_path,
+        assert_equivalent(payload_fields(cells_to_payload(cells)), tmp_path,
                           "hdr_ftr_days")
 
 
@@ -306,13 +301,12 @@ class TestMergeSplitTables:
     side-by-side (table.py:899-938, 1261-1308)."""
 
     def test_side_by_side_merge(self, tmp_path):
-        from test_newpath import _block, _payload
         ref = load_reference()
         Config = ref["Config"]
         cfg = dataclasses.replace(NEW_CFG, merge_split_tables=True)
-        b1, _ = _block(100.0, n_stops=6, n_trips=3)
-        b2, _ = _block(100.0, n_stops=6, n_trips=3, x_stops=500.0)
-        fields = payload_fields(_payload(b1 + b2))
+        b1, _ = vag_like_block(100.0, n_stops=6, n_trips=3)
+        b2, _ = vag_like_block(100.0, n_stops=6, n_trips=3, x_stops=500.0)
+        fields = payload_fields(cells_to_payload(b1 + b2))
         old = Config.merge_split_tables
         Config.merge_split_tables = True
         try:
@@ -351,7 +345,6 @@ class TestMergeSplitTables:
         (no east extension) that the next map walk skips; and
         entry.values dict slots keep stale insert-time hashes."""
         import random
-        from test_newpath import _payload
         ref = load_reference()
         Config = ref["Config"]
         cfg = dataclasses.replace(NEW_CFG, merge_split_tables=True)
@@ -360,7 +353,7 @@ class TestMergeSplitTables:
             payload = TestAdversarialLayoutsV4._payload_cid(
                 TestAdversarialLayoutsV4._layout(rng), rng)
         else:
-            payload = _payload(TestAdversarialLayouts._layout(rng))
+            payload = cells_to_payload(TestAdversarialLayouts._layout(rng))
         fields = payload_fields(payload)
         old = Config.merge_split_tables
         Config.merge_split_tables = True
@@ -379,11 +372,10 @@ class TestRaggedTailQuirk:
     ragged row and its CSV."""
 
     def test_split_days_ending_in_last_column(self, tmp_path):
-        from test_newpath import _block, _payload
-        cells, xs = _block(100.0, n_stops=6, n_trips=3)
+        cells, xs = vag_like_block(100.0, n_stops=6, n_trips=3)
         for wi, w in enumerate(["Montag", "-", "Freitag"]):
             cells.append((w, xs[wi], 86.0))
-        fields = payload_fields(_payload(cells))
+        fields = payload_fields(cells_to_payload(cells))
         repo_tables = tables_from_fields(fields, NEW_CFG)
         assert any(t.grid.tails for t in repo_tables), \
             "layout must exercise the ragged-tail quirk"
@@ -469,9 +461,8 @@ class TestAdversarialLayouts:
     def test_adversarial_layout(self, seed, tmp_path):
         import random
 
-        from test_newpath import _payload
         rng = random.Random(seed)
-        fields = payload_fields(_payload(self._layout(rng)))
+        fields = payload_fields(cells_to_payload(self._layout(rng)))
         assert_equivalent(fields, tmp_path, f"adv{seed}",
                           expect_tables=False)
 
@@ -857,9 +848,8 @@ class TestAdversarialLayoutsV5:
                                       80107, 80250, 80404, 80777])
     def test_repeat_routeinfo_layout(self, seed, tmp_path):
         import random
-        from test_newpath import _payload
         rng = random.Random(seed)
-        assert_equivalent(payload_fields(_payload(self._layout(rng))),
+        assert_equivalent(payload_fields(cells_to_payload(self._layout(rng))),
                           tmp_path, f"v5_{seed}", expect_tables=False)
 
     @pytest.mark.parametrize("seed,exc", [
@@ -884,9 +874,8 @@ class TestAdversarialLayoutsV5:
         insertion; the repo extracts these layouts.  882/1000 v5
         seeds are fully equivalent and 0 diverge."""
         import random
-        from test_newpath import _payload
         rng = random.Random(seed)
-        fields = payload_fields(_payload(self._layout(rng)))
+        fields = payload_fields(cells_to_payload(self._layout(rng)))
         repo_tables = tables_from_fields(fields, NEW_CFG)
         assert repo_tables, "repo must extract this layout"
         with pytest.raises(exc):
@@ -1009,10 +998,9 @@ class TestLegacySurface:
         collapse before it was mirrored (full 350-seed sweep offline)."""
         import random
 
-        from test_newpath import _payload
         rng = random.Random(seed)
         cells = TestAdversarialLayouts._layout(rng)
-        payload = _payload(cells)
+        payload = cells_to_payload(cells)
         try:
             self._assert_legacy_equivalent(payload, tmp_path,
                                            f"legacy_adv{seed}")
@@ -1024,10 +1012,9 @@ class TestLegacySurface:
     def test_random_layout(self, seed, tmp_path):
         import random
 
-        from test_newpath import _payload
         rng = random.Random(seed)
         cells = TestSeededRandomLayouts._layout(self, rng)
-        self._assert_legacy_equivalent(_payload(cells), tmp_path,
+        self._assert_legacy_equivalent(cells_to_payload(cells), tmp_path,
                                        f"legacy_rnd{seed}")
 
     def test_reference_crashes_without_stop_column(self, tmp_path):
@@ -1037,9 +1024,8 @@ class TestLegacySurface:
         extracts them.  26/350 sweep layouts hit this."""
         import random
 
-        from test_newpath import _payload
         rng = random.Random(9023)
-        payload = _payload(TestAdversarialLayouts._layout(rng))
+        payload = cells_to_payload(TestAdversarialLayouts._layout(rng))
         with pytest.raises(IndexError):
             self._ref_legacy(payload, tmp_path)
         assert self._repo_legacy(payload)      # repo handles it
@@ -1096,9 +1082,8 @@ class TestRound4SweepFindings:
         crashed converting it."""
         import random
 
-        from test_newpath import _payload
         rng = random.Random(20130)
-        payload = _payload(TestAdversarialLayouts._layout(rng))
+        payload = cells_to_payload(TestAdversarialLayouts._layout(rng))
         TestLegacySurface()._assert_legacy_equivalent(
             payload, tmp_path, "legacy_adv20130")
 
@@ -1112,9 +1097,8 @@ class TestRound4SweepFindings:
         kernel/extract.py::_merge_mutated_fields."""
         import random
 
-        from test_newpath import _payload
         rng = random.Random(20546)
-        payload = _payload(TestAdversarialLayouts._layout(rng))
+        payload = cells_to_payload(TestAdversarialLayouts._layout(rng))
         TestLegacySurface()._assert_legacy_equivalent(
             payload, tmp_path, "legacy_adv20546")
 
@@ -1137,14 +1121,13 @@ class TestRound4SweepFindings:
         test_reference_crashes_without_stop_column)."""
         import random
 
-        from test_newpath import _payload
         rng = random.Random(seed)
         if seed >= 30000:
             fields = payload_fields(
                 TestAdversarialLayoutsV3._payload_sized(
                     TestAdversarialLayoutsV3._layout(rng)))
         else:
-            fields = payload_fields(_payload(
+            fields = payload_fields(cells_to_payload(
                 TestAdversarialLayouts._layout(rng)))
         with pytest.raises(exc):
             run_reference(fields)
@@ -1215,10 +1198,9 @@ class TestRound4SweepFindings:
         table.py:648/655).  The repo's to_timetable drops tail cells
         beyond the entry grid and extracts the table."""
         import random
-        from test_newpath import _payload
         rng = random.Random(seed)
         fields = payload_fields(
-            _payload(TestAdversarialLayouts._layout(rng)))
+            cells_to_payload(TestAdversarialLayouts._layout(rng)))
         ref_tables = run_reference(fields)
         repo_tables = tables_from_fields(fields, NEW_CFG)
         assert len(repo_tables) == len(ref_tables)
@@ -1271,8 +1253,7 @@ class TestSeededRandomLayouts:
     def test_random_layout(self, seed, tmp_path):
         import random
 
-        from test_newpath import _payload
         rng = random.Random(1000 + seed)
         cells = self._layout(rng)
-        assert_equivalent(payload_fields(_payload(cells)), tmp_path,
+        assert_equivalent(payload_fields(cells_to_payload(cells)), tmp_path,
                           f"seed{seed}")

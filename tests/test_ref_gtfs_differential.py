@@ -26,7 +26,9 @@ import pytest
 
 from pdf2gtfs_spark.kernel.extract import cleanup_char_arrays
 from pdf2gtfs_spark.kernel.payload import decode_payload_arrays
-from pdf2gtfs_spark.sources.transcripts import fixture_turns
+from pdf2gtfs_spark.sources.transcripts import (
+    cells_to_payload, fixture_turns,
+)
 
 from refcompat import load_reference_gtfs, reference_available
 
@@ -227,16 +229,14 @@ class TestServiceDayOffsets:
         ((10, 0), (9, 0), (11, 0)),                      # mid-day back
     ])
     def test_midnight_chain(self, spark, starts):
-        from test_newpath import _payload
-        payload = _payload(self._chain(list(starts)))
+        payload = cells_to_payload(self._chain(list(starts)))
         rf = assert_feed_equivalent(payload, spark,
                                     f"chain{starts}")
         assert rf["trips"], "chain must produce trips"
 
     def test_hour_quirk_pinned(self, spark):
         """The second crossing column lands at 25:40, not 24:40."""
-        from test_newpath import _payload
-        payload = _payload(self._chain([(23, 50), (0, 10), (0, 40)]))
+        payload = cells_to_payload(self._chain([(23, 50), (0, 10), (0, 40)]))
         rf = ref_feed(payload)
         times = sorted(t for _, _, sts in rf["trips"] for _, t, _ in sts)
         assert any(t.startswith("25:") for t in times), times[-3:]
@@ -256,7 +256,6 @@ class TestSyntheticFeeds:
         entry."""
         import random
 
-        from test_newpath import _payload
         from test_ref_differential import (
             TestAdversarialLayouts, TestSeededRandomLayouts,
         )
@@ -268,7 +267,7 @@ class TestSyntheticFeeds:
         else:
             cells = TestSeededRandomLayouts._layout(None, rng)
         try:
-            assert_feed_equivalent(_payload([c[:3] for c in cells]),
+            assert_feed_equivalent(cells_to_payload([c[:3] for c in cells]),
                                    spark, f"feed{seed}")
         except IndexError:
             pytest.skip("reference legacy crashes (no stop column)")

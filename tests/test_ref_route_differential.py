@@ -17,7 +17,9 @@ import pandas as pd
 import pytest
 
 from pdf2gtfs_spark.functions.normalize import normalize_name
-from pdf2gtfs_spark.sources.transcripts import fixture_turns
+from pdf2gtfs_spark.sources.transcripts import (
+    cells_to_payload, fixture_turns,
+)
 
 from refcompat import load_reference_gtfs, reference_available
 
@@ -229,11 +231,10 @@ class TestRouteLocation:
     def test_random_layouts(self, spark, seed):
         import random
 
-        from test_newpath import _payload
         from test_ref_differential import TestSeededRandomLayouts
         rng = random.Random(seed)
         cells = TestSeededRandomLayouts._layout(None, rng)
-        payload = _payload(cells)
+        payload = cells_to_payload(cells)
         _run_fixture(payload, spark, f"rnd{seed}", seed=seed)
 
 
